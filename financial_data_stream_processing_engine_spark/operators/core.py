@@ -32,6 +32,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
+def _key_participates(df: DataFrame, key: str) -> Column:
+    """The key-participation rule of every keyed-state operator (batch
+    ``moving_average``, :func:`_keyed_fold`, the streaming shell in
+    ``streaming/stateful.py``): a row takes state only when its key is
+    non-NULL and, for string keys, non-empty — the reference's
+    ``if symbol and ...`` is a truthiness test (financial_engine.py:303),
+    so ``''`` is out too.  Other rows come out with NULL outputs."""
+    ok = F.col(key).isNotNull()
+    if df.schema[key].dataType.simpleString() == "string":
+        ok = ok & (F.col(key) != "")
+    return ok
+
+
 def clean(
     df: DataFrame,
     price_col: str = "price",
@@ -76,12 +89,10 @@ def moving_average(
 
     1. Emits only at exactly-full windows — the first n-1 rows per key
        get NULL (reference: field absent, :308-310).
-    2. Rows with NULL (or, for string keys, EMPTY — the reference's
-       ``if symbol and price is not None`` is a truthiness test, so
-       ``''`` does not participate either) key or NULL value pass
-       through untouched and do NOT consume state (:303): they neither
-       get a moving average nor occupy a slot in the n-row window of
-       later rows.
+    2. Rows whose key fails :func:`_key_participates` (NULL, or ``''``
+       for string keys) or whose value is NULL pass through untouched
+       and do NOT consume state (:303): they neither get a moving
+       average nor occupy a slot in the n-row window of later rows.
     3. The window is row-count over arrival order, per key — not time
        based.  Batch "arrival order" is ``order_by`` (deterministic
        total order; ``(key, *order_by)`` must be row-unique — pass the
@@ -110,12 +121,7 @@ def moving_average(
         .orderBy(*[F.col(c) for c in order_by])
     )
     val = F.col(value)
-    key_ok = F.col(key).isNotNull()
-    if df.schema[key].dataType.simpleString() == "string":
-        # the reference's participation test is truthiness, not
-        # presence — '' is falsy (gotcha 2)
-        key_ok = key_ok & (F.col(key) != "")
-    participates = key_ok & val.isNotNull()
+    participates = _key_participates(df, key) & val.isNotNull()
 
     if assume_participating:
         masked = F.when(participates, val)
@@ -230,32 +236,12 @@ def ewma(
     NULL values carry the previous state and emit NULL (they do not
     decay the average) — which rules out pandas' ``ewm`` (it emits the
     carried mean at NaN positions instead of NULL), so the fold stays
-    an explicit per-group loop.
-
-    Seam shape (r18, guide §4.5 — the ``finance.macd`` fix): a
-    ``groupBy(key).applyInPandas`` invokes Python once PER GROUP, and
-    with numerous small keys the ~4 ms per-invocation overhead
-    dominates the fold itself.  The loop now rides ``mapInPandas``
-    over a key-repartitioned, key-sorted frame — one Python invocation
-    per Arrow batch, the batch-boundary key carried into the next
-    batch so every group still folds contiguously.
-
-    NULL-key rows bypass the grouped fold entirely and emit NULL (the
-    moving_average gotcha-2 convention, and the streaming twin's
-    passthrough): folding them as one pseudo-key would chain an EWMA
-    across unrelated keyless rows.
-
-    Scale: one shuffle on ``key``; per-batch memory is the Arrow batch
-    plus at most one carried group — for very large single keys,
-    pre-bucket by a coarse time range and stitch (same pattern as
-    operators/asof.py).
+    an explicit loop, run by :func:`_keyed_fold` once per Arrow batch
+    of whole key groups.  Rows whose key fails :func:`_key_participates`
+    (NULL or ``''``) take no state and emit NULL.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import DoubleType, StructField
 
-    # a fresh StructType: StructType.add would mutate df's own schema
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, DoubleType())]
-    )
     a, b = float(alpha), 1.0 - float(alpha)
     cols = list(df.columns)
     sort_cols = list(order_by)
@@ -281,34 +267,87 @@ def ewma(
         pdf[out_col] = pd.Series(out, index=pdf.index, dtype="float64")
         return pdf[cols + [out_col]]
 
-    def fold_batches(batches):
-        import pandas as pd
+    return _keyed_fold(df, key, order_by, fold, [StructField(out_col, DoubleType())])
 
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-            if not len(pdf):
+
+def _whole_groups(batches, key: str):
+    """Re-cut key-sorted pandas batches into frames of WHOLE key groups
+    — the carry boundary of :func:`_keyed_fold`, in one place.
+
+    Each batch yields its head of complete groups at once; its trailing
+    group is held back, because its remaining rows may arrive in the
+    next batch.  Held chunks are collected in a list and concatenated
+    ONCE when the group ends, so a giant key costs one copy, not one
+    per batch.  NaN keys (Spark NULLs) compare equal here, so a NULL
+    group spread across batches still comes out as one group.  Empty
+    batches are skipped."""
+    import pandas as pd
+
+    def lead(keys, k) -> int:
+        # length of the leading run of rows whose key is k
+        same = (keys.isna() if pd.isna(k) else keys == k).to_numpy()
+        return len(same) if same.all() else int(same.argmin())
+
+    def whole(chunks):
+        return chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+
+    held: list = []
+    held_key = None
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        if held:
+            n = lead(pdf[key], held_key)
+            if n == len(pdf):
+                held.append(pdf)
                 continue
-            # hold back the trailing group: its remaining rows may
-            # arrive in the next batch (keys are non-null here, and
-            # rows are key-sorted within the partition)
-            tail_mask = pdf[key] == pdf[key].iloc[-1]
-            head = pdf[~tail_mask]
-            carry = pdf[tail_mask]
-            if len(head):
-                yield fold(head)
-        if carry is not None and len(carry):
-            yield fold(carry)
+            if n:
+                held.append(pdf.iloc[:n])
+            yield whole(held)
+            pdf = pdf.iloc[n:]
+        held_key = pdf[key].iloc[-1]
+        cut = len(pdf) - lead(pdf[key].iloc[::-1], held_key)
+        if cut:
+            yield pdf.iloc[:cut]
+        held = [pdf.iloc[cut:]]
+    if held:
+        yield whole(held)
 
-    keyed = df.filter(F.col(key).isNotNull())
-    passthrough = df.filter(F.col(key).isNull()).withColumn(
-        out_col, F.lit(None).cast("double")
-    )
+
+def _keyed_fold(df: DataFrame, key: str, order_by, fold, out_fields) -> DataFrame:
+    """The batch keyed fold shared by ``ewma`` and ``finance.macd``.
+
+    Rows are repartitioned on ``key`` and sorted by ``(key,
+    *order_by)`` within each partition, then ``mapInPandas`` hands
+    :func:`_whole_groups` one Arrow batch at a time — one Python
+    invocation per batch instead of one per group, which is what made
+    per-group ``applyInPandas`` slow with many small keys.  ``fold``
+    gets a frame of whole participating groups and returns it with the
+    ``out_fields`` columns added; rows whose key fails
+    :func:`_key_participates` skip ``fold`` and come out with those
+    columns NULL, in the same single pass.
+
+    Scale: one shuffle on ``key``; per-batch memory is the Arrow batch
+    plus at most one held group.
+    """
+    from pyspark.sql.types import StructType
+
+    # a fresh StructType: StructType.add would mutate df's own schema
+    out_schema = StructType(list(df.schema.fields) + list(out_fields))
+    nulls = dict.fromkeys((f.name for f in out_fields), float("nan"))
+
+    def run(batches):
+        for grp in _whole_groups(batches, key):
+            part = grp["__part"].to_numpy()
+            grp = grp.drop(columns="__part")
+            if part.any():
+                yield fold(grp if part.all() else grp[part])
+            if not part.all():
+                yield grp[~part].assign(**nulls)
+
     return (
-        keyed.repartition(key)
-        .sortWithinPartitions(key, *sort_cols)
-        .mapInPandas(fold_batches, schema=out_schema)
-        .unionByName(passthrough)
+        df.withColumn("__part", _key_participates(df, key))
+        .repartition(key)
+        .sortWithinPartitions(key, *order_by)
+        .mapInPandas(run, schema=out_schema)
     )

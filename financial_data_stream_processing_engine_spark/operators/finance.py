@@ -43,6 +43,7 @@ from financial_data_stream_processing_engine_spark.functions.numeric import (
     dsum,
     qint,
 )
+from financial_data_stream_processing_engine_spark.operators.core import _keyed_fold
 
 #: descale factors for quantized-integer sums (see numeric.QSCALE):
 #: first moments carry one 1e-9 grid factor, second moments two.
@@ -505,16 +506,11 @@ def macd(
     group streamed once) instead of three chained EWMA calls (three
     shuffles).
 
-    Seam shape (r18, guide §4.5): ``applyInPandas`` invokes the Python
-    function ONCE PER GROUP, and the per-invocation overhead — measured
-    ~4 ms × 1 500 symbol groups ≈ 6.5 s of a 6.9 s solo run at sf0.1 —
-    dominates everything else in the entry.  So the fold now rides
-    ``mapInPandas`` over a key-repartitioned, key-sorted frame: one
-    Python invocation per ARROW BATCH (thousands of rows), with the
-    batch-boundary symbol carried into the next batch so every group
-    still folds contiguously, and the EMA recurrences run as ONE
-    grouped ``ewm`` Cython call per batch.  Same shuffle, same
-    per-group memory bound, ~150× fewer JVM↔Python crossings.
+    Seam shape (r18, guide §4.5): the fold rides the shared batch
+    keyed fold (:func:`~financial_data_stream_processing_engine_spark.operators.core._keyed_fold`),
+    one Python invocation per Arrow batch of whole symbol groups
+    instead of one per group (~4 ms × 1 500 groups at sf0.1), and the
+    EMA recurrences run as ONE grouped ``ewm`` Cython call per batch.
 
     Determinism: per row the op order is fixed — advance fast EMA,
     advance slow EMA, subtract (macd), advance signal EMA on the macd
@@ -525,23 +521,18 @@ def macd(
     bitwise-equal to the per-group fold, which r17 had verified
     bitwise-equal to the explicit Python loop).  NULL prices must be
     filtered upstream (the catalog entry and oracle both drop them).
+    Rows whose key is NULL or ``''`` take no state and come out with
+    NULL outputs (``core._key_participates``).
 
     Scale: one shuffle; per-batch memory is the Arrow batch plus at
-    most one carried group, same bound as ewma.  At 100 TB, keys
+    most one held group, same bound as ewma.  At 100 TB, keys
     (symbols) are numerous and small — the fold parallelizes across
     partitions.  The streaming twin keeps the explicit loop because it
     must seed mid-stream state, which ewm cannot.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import DoubleType, StructField
 
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("macd", DoubleType()),
-            StructField("macd_signal", DoubleType()),
-            StructField("macd_histogram", DoubleType()),
-        ]
-    )
+    out_cols = ["macd", "macd_signal", "macd_histogram"]
     cols = list(df.columns)
     sort_cols = list(order_by)
 
@@ -552,50 +543,20 @@ def macd(
         pdf = pdf.sort_values([key, *sort_cols], kind="mergesort").reset_index(
             drop=True
         )
-        pdf = pdf.copy()
         pdf["__p"] = pdf[price].astype("float64")
-        # dropna=False: Spark's groupBy keeps a NULL key group, so the
-        # pandas grouping must too (a silent dropna would lose rows)
+
         def gewm(col, span):
-            r = (
-                pdf.groupby(key, sort=False, dropna=False)[col]
-                .ewm(span=span, adjust=False)
-                .mean()
-            )
+            r = pdf.groupby(key, sort=False)[col].ewm(span=span, adjust=False).mean()
             return r.reset_index(level=0, drop=True).sort_index()
 
         m = gewm("__p", fast) - gewm("__p", slow)
         pdf["macd"] = m
         pdf["macd_signal"] = gewm("macd", signal)
         pdf["macd_histogram"] = pdf["macd"] - pdf["macd_signal"]
-        return pdf[cols + ["macd", "macd_signal", "macd_histogram"]]
+        return pdf[cols + out_cols]
 
-    def fold_batches(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-            if not len(pdf):
-                continue
-            # hold back the batch's trailing group: its remaining rows
-            # may arrive in the next batch (rows are key-sorted within
-            # the partition, so a group is always a contiguous run)
-            last = pdf[key].iloc[-1]
-            tail_mask = pdf[key].isna() if pd.isna(last) else (pdf[key] == last)
-            head = pdf[~tail_mask]
-            carry = pdf[tail_mask]
-            if len(head):
-                yield fold(head)
-        if carry is not None and len(carry):
-            yield fold(carry)
-
-    return (
-        df.repartition(key)
-        .sortWithinPartitions(key, *sort_cols)
-        .mapInPandas(fold_batches, schema=out_schema)
+    return _keyed_fold(
+        df, key, order_by, fold, [StructField(c, DoubleType()) for c in out_cols]
     )
 
 

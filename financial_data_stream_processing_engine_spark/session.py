@@ -10,6 +10,7 @@ are left to AQE there.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -26,7 +27,8 @@ def _default_driver_mem(master: str) -> str:
         return "1g"
     slots = os.cpu_count() or 1
     if "[" in master:
-        n = master[master.index("[") + 1 : master.rindex("]")]
+        # local[N] or local[N,F] (F = task retries): slots are N
+        n = master[master.index("[") + 1 : master.rindex("]")].split(",")[0]
         if n != "*":
             try:
                 slots = max(1, int(n))
@@ -48,6 +50,23 @@ def _default_driver_mem(master: str) -> str:
     except (ValueError, OSError):  # pragma: no cover - exotic platforms
         pass
     return f"{mem_mib}m"
+
+
+def _ship_package_path(spark: SparkSession) -> None:
+    """Put the package's parent directory on the Python workers'
+    ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, merged with any
+    value already set).  The stateful update functions are pickled by
+    reference to this package, so a worker that cannot import it fails
+    with ``ModuleNotFoundError`` when the driver imported the package
+    through ``sys.path`` from another working directory.  The context
+    reads ``spark.executorEnv.*`` into ``environment`` once, at start,
+    and ships that dict with every Python function, so the merge goes
+    there."""
+    root = str(Path(__file__).resolve().parent.parent)
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in parts:
+        env["PYTHONPATH"] = os.pathsep.join([*parts, root])
 
 
 def get_spark(
@@ -95,6 +114,7 @@ def get_spark(
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _ship_package_path(spark)
     # Engine-namespace conf, visible to operators that need runtime knobs
     # (the reference exposed these via its ConfigurationManager singleton).
     spark.conf.set("engine.moving_average_window", str(config.moving_average_window))

@@ -1,28 +1,39 @@
-"""Stateful streaming: the row-count moving average (SURVEY.md §7 hard
-part #1).
+"""Stateful streaming: per-symbol keyed state over a tick stream
+(SURVEY.md §7 hard part #1).
 
 Spark's native streaming windows are time-based; the reference's
 flagship operator is a row-count window per key (deque(maxlen=N),
 financial_engine.py:305).  Streaming parity therefore needs custom
-keyed state: ``applyInPandasWithState`` with a per-key ring buffer.
+keyed state: ``applyInPandasWithState`` with small per-key state.
 
-Differences from the reference, by design:
-* state carries a TTL (ProcessingTimeTimeout) — the reference leaks
-  state forever for unbounded key sets (:298), which cannot survive
-  100 TB key cardinalities;
-* arrival order is defined as (ts, id) within each micro-batch — the
-  reference's asyncio task ordering is nondeterministic anyway
-  (SURVEY.md §3.2), so we define a deterministic order instead.
+Five TTL-keyed operators (moving average, EWMA, MACD, z-score alerts,
+pattern distance) share one shell, :func:`_keyed_state`; each supplies
+only its schemas, initial state and a per-group ``step``.  Three
+decisions live in one place each:
+
+* arrival order — :func:`_sorted_batch`, (ts, id) within each
+  micro-batch; the reference's asyncio task ordering is
+  nondeterministic anyway (SURVEY.md §3.2);
+* key participation — ``operators.core._key_participates``: NULL and
+  ``''`` symbols take no state and come out with NULL outputs (or are
+  dropped by the operators that emit only scored rows);
+* state lifetime — a TTL (ProcessingTimeTimeout); the reference leaks
+  state forever for unbounded key sets (:298).
+
+``streaming_sessionize_timeout`` keeps its own body: its event-time
+timeout emits rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from financial_data_stream_processing_engine_spark.operators.core import _key_participates
 
 OUTPUT_SCHEMA = (
     "id string, symbol string, price double, volume bigint, ts timestamp, "
@@ -39,9 +50,7 @@ def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     by (ts, numeric id, id) — ties on ts break by id numerically when
     id encodes a number (matching the batch operators' event_id
     order), falling back to the string itself.  Returns None for an
-    empty group so callers can skip.  A single copy: the ordering rule
-    is parity-critical, and six hand-copied spellings had already
-    started to drift."""
+    empty group so callers can skip."""
     chunks = [c for c in pdfs if len(c)]
     if not chunks:
         return None
@@ -52,6 +61,77 @@ def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
         .sort_values(["ts", "__idnum", "id"], kind="mergesort")
         .drop(columns="__idnum")
     )
+
+
+def _keyed_state(
+    ticks: DataFrame,
+    step: Callable[[tuple, pd.DataFrame], tuple],
+    output_schema: str,
+    state_schema: str,
+    init: tuple,
+    ttl_ms: int | None,
+    null_cols: tuple[str, ...] | None,
+) -> DataFrame:
+    """The shell of every TTL-keyed streaming operator: one
+    ``applyInPandasWithState`` over ``symbol``, in ONE scan of the
+    source.
+
+    Per group and micro-batch it expires timed-out state, reads the
+    state (``init`` when absent), sorts the rows by the arrival-order
+    rule, calls ``step(state, pdf) -> (state, out | None)``, emits
+    ``out`` and writes the state back with a fresh TTL.  A group whose
+    key fails ``_key_participates`` (NULL or ``''``) never touches
+    state: its rows come out with the ``null_cols`` outputs NULL, or
+    are dropped when ``null_cols`` is None.
+
+    NoTimeout when TTL is disabled: with ProcessingTimeTimeout the
+    engine schedules continuous empty micro-batches purely to check
+    timeouts, which also keeps processAllAvailable() from settling in
+    synchronous tests.
+    """
+    nulls = dict.fromkeys(null_cols or (), float("nan"))
+
+    def update(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        pdf = _sorted_batch(pdfs)
+        if pdf is None:
+            return
+        if not pdf["__part"].iloc[0]:  # one key, so one verdict, per group
+            if null_cols is not None:
+                yield pdf.drop(columns="__part").assign(**nulls)
+            return
+        s, out = step(state.get if state.exists else init, pdf.drop(columns="__part"))
+        if out is not None and len(out):
+            yield out
+        state.update(s)
+        if ttl_ms is not None:
+            state.setTimeoutDuration(ttl_ms)
+
+    return (
+        ticks.withColumn("__part", _key_participates(ticks, "symbol"))
+        .groupBy("symbol")
+        .applyInPandasWithState(
+            update,
+            outputStructType=output_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.ProcessingTimeTimeout
+                if ttl_ms is not None
+                else GroupStateTimeout.NoTimeout
+            ),
+        )
+    )
+
+
+def _floats(values: list, index: pd.Index) -> pd.Series:
+    return pd.Series(values, index=index, dtype="float64")
 
 
 def streaming_moving_average(
@@ -65,6 +145,8 @@ def streaming_moving_average(
     financial_engine.py:293-312): NULL until exactly ``n`` prices have
     been buffered for the key, then the sliding mean of the last ``n``.
     Sum order is oldest→newest (matches the reference's ``sum(deque)``).
+    NULL and ``''`` symbols get a NULL moving average and take no
+    window slot, in the same scan as the keyed rows.
 
     State: one double[<=n] ring buffer per key — O(n) bytes; expired
     after ``ttl_ms`` without traffic.  Scale: state store shards by the
@@ -72,58 +154,23 @@ def streaming_moving_average(
     is tiny and the per-batch work is O(batch rows).
     """
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (prices,) = state.get if state.exists else ([],)
-        prices = list(prices)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            mas = []
-            for price in pdf["price"]:
-                ma = None
-                if price is not None and not pd.isna(price):
-                    prices.append(float(price))
-                    if len(prices) > n:
-                        del prices[: len(prices) - n]
-                    if len(prices) == n:
-                        ma = sum(prices) / n  # oldest→newest, like sum(deque)
-                mas.append(ma)
-            out = pdf.copy()
-            out["moving_average"] = pd.Series(mas, index=pdf.index, dtype="float64")
-            yield out
-        state.update((prices,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(state, pdf):
+        prices = list(state[0])
+        mas = []
+        for price in pdf["price"]:
+            ma = None
+            if price is not None and not pd.isna(price):
+                prices.append(float(price))
+                if len(prices) > n:
+                    del prices[: len(prices) - n]
+                if len(prices) == n:
+                    ma = sum(prices) / n  # oldest→newest, like sum(deque)
+            mas.append(ma)
+        return (prices,), pdf.assign(moving_average=_floats(mas, pdf.index))
 
-    # NULL-symbol rows never enter keyed state in the reference (:303);
-    # route them around the stateful op untouched (union back with NULL ma).
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    passthrough = ticks.filter(ticks.symbol.isNull()).withColumn(
-        "moving_average", F.lit(None).cast("double")
+    return _keyed_state(
+        ticks, step, OUTPUT_SCHEMA, STATE_SCHEMA, ([],), ttl_ms, ("moving_average",)
     )
-    # NoTimeout when TTL is disabled: with ProcessingTimeTimeout the
-    # engine schedules continuous empty micro-batches purely to check
-    # timeouts, which also keeps processAllAvailable() from settling in
-    # synchronous tests.
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    out = keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return out.unionByName(passthrough)
 
 
 EWMA_OUTPUT_SCHEMA = (
@@ -143,54 +190,25 @@ def streaming_ewma(
     double per key (the smallest possible keyed state; compare the
     ring buffer the row-count MA needs).
 
-    Batch order is defined like streaming_moving_average: whole group
-    buffered, sorted by (ts, numeric id).  NULL prices emit NULL and
-    carry state; NULL symbols bypass keyed state entirely.
+    NULL prices emit NULL and carry state; NULL and ``''`` symbols take
+    no state and emit NULL.
     """
     a, b = float(alpha), 1.0 - float(alpha)
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (s,) = state.get if state.exists else (None,)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            out = []
-            for price in pdf["price"]:
-                if price is None or pd.isna(price):
-                    out.append(None)
-                    continue
-                s = float(price) if s is None else a * float(price) + b * s
-                out.append(s)
-            res = pdf.copy()
-            res["ewma"] = pd.Series(out, index=pdf.index, dtype="float64")
-            yield res
-        state.update((s,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(state, pdf):
+        (s,) = state
+        out = []
+        for price in pdf["price"]:
+            if price is None or pd.isna(price):
+                out.append(None)
+                continue
+            s = float(price) if s is None else a * float(price) + b * s
+            out.append(s)
+        return (s,), pdf.assign(ewma=_floats(out, pdf.index))
 
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    passthrough = ticks.filter(ticks.symbol.isNull()).withColumn(
-        "ewma", F.lit(None).cast("double")
+    return _keyed_state(
+        ticks, step, EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA, (None,), ttl_ms, ("ewma",)
     )
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    out = keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return out.unionByName(passthrough)
 
 
 MACD_OUTPUT_SCHEMA = (
@@ -214,69 +232,40 @@ def streaming_macd(
     Per row the op order matches the batch fold exactly — advance fast,
     advance slow, subtract, advance signal, subtract — so
     streaming/batch/oracle agreement is bitwise.  NULL prices emit NULL
-    and carry state; NULL symbols bypass keyed state.  Like the other
-    stateful ops, arrival order is defined as (ts, numeric id) within
-    each micro-batch, and state carries a TTL.
+    and carry state; NULL and ``''`` symbols take no state and emit
+    NULL.
     """
     af, bf = 2.0 / (fast + 1.0), 1.0 - 2.0 / (fast + 1.0)
     as_, bs = 2.0 / (slow + 1.0), 1.0 - 2.0 / (slow + 1.0)
     ag, bg = 2.0 / (signal + 1.0), 1.0 - 2.0 / (signal + 1.0)
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ef, es, sig = state.get if state.exists else (None, None, None)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            m_out, s_out, h_out = [], [], []
-            for price in pdf["price"]:
-                if price is None or pd.isna(price):
-                    m_out.append(None)
-                    s_out.append(None)
-                    h_out.append(None)
-                    continue
-                v = float(price)
-                ef = v if ef is None else af * v + bf * ef
-                es = v if es is None else as_ * v + bs * es
-                m = ef - es
-                sig = m if sig is None else ag * m + bg * sig
-                m_out.append(m)
-                s_out.append(sig)
-                h_out.append(m - sig)
-            res = pdf.copy()
-            res["macd"] = pd.Series(m_out, index=pdf.index, dtype="float64")
-            res["macd_signal"] = pd.Series(s_out, index=pdf.index, dtype="float64")
-            res["macd_histogram"] = pd.Series(h_out, index=pdf.index, dtype="float64")
-            yield res
-        state.update((ef, es, sig))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(state, pdf):
+        ef, es, sig = state
+        m_out, s_out, h_out = [], [], []
+        for price in pdf["price"]:
+            if price is None or pd.isna(price):
+                m_out.append(None)
+                s_out.append(None)
+                h_out.append(None)
+                continue
+            v = float(price)
+            ef = v if ef is None else af * v + bf * ef
+            es = v if es is None else as_ * v + bs * es
+            m = ef - es
+            sig = m if sig is None else ag * m + bg * sig
+            m_out.append(m)
+            s_out.append(sig)
+            h_out.append(m - sig)
+        return (ef, es, sig), pdf.assign(
+            macd=_floats(m_out, pdf.index),
+            macd_signal=_floats(s_out, pdf.index),
+            macd_histogram=_floats(h_out, pdf.index),
+        )
 
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    passthrough = (
-        ticks.filter(ticks.symbol.isNull())
-        .withColumn("macd", F.lit(None).cast("double"))
-        .withColumn("macd_signal", F.lit(None).cast("double"))
-        .withColumn("macd_histogram", F.lit(None).cast("double"))
+    return _keyed_state(
+        ticks, step, MACD_OUTPUT_SCHEMA, MACD_STATE_SCHEMA, (None, None, None),
+        ttl_ms, ("macd", "macd_signal", "macd_histogram"),
     )
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    out = keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=MACD_OUTPUT_SCHEMA,
-        stateStructType=MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return out.unionByName(passthrough)
 
 
 ZSCORE_OUTPUT_SCHEMA = (
@@ -312,85 +301,59 @@ def streaming_zscore_alerts(
 
     quant = Decimal("0.0000001")
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (prices,) = state.get if state.exists else ([],)
-        prices = list(prices)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            mus, sds, zs, keep = [], [], [], []
-            for price in pdf["price"]:
-                flag = False
-                mu = sd = z = None
-                p = None if price is None or pd.isna(price) else float(price)
-                if p is not None:
-                    # batch parity: the ROWS −n..−1 frame counts every
-                    # row as a slot and requires count(price) == n, so
-                    # a window containing a NULL price never scores —
-                    # the buffer mirrors that by storing NULL slots
-                    # (appended below) and scoring only all-non-null
-                    # full windows
-                    if len(prices) == n and not any(
-                        v is None for v in prices
-                    ):
-                        sx = float(
-                            sum(
-                                Decimal(repr(v)).quantize(quant, ROUND_HALF_UP)
-                                for v in prices
-                            )
+    def step(state, pdf):
+        prices = list(state[0])
+        mus, sds, zs, keep = [], [], [], []
+        for price in pdf["price"]:
+            flag = False
+            mu = sd = z = None
+            p = None if price is None or pd.isna(price) else float(price)
+            if p is not None:
+                # batch parity: the ROWS −n..−1 frame counts every
+                # row as a slot and requires count(price) == n, so
+                # a window containing a NULL price never scores —
+                # the buffer mirrors that by storing NULL slots
+                # (appended below) and scoring only all-non-null
+                # full windows
+                if len(prices) == n and not any(v is None for v in prices):
+                    sx = float(
+                        sum(
+                            Decimal(repr(v)).quantize(quant, ROUND_HALF_UP)
+                            for v in prices
                         )
-                        sxx = float(
-                            sum(
-                                Decimal(repr(v * v)).quantize(quant, ROUND_HALF_UP)
-                                for v in prices
-                            )
+                    )
+                    sxx = float(
+                        sum(
+                            Decimal(repr(v * v)).quantize(quant, ROUND_HALF_UP)
+                            for v in prices
                         )
-                        mu = sx / float(n)
-                        var = (sxx - sx * sx / float(n)) / float(n - 1)
-                        # math.sqrt is correctly rounded (IEEE), matching
-                        # the batch plan's SQRT; `** 0.5` (libm pow) is not
-                        # guaranteed to be
-                        sd = math.sqrt(max(var, 0.0))
-                        z = (p - mu) / sd if sd != 0.0 else None
-                        flag = z is not None and abs(z) >= z_threshold
-                # EVERY row consumes a buffer slot, NULL prices
-                # included — exactly like the batch ROWS frame
-                prices.append(p)
-                if len(prices) > n:
-                    del prices[: len(prices) - n]
-                mus.append(mu)
-                sds.append(sd)
-                zs.append(z)
-                keep.append(flag)
-            out = pdf.copy()
-            out["baseline_mean"] = pd.Series(mus, index=pdf.index, dtype="float64")
-            out["baseline_sd"] = pd.Series(sds, index=pdf.index, dtype="float64")
-            out["zscore"] = pd.Series(zs, index=pdf.index, dtype="float64")
-            out = out[pd.Series(keep, index=pdf.index)]
-            if len(out):
-                yield out
-        state.update((prices,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+                    )
+                    mu = sx / float(n)
+                    var = (sxx - sx * sx / float(n)) / float(n - 1)
+                    # math.sqrt is correctly rounded (IEEE), matching
+                    # the batch plan's SQRT; `** 0.5` (libm pow) is not
+                    # guaranteed to be
+                    sd = math.sqrt(max(var, 0.0))
+                    z = (p - mu) / sd if sd != 0.0 else None
+                    flag = z is not None and abs(z) >= z_threshold
+            # EVERY row consumes a buffer slot, NULL prices
+            # included — exactly like the batch ROWS frame
+            prices.append(p)
+            if len(prices) > n:
+                del prices[: len(prices) - n]
+            mus.append(mu)
+            sds.append(sd)
+            zs.append(z)
+            keep.append(flag)
+        out = pdf.assign(
+            baseline_mean=_floats(mus, pdf.index),
+            baseline_sd=_floats(sds, pdf.index),
+            zscore=_floats(zs, pdf.index),
+        )
+        return (prices,), out[pd.Series(keep, index=pdf.index)]
 
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=ZSCORE_OUTPUT_SCHEMA,
-        stateStructType=ZSCORE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
+    return _keyed_state(
+        ticks, step, ZSCORE_OUTPUT_SCHEMA, ZSCORE_STATE_SCHEMA, ([],), ttl_ms, None
     )
 
 
@@ -530,68 +493,41 @@ def streaming_pattern_distance(
         raise ValueError("query pattern has zero variance")
     zq = [(q - qm) / qs for q in qvals]
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(state, pdf):
         import math as _math
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (prices,) = state.get if state.exists else ([],)
-        prices = list(prices)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                price = row.price
-                # batch parity: the lag-chain counts every ROW as a
-                # window slot, and any window containing a NULL price
-                # yields NULL stats (dropped) — so NULL prices consume
-                # a slot here too and poison the windows they sit in
-                p = None if price is None or pd.isna(price) else float(price)
-                prices.append(p)
-                if len(prices) > length:
-                    del prices[: len(prices) - length]
-                if p is None or len(prices) < length or any(
-                    v is None for v in prices
-                ):
-                    continue
-                m_acc = prices[0]
-                for v in prices[1:]:
-                    m_acc = m_acc + v
-                m = m_acc / float(length)
-                v_acc = (prices[0] - m) * (prices[0] - m)
-                for v in prices[1:]:
-                    v_acc = v_acc + (v - m) * (v - m)
-                s = _math.sqrt(v_acc / float(length))
-                if not s > 0:
-                    continue
-                d0 = (prices[0] - m) / s - zq[0]
-                d_acc = d0 * d0
-                for i in range(1, length):
-                    di = (prices[i] - m) / s - zq[i]
-                    d_acc = d_acc + di * di
-                out_rows.append((row.id, row.symbol, row.ts, d_acc))
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows, columns=["id", "symbol", "ts", "dist"]
-                )
-        state.update((prices,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+        prices = list(state[0])
+        out_rows = []
+        for row in pdf.itertuples(index=False):
+            price = row.price
+            # batch parity: the lag-chain counts every ROW as a
+            # window slot, and any window containing a NULL price
+            # yields NULL stats (dropped) — so NULL prices consume
+            # a slot here too and poison the windows they sit in
+            p = None if price is None or pd.isna(price) else float(price)
+            prices.append(p)
+            if len(prices) > length:
+                del prices[: len(prices) - length]
+            if p is None or len(prices) < length or any(v is None for v in prices):
+                continue
+            m_acc = prices[0]
+            for v in prices[1:]:
+                m_acc = m_acc + v
+            m = m_acc / float(length)
+            v_acc = (prices[0] - m) * (prices[0] - m)
+            for v in prices[1:]:
+                v_acc = v_acc + (v - m) * (v - m)
+            s = _math.sqrt(v_acc / float(length))
+            if not s > 0:
+                continue
+            d0 = (prices[0] - m) / s - zq[0]
+            d_acc = d0 * d0
+            for i in range(1, length):
+                di = (prices[i] - m) / s - zq[i]
+                d_acc = d_acc + di * di
+            out_rows.append((row.id, row.symbol, row.ts, d_acc))
+        return (prices,), pd.DataFrame(out_rows, columns=["id", "symbol", "ts", "dist"])
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return ticks.filter(ticks.symbol.isNotNull()).groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=PATTERN_OUT_SCHEMA,
-        stateStructType=PATTERN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _keyed_state(
+        ticks, step, PATTERN_OUT_SCHEMA, PATTERN_STATE_SCHEMA, ([],), ttl_ms, None
     )

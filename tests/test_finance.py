@@ -529,6 +529,9 @@ def test_macd_batched_seam_straddles_arrow_batches(spark):
                      symbol=i, start_id=100 * i)
             for i in range(1, 6)
         ]
+        # a NULL-key group, also long enough to straddle batches: it
+        # takes no state and passes through with NULL outputs
+        frames.append(ticks_df(spark, [1.0, 2.0, 3.0, 4.0], symbol=None, start_id=900))
         df = frames[0]
         for f in frames[1:]:
             df = df.unionByName(f)
@@ -536,6 +539,8 @@ def test_macd_batched_seam_straddles_arrow_batches(spark):
             (r["symbol"], r["event_id"]): (r["macd"], r["macd_signal"], r["macd_histogram"])
             for r in finance.macd(df).collect()
         }
+        for j in range(4):
+            assert got.pop((None, 900 + j)) == (None, None, None)
         n_rows = 0
         for i in range(1, 6):
             s = pd.Series([10.0 + i + j for j in range(4 + i)])
@@ -583,3 +588,66 @@ def test_ewma_batched_seam_straddles_arrow_batches(spark):
         assert got == expected
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+# --- the batch keyed fold's carry (pure pandas, no Spark) --------------
+
+
+def _carried(batches):
+    from financial_data_stream_processing_engine_spark.operators.core import (
+        _whole_groups,
+    )
+
+    return list(_whole_groups(iter(batches), "k"))
+
+
+def test_whole_groups_keeps_nan_key_group_whole_across_batches():
+    """Spark NULL keys arrive as NaN, sorted first: a NaN group spread
+    over several batches (with empty batches between) must come out as
+    ONE group — a plain ``==`` boundary test splits it, since NaN never
+    equals NaN."""
+    import numpy as np
+    import pandas as pd
+
+    keys = [[np.nan, np.nan], [], [np.nan], [np.nan, 1.0], [1.0, 2.0, 2.0], [], [3.0], []]
+    batches, v = [], 0
+    for ks in keys:
+        batches.append(pd.DataFrame({"k": ks, "v": range(v, v + len(ks))}, dtype="float64"))
+        v += len(ks)
+    out = _carried(batches)
+    assert all(len(f) for f in out)  # empty batches are skipped
+    # every frame holds whole groups, and no group spans two frames
+    seen = [frozenset(f["k"].fillna(-1.0)) for f in out]
+    assert sum(len(g) for g in seen) == len(frozenset().union(*seen)) == 4
+    nan_frames = [f for f in out if f["k"].isna().any()]
+    assert len(nan_frames) == 1 and nan_frames[0]["k"].isna().sum() == 4
+    assert pd.concat(out)["v"].tolist() == list(range(v))  # order kept
+
+
+def test_whole_groups_giant_key_concatenated_once(monkeypatch):
+    """One key fed as 1,000 batches of 100 rows comes out whole and in
+    order, and the held chunks are concatenated ONCE — re-concatenating
+    the carry with every batch is quadratic in the group size."""
+    import pandas as pd
+
+    calls = []
+    real_concat = pd.concat
+    monkeypatch.setattr(
+        pd, "concat", lambda *a, **kw: calls.append(1) or real_concat(*a, **kw)
+    )
+    batches = [
+        pd.DataFrame({"k": ["A"] * 100, "v": range(100 * b, 100 * (b + 1))})
+        for b in range(1000)
+    ]
+    out = _carried(batches)
+    assert len(out) == 1 and out[0]["v"].tolist() == list(range(100_000))
+    assert len(calls) == 1
+
+
+def test_whole_groups_skips_empty_batches():
+    import pandas as pd
+
+    empty = pd.DataFrame({"k": pd.Series([], dtype="object")})
+    assert _carried([empty, empty]) == []
+    out = _carried([empty, pd.DataFrame({"k": ["A", "B"]}), empty])
+    assert [f["k"].tolist() for f in out] == [["A"], ["B"]]

@@ -1,0 +1,82 @@
+"""Session-factory tests: the local-mode heap default (pure, no Spark)
+and the Python workers' import path from a foreign working directory
+(a separate driver process)."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
+from financial_data_stream_processing_engine_spark import session
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def test_default_driver_mem_parses_local_masters(monkeypatch):
+    # 64 detected CPUs and 1 TiB of RAM, so neither the fallback nor the
+    # quarter-of-RAM cap hides a mis-parsed slot count
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 64)
+    monkeypatch.setattr(
+        session.os,
+        "sysconf",
+        lambda name: 4096 if name == "SC_PAGE_SIZE" else (1 << 40) // 4096,
+    )
+    assert session._default_driver_mem("local[4]") == "4096m"
+    # local[N,F]: F is the task-retry count, not a slot count
+    assert session._default_driver_mem("local[4,2]") == "4096m"
+    assert session._default_driver_mem("local[1,3]") == "1024m"
+    assert session._default_driver_mem("local[*]") == f"{64 * 256}m"
+    assert session._default_driver_mem("local") == f"{64 * 256}m"
+
+
+_FOREIGN_CWD_MA = """
+import datetime as dt
+import sys
+
+sys.path.insert(0, {repo!r})
+from financial_data_stream_processing_engine_spark.session import get_spark
+from financial_data_stream_processing_engine_spark.streaming.stateful import (
+    streaming_moving_average,
+)
+
+schema = "id string, symbol string, price double, volume long, ts timestamp, source string"
+spark = get_spark("foreign-cwd", master="local[1]")
+spark.conf.set("spark.sql.shuffle.partitions", "1")
+rows = [
+    (f"t{{i}}", "A", float(i), 1, dt.datetime(2024, 1, 1, 0, 0, i), "s")
+    for i in range(6)
+]
+spark.createDataFrame(rows, schema).write.parquet("ticks")
+ma = streaming_moving_average(
+    spark.readStream.schema(schema).parquet("ticks"), n=3, ttl_ms=None
+)
+q = ma.writeStream.format("memory").queryName("ma").start()
+q.processAllAvailable()
+q.stop()
+print("MA", sorted(r.moving_average for r in spark.table("ma").collect()
+                   if r.moving_average is not None))
+spark.stop()
+"""
+
+
+def test_stateful_query_runs_from_foreign_cwd(tmp_path):
+    """A driver that imports the package through ``sys.path`` (no
+    ``PYTHONPATH``) from a working directory outside the repository
+    must still run a stateful query: its update function is pickled by
+    reference to the package, so the Python workers have to be able to
+    import it."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    script = textwrap.dedent(_FOREIGN_CWD_MA.format(repo=str(REPO)))
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "MA [1.0, 2.0, 3.0, 4.0]" in proc.stdout

@@ -21,11 +21,14 @@ TICK_SCHEMA = "id string, symbol string, price double, volume long, ts timestamp
 
 @pytest.fixture(scope="module")
 def tick_dir(spark, tmp_path_factory):
-    """~240 deterministic ticks across 3 symbols, written as parquet."""
+    """~240 deterministic ticks across 3 symbols, written as parquet,
+    with NULL and '' symbols sprinkled in (neither takes keyed state)."""
     base = dt.datetime(2024, 3, 1)
     rows = []
     for i in range(240):
-        sym = ["AAA", "BBB", "CCC"][i % 3] if i % 17 else None  # sprinkle NULL keys
+        sym = ["AAA", "BBB", "CCC"][i % 3] if i % 17 else None
+        if sym and i % 23 == 0:
+            sym = ""
         rows.append(
             (
                 f"t{i:04d}",
@@ -50,11 +53,40 @@ def _run_to_memory(df, name, mode="append"):
     q = sinks.memory_sink(df, name, output_mode=mode)
     q.processAllAvailable()
     q.stop()
+    return q
+
+
+_EDGE_KEYS = "symbol IS NULL OR symbol = ''"
+
+
+def _assert_edge_keys(spark, tick_dir, got, batch_op, cols):
+    """Streamed outputs ``got`` (id -> tuple of ``cols``) equal
+    ``batch_op`` on the same ticks; NULL and '' symbols come out with
+    NULL outputs, and they take no state: every other row equals
+    ``batch_op`` over the ticks with those rows removed."""
+    batch = spark.read.parquet(tick_dir)
+
+    def run(df):
+        return {r.id: tuple(r[c] for c in cols) for r in batch_op(df).collect()}
+
+    full = run(batch)
+    without = run(batch.filter(f"NOT ({_EDGE_KEYS})"))
+    edge_rows = batch.filter(_EDGE_KEYS).collect()
+    assert {r.symbol for r in edge_rows} == {None, ""}
+    edge = {r.id for r in edge_rows}
+    assert set(got) == set(full) == set(without) | edge
+    for k in edge:
+        assert got[k] == full[k] == (None,) * len(cols), k
+    for k in without:
+        assert got[k] == full[k] == without[k], k
 
 
 def test_stateful_row_count_ma_matches_batch(spark, tick_dir):
     out = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5, ttl_ms=None)
-    _run_to_memory(out, "ma_stream")
+    q = _run_to_memory(out, "ma_stream")
+    # NULL/'' symbols ride the same scan as the keyed rows: the source
+    # is read once, so Spark counts each input row once
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 240
     got = {r.id: r.moving_average for r in spark.table("ma_stream").collect()}
 
     batch = spark.read.parquet(tick_dir)
@@ -68,9 +100,9 @@ def test_stateful_row_count_ma_matches_batch(spark, tick_dir):
             assert got[k] is None, k
         else:
             assert got[k] == pytest.approx(exp[k], rel=1e-12), k
-    # NULL-symbol rows passed through with NULL ma
-    null_ids = {r.id for r in batch.filter("symbol is null").collect()}
-    assert null_ids and all(got[i] is None for i in null_ids)
+    # NULL- and ''-symbol rows passed through with NULL ma
+    edge_ids = {r.id for r in batch.filter(_EDGE_KEYS).collect()}
+    assert edge_ids and all(got[i] is None for i in edge_ids)
 
 
 def test_tumbling_window_matches_batch(spark, tick_dir):
@@ -197,22 +229,35 @@ def test_stateful_ma_with_ttl_processes_data(spark, tick_dir):
 def test_streaming_macd_matches_batch_fold(spark, tick_dir):
     from financial_data_stream_processing_engine_spark.operators import finance
 
-    stream = _stream(spark, tick_dir).filter("symbol IS NOT NULL")
-    out = stateful.streaming_macd(stream, ttl_ms=None)
+    out = stateful.streaming_macd(_stream(spark, tick_dir), ttl_ms=None)
     _run_to_memory(out, "macd_stream")
+    cols = ("macd", "macd_signal", "macd_histogram")
     got = {
-        r.id: (r.macd, r.macd_signal, r.macd_histogram)
+        r.id: tuple(r[c] for c in cols)
         for r in spark.table("macd_stream").collect()
     }
+    # bitwise: identical op order; batch macd passes NULL/'' keys through
+    _assert_edge_keys(
+        spark, tick_dir, got,
+        lambda df: finance.macd(
+            df, key="symbol", ts_col="ts", price="price", order_by=("ts", "id")
+        ),
+        cols,
+    )
 
-    batch = spark.read.parquet(tick_dir).filter("symbol IS NOT NULL")
-    exp_rows = finance.macd(
-        batch, key="symbol", ts_col="ts", price="price", order_by=("ts", "id")
-    ).collect()
-    exp = {r.id: (r.macd, r.macd_signal, r.macd_histogram) for r in exp_rows}
-    assert set(got) == set(exp)
-    for k in exp:
-        assert got[k] == exp[k], k  # bitwise: identical op order
+
+def test_streaming_ewma_matches_batch_fold(spark, tick_dir):
+    from financial_data_stream_processing_engine_spark.operators.core import ewma
+
+    out = stateful.streaming_ewma(_stream(spark, tick_dir), alpha=0.2, ttl_ms=None)
+    _run_to_memory(out, "ewma_stream")
+    got = {r.id: (r.ewma,) for r in spark.table("ewma_stream").collect()}
+    # bitwise: the same a·v + b·s update in the same order
+    _assert_edge_keys(
+        spark, tick_dir, got,
+        lambda df: ewma(df, alpha=0.2, order_by=("ts", "id")),
+        ("ewma",),
+    )
 
 
 def test_streaming_zscore_alerts_matches_batch(spark, tmp_path):
