@@ -19,6 +19,7 @@ from financial_data_stream_processing_engine_spark.functions.numeric import davg
 from financial_data_stream_processing_engine_spark.io_utils import load_table, scratch_dir
 from financial_data_stream_processing_engine_spark.operators import dedup, multimodal, similarity, text
 from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.streaming.sources import _sliced_feed
 
 # ---------------------------------------------------------------------------
 # shared DuckDB SQL fragments (kept next to the Spark ops they mirror)
@@ -3586,17 +3587,16 @@ def similarity_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN index freshness as a CONTINUOUS process: the same CDC
     change feed as ``similarity_index_maintain``, but arriving as a
-    live stream — three deterministic key-sliced micro-batches
-    (maxFilesPerTrigger=1), each applied to the persisted IVF index by
-    ``foreachBatch`` → ``maintain_ivf_index`` (the
-    ``streaming_ivm_orders_agg`` pattern, pointed at index partitions
-    instead of aggregate state).  Slices are disjoint by vector id, so
-    each batch is a valid delta against the current index and the
-    final on-disk content is identical to one-shot maintenance — which
-    is why the batch entry's full-rebuild oracle certifies the
-    STREAMED index bit-for-bit, touched-set included (per-row touched
-    cells are a function of the row alone, so the union over batches
-    equals the full delta's set).  At 100 TB this is the serving
+    live stream (vec_id-sliced, see streaming/sources.py::_sliced_feed),
+    each batch applied to the persisted IVF index by
+    ``maintain_ivf_index`` (the ``streaming_ivm_orders_agg`` pattern,
+    pointed at index partitions instead of aggregate state).  Slices
+    are disjoint by vector id, so each batch is a valid delta against
+    the current index and the final on-disk content is identical to
+    one-shot maintenance — which is why the batch entry's
+    full-rebuild oracle certifies the STREAMED index bit-for-bit,
+    touched-set included (per-row touched cells are a function of the
+    row alone, so the union over batches equals the full delta's set).  At 100 TB this is the serving
     story: index staleness bounded by the trigger interval, per-batch
     cost bounded by the cells that batch touches
     (operators/similarity.py::maintain_ivf_index)."""
@@ -3629,23 +3629,12 @@ def streaming_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_v = merge_upsert(old, upd.unionByName(ins), keys=["vec_id"]).where(
         F.col("vec_id") % 17 != 3
     )
-    # materialize the diff ONCE (r18): the three slice writes below
-    # each re-executed the full-outer-join diff plan from scratch —
-    # one checkpoint job replaces two re-executions, and the readStream
-    # schema read stays file-backed
+    # materialize the diff ONCE (r18): the three slice writes of the
+    # feed each re-executed the full-outer-join diff plan from scratch —
+    # one checkpoint job replaces two re-executions
     diff = table_diff(
         old, new_v, keys=["vec_id"], compare_cols=["embedding"]
     ).localCheckpoint()
-
-    # ship the change feed as 3 key-sliced files → 3 real micro-batches
-    feed_dir = scratch_dir(prefix="ivf_cdc_feed_")
-    for i in range(3):
-        (
-            diff.filter(F.col("vec_id") % 3 == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(feed_dir)
-        )
     touched_dir = scratch_dir(prefix="ivf_touched_")
 
     def apply_delta(batch_df: DataFrame, epoch_id: int) -> None:
@@ -3654,14 +3643,7 @@ def streaming_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.write.mode("append").parquet(touched_dir)
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(apply_delta).start()
-    q.processAllAvailable()
-    q.stop()
+    _sliced_feed(diff, "vec_id", apply_delta)
 
     touched = spark.read.parquet(touched_dir).distinct()
     maintained, _ = similarity.load_ivf_index(spark, idx)

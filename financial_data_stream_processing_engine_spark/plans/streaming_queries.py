@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from financial_data_stream_processing_engine_spark.io_utils import load_table, scratch_dir
 from financial_data_stream_processing_engine_spark.plans.catalog import register
 from financial_data_stream_processing_engine_spark.streaming import stateful, windows
+from financial_data_stream_processing_engine_spark.streaming.sources import (
+    _ordered_sliced_feed,
+    _sliced_feed,
+)
 
 TICK_SCHEMA = "id string, symbol string, price double, volume long, ts timestamp, source string"
 
@@ -48,49 +52,6 @@ def _event_tick_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ticks.write.mode("overwrite").parquet(d)
         _TICK_DIRS[key] = d
     return spark.readStream.schema(TICK_SCHEMA).parquet(_TICK_DIRS[key])
-
-
-def _observed_slice_source(df: DataFrame, id_col: str = "doc_id"):
-    """Attach the slice-set Observation to the frame the feed writer
-    slices (VERDICT r17 #2): ``collect_set(id_col % 3)`` rides the
-    writer's OWN pass — ``CollectMetrics`` is a pushdown barrier, so
-    the metric sees every pre-filter source row on the first slice
-    write, and the post-stop reconciliation no longer pays its own
-    corpus-sized distinct scan (the measured per-entry tail cost of
-    each CDC gate, ADVICE r16 #1).  Returns ``(frame, observation)``;
-    the writer must slice the returned frame."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    return (
-        df.observe(
-            obs, F.collect_set((F.col(id_col) % 3).cast("int")).alias("s")
-        ),
-        obs,
-    )
-
-
-def _reconcile_slices(seen: "set[int]", slice_obs) -> None:
-    """Post-stop slice reconciliation for the doc_id%3-sliced CDC gates
-    (ADVICE r15 #3): the gates' out-of-order guard tolerates forward
-    jumps (an empty slice may produce no feed file), which means a
-    LOST or undelivered NON-empty feed file would otherwise be
-    silently absorbed as "an empty slice" and the gate would produce
-    wrong rolling state with no error.  So after ``q.stop()`` each
-    gate asserts that the slices it actually processed equal the
-    slices that contain rows in the source table — read off the
-    :func:`_observed_slice_source` metric the feed writer's own pass
-    delivered (r18; previously one full column-pruned source scan per
-    gate).  A dropped file fails loudly at the entry boundary, before
-    any consumer reads the output.  Shared by the three gates so the
-    contract cannot drift between them."""
-    data_slices = {int(s) for s in slice_obs.get["s"]}
-    if seen != data_slices:
-        raise RuntimeError(
-            f"slice reconciliation failed: processed {sorted(seen)} "
-            f"but the source contains rows in {sorted(data_slices)} — a "
-            "feed file was lost or undelivered"
-        )
 
 
 def _nb_model_checkpointed(docs: DataFrame):
@@ -609,12 +570,12 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ANN scoring — the retrieval-serving shape: an IVF
     index is built and PERSISTED once (centroids + corpus partitioned
     by cell), then a STREAM of query vectors probes it per micro-batch
-    through ``foreachBatch`` + ``multiquery_ivf_topk`` (three files,
-    maxFilesPerTrigger=1 → three genuine incremental batches), each
-    batch appending its top-5 rows to the result sink.  Per-query
-    results are independent of batching, so the batch entry's oracle
-    (``_MULTIQUERY_IVF_SQL``) certifies the streamed output bit-for-
-    bit (operators/similarity.py::{save_ivf_index, load_ivf_index,
+    through ``multiquery_ivf_topk`` (query_id-sliced, see
+    streaming/sources.py::_sliced_feed), each batch appending its
+    top-5 rows to the result sink.  Per-query results are independent
+    of batching, so the batch entry's oracle (``_MULTIQUERY_IVF_SQL``)
+    certifies the streamed output bit-for-bit
+    (operators/similarity.py::{save_ivf_index, load_ivf_index,
     multiquery_ivf_topk})."""
     from financial_data_stream_processing_engine_spark.operators import similarity
 
@@ -624,20 +585,7 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.save_ivf_index(embs, centroids, idx_dir, vec_col="embedding")
     corpus, cent = similarity.load_ivf_index(spark, idx_dir)
 
-    qdir = scratch_dir(prefix="stream_queries_")
     out_dir = scratch_dir(prefix="stream_ann_out_") + "/out"
-    (
-        embs.filter(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), "embedding")
-        .repartition(3)
-        .write.mode("overwrite")
-        .parquet(qdir)
-    )
-    qstream = (
-        spark.readStream.schema("query_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(qdir)
-    )
 
     def probe(batch_df: DataFrame, epoch_id: int) -> None:
         res = similarity.multiquery_ivf_topk(
@@ -646,9 +594,10 @@ def streaming_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         res.write.mode("append").parquet(out_dir)
 
-    q = qstream.writeStream.foreachBatch(probe).start()
-    q.processAllAvailable()
-    q.stop()
+    queries = embs.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    _sliced_feed(queries, "query_id", probe)
     return spark.read.schema(
         "query_id long, vec_id long, cos double, rank int"
     ).parquet(out_dir)
@@ -684,9 +633,9 @@ _borrow_oracles()
 )
 def streaming_ivm_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance LIVE: the CDC change feed arrives
-    as a STREAM (3 deterministic key-sliced micro-batches,
-    maxFilesPerTrigger=1) and ``foreachBatch`` applies each delta to
-    the materialized aggregate state — read state, apply
+    as a STREAM (o_orderkey-sliced, see
+    streaming/sources.py::_sliced_feed) and each batch applies its
+    delta to the materialized aggregate state — read state, apply
     ``cdc_apply_to_sum_count``, write the next state version
     (versioned directories: the epoch write is atomic-by-rename and
     re-runnable, the streaming-sink idempotence pattern).  Because the
@@ -724,16 +673,6 @@ def streaming_ivm_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         compare_cols=["o_custkey", "o_orderstatus", "o_totalprice"],
     )
 
-    # ship the change feed as 3 key-sliced files → 3 real micro-batches
-    feed_dir = scratch_dir(prefix="cdc_feed_")
-    for i in range(3):
-        (
-            diff.filter(F.col("o_orderkey") % 3 == i)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(feed_dir)
-        )
-
     # materialize the OLD aggregate as state version 0
     state_dir = scratch_dir(prefix="ivm_state_")
     old_agg = o.groupBy("o_orderstatus").agg(
@@ -752,14 +691,7 @@ def streaming_ivm_orders_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.write.mode("overwrite").parquet(f"{state_dir}/v{state['version'] + 1}")
         state["version"] += 1
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(apply_delta).start()
-    q.processAllAvailable()
-    q.stop()
+    _sliced_feed(diff, "o_orderkey", apply_delta)
 
     return spark.read.parquet(f"{state_dir}/v{state['version']}").select(
         "o_orderstatus",
@@ -1176,10 +1108,10 @@ def streaming_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=None,  # set below: shares the batch funnel entry's oracle verbatim
 )
 def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-funnel analytics LIVE: events arrive as a stream (3
-    deterministic event_id-sliced micro-batches, maxFilesPerTrigger=1
-    — users deliberately SPAN batches, so no per-batch funnel is ever
-    correct on its own) and ``foreachBatch`` maintains a per-user
+    """Ordered-funnel analytics LIVE: events arrive as a stream
+    (event_id-sliced, see streaming/sources.py::_sliced_feed — users
+    deliberately SPAN batches, so no per-batch funnel is ever
+    correct on its own) and each batch maintains a per-user
     anchor table by RECOMPUTE-TOUCHED-KEYS incremental view
     maintenance: append the batch to the accumulated event state,
     recompute the (t1, t2, t3) anchors ONLY for the users the batch
@@ -1213,14 +1145,6 @@ def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "ts"
     )
 
-    # ship the event log as 3 event_id-sliced files → 3 real
-    # micro-batches whose users overlap across batches
-    feed_dir = scratch_dir(prefix="funnel_feed_")
-    for i in range(3):
-        ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-
     ev_state = scratch_dir(prefix="funnel_events_")
     anchor_dir = scratch_dir(prefix="funnel_anchors_")
     _funnel_anchors(ev.limit(0)).write.mode("overwrite").parquet(f"{anchor_dir}/v0")
@@ -1237,14 +1161,7 @@ def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.write.mode("overwrite").parquet(f"{anchor_dir}/v{state['version'] + 1}")
         state["version"] += 1
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(apply_batch).start()
-    q.processAllAvailable()
-    q.stop()
+    _sliced_feed(ev, "event_id", apply_batch)
 
     anchors = spark.read.parquet(f"{anchor_dir}/v{state['version']}")
     return _funnel_report(anchors)
@@ -1275,8 +1192,8 @@ def streaming_lm_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained ONCE batch-side on the trusted reference slice
     (vocabulary-sized tables, localCheckpoint-ed so per-batch scoring
     never re-executes training lineage), then documents arrive as a
-    live stream (3 doc_id-sliced micro-batches, maxFilesPerTrigger=1)
-    and each batch is scored and appended through ``foreachBatch``.
+    live stream (doc_id-sliced, see streaming/sources.py::_sliced_feed)
+    and each batch is scored and appended.
 
     Scoring is PER-DOCUMENT (a doc's bigrams live inside its own row),
     so the streamed score table is batching-independent and the batch
@@ -1298,26 +1215,13 @@ def streaming_lm_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.localCheckpoint() for df in bigram_lm_counts(ref)
     )
 
-    feed_dir = scratch_dir(prefix="lm_gate_feed_")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-
     out_dir = scratch_dir(prefix="lm_gate_scores_")
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
         scored = with_lm_score(batch_df, pair_counts, context_counts, vocab)
         scored.write.mode("append").parquet(f"{out_dir}/data")
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(score_batch).start()
-    q.processAllAvailable()
-    q.stop()
+    _sliced_feed(docs, "doc_id", score_batch)
     return spark.read.parquet(f"{out_dir}/data")
 
 
@@ -1348,9 +1252,9 @@ def streaming_nb_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the labeled non-holdout slice (operators/lm.py::nb_train — both
     model frames are vocabulary-sized and localCheckpoint-ed so
     per-batch scoring never re-executes training lineage), then
-    documents arrive as a live stream (3 doc_id-sliced micro-batches,
-    maxFilesPerTrigger=1) and each batch is scored and appended
-    through ``foreachBatch`` (::nb_score).
+    documents arrive as a live stream (doc_id-sliced, see
+    streaming/sources.py::_sliced_feed) and each batch is scored and
+    appended (::nb_score).
 
     Scoring is PER-DOCUMENT (a doc's tokens live inside its own
     rows), so the streamed score table is batching-independent and
@@ -1366,26 +1270,13 @@ def streaming_nb_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     word_counts, totals = _nb_model_checkpointed(docs)
 
-    feed_dir = scratch_dir(prefix="nb_gate_feed_")
-    for i in range(3):
-        docs.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-
     out_dir = scratch_dir(prefix="nb_gate_scores_")
 
     def score_batch(batch_df: DataFrame, epoch_id: int) -> None:
         scored = nb_score(batch_df, word_counts, totals)
         scored.write.mode("append").parquet(f"{out_dir}/data")
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(score_batch).start()
-    q.processAllAvailable()
-    q.stop()
+    _sliced_feed(docs, "doc_id", score_batch)
     return spark.read.parquet(f"{out_dir}/data")
 
 
@@ -1506,20 +1397,16 @@ def streaming_nb_model_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling model IS the final model, so its staleness is identically
     zero, a self-check the oracle enforces).
 
-    Batch boundaries are content-derived (doc_id % 3, one slice per
-    file via maxFilesPerTrigger=1, file mtimes staggered so the file
-    source's timestamp order is deterministic) and the closure asserts
-    slices arrive in order — an out-of-order batch raises loudly
-    rather than silently merging the wrong model version.
+    Batch boundaries are content-derived (doc_id % 3) and arrive
+    through streaming/sources.py::_ordered_sliced_feed, whose guard
+    raises on an out-of-order batch rather than silently merging the
+    wrong model version.
 
     At 100 TB this is the honest retrain cadence: per-batch cost is
     O(|batch tokens| + |vocabulary|) — the merge touches the
     model-sized state only, NEVER the accumulated corpus (the oracle
     retrains from scratch at every version precisely to certify the
     merge's equivalence; see _nb_model_cdc_sql)."""
-    import os
-    import time
-
     from financial_data_stream_processing_engine_spark.operators.lm import (
         nb_score,
         nb_train,
@@ -1528,71 +1415,18 @@ def streaming_nb_model_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     final_wc, final_tot = _nb_model_checkpointed(docs)
 
-    feed_dir = scratch_dir(prefix="nb_cdc_feed_")
-    t0 = time.time() - 100
-    stamped: set[str] = set()
-    feed_src, slice_obs = _observed_slice_source(docs)
-    for i in range(3):
-        feed_src.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-        # stagger mtimes so the file source's oldest-first order is the
-        # slice order even on coarse-mtime filesystems: stamp each
-        # slice's (new) files once, strictly increasing per slice
-        for f in os.listdir(feed_dir):
-            p = os.path.join(feed_dir, f)
-            if f.endswith(".parquet") and p not in stamped:
-                os.utime(p, (t0 + 10 * i, t0 + 10 * i))
-                stamped.add(p)
-
     state_dir = scratch_dir(prefix="nb_cdc_model_")
     out_dir = scratch_dir(prefix="nb_cdc_scores_")
-    expected = [0]
-    # data slices actually processed — reconciled post-stop against the
-    # slices that contain rows, so a lost/undelivered NON-empty feed
-    # file fails loudly instead of silently merging without its data
-    # (ADVICE r15 #3: the relaxed sl >= expected guard alone would
-    # treat a dropped slice file as an empty slice)
-    seen_slices: set[int] = set()
-    # newest written state version — an empty or skipped slice leaves
-    # the state untouched, so "previous" is "newest written", not
-    # v{sl-1} (the phash/unigram sparse-corpus fix, ADVICE r14 #1,
-    # applied to this sibling gate too)
-    last_state: list[str | None] = [None]
 
-    def merge_and_score(batch_df: DataFrame, epoch_id: int) -> None:
-        slices = [
-            r[0]
-            for r in batch_df.select((F.col("doc_id") % 3).alias("s")).distinct().collect()
-        ]
-        if len(slices) > 1 or (slices and slices[0] < expected[0]):
-            # a multi-slice batch or out-of-order arrival would merge
-            # the wrong model version — fail loudly, never score stale
-            raise RuntimeError(
-                f"expected slice >= {expected[0]} alone, got {sorted(slices)}"
-            )
-        if not slices:
-            # an empty slice's feed file arrives as one (empty)
-            # micro-batch: merge is the identity, the state version
-            # carries.  Do NOT advance the clock (ADVICE r15 #2): sl is
-            # data-derived and the guard tolerates forward jumps
-            # (sl >= expected), so the increment is redundant when the
-            # empty batch maps 1:1 to a feed file — and WRONG when it
-            # does not (any other zero-row micro-batch would over-
-            # advance past a genuine next slice).  A silently-skipped
-            # NON-empty slice is caught by the post-stop reconciliation
-            return
-        # sl from the DATA: an empty slice that produced NO feed file
-        # lets the next non-empty slice arrive early and the clock
-        # jumps with it; genuine out-of-order (sl < expected) raised
-        sl = int(slices[0])
-        seen_slices.add(sl)
-        # additive maintenance: batch counts merge into the model state
+    def merge_and_score(batch_df: DataFrame, sl: int, prev_sl: int | None) -> None:
+        # additive maintenance: batch counts merge into the model state;
+        # an empty slice leaves the state untouched, so the previous
+        # version is the newest one written, not v{sl-1}
         batch_counts, _ = nb_train(batch_df)
-        if last_state[0] is None:
+        if prev_sl is None:
             merged = batch_counts
         else:
-            prev = spark.read.parquet(last_state[0])
+            prev = spark.read.parquet(f"{state_dir}/v{prev_sl}")
             merged = (
                 prev.unionByName(batch_counts)
                 .groupBy("t")
@@ -1612,7 +1446,6 @@ def streaming_nb_model_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("vs"),
         )
         merged.write.mode("overwrite").parquet(f"{state_dir}/v{sl}")
-        last_state[0] = f"{state_dir}/v{sl}"
         model = spark.read.parquet(f"{state_dir}/v{sl}")
         mt = obs_tot.get
         totals = spark.createDataFrame(
@@ -1640,17 +1473,8 @@ def streaming_nb_model_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out.write.mode("append").parquet(f"{out_dir}/data")
-        expected[0] = sl + 1
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(merge_and_score).start()
-    q.processAllAvailable()
-    q.stop()
-    _reconcile_slices(seen_slices, slice_obs)
+    _ordered_sliced_feed(docs, "doc_id", merge_and_score)
     return spark.read.parquet(f"{out_dir}/data")
 
 
@@ -1699,9 +1523,9 @@ FROM phash_tbl p JOIN gate g ON g.media_id = p.media_id
 def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image near-dup detection as a CONTINUOUS GATE — the banded
     pHash index maintained per micro-batch: images arrive in 3
-    doc_id-sliced batches (maxFilesPerTrigger=1, mtime-staggered, the
-    nb_model_cdc arrival-order discipline — an out-of-order batch
-    raises rather than probing a wrong index version), each batch is
+    doc_id-sliced batches (streaming/sources.py::_ordered_sliced_feed
+    — an out-of-order batch raises rather than probing a wrong index
+    version), each batch is
     decoded and hashed ONCE (operators/phash.py::phash64, the real
     stdlib PNG decode), probed against the ACCUMULATED band index of
     all earlier batches (::phash_probe_index — candidates only from
@@ -1719,8 +1543,6 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     image modality.  Oracle: the quadratic earlier-slice probe over
     the full phash_tbl reconstruction (only the oracle is all-pairs).
     """
-    import os
-
     from financial_data_stream_processing_engine_spark.operators import (
         multimodal,
         phash as phash_ops,
@@ -1742,56 +1564,10 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pngs.write.mode("overwrite").parquet(png_stage)
     staged = spark.read.parquet(png_stage)
 
-    feed_dir = scratch_dir(prefix="phash_gate_feed_")
-    t0 = 1_000_000_000.0
-    stamped: set[str] = set()
-    feed_src, slice_obs = _observed_slice_source(staged)
-    for i in range(3):
-        feed_src.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-        for f in os.listdir(feed_dir):
-            p = os.path.join(feed_dir, f)
-            if f.endswith(".parquet") and p not in stamped:
-                os.utime(p, (t0 + 10 * i, t0 + 10 * i))
-                stamped.add(p)
-
     index_dir = scratch_dir(prefix="phash_gate_index_")
     out_dir = scratch_dir(prefix="phash_gate_out_")
-    expected = [0]
-    # processed data slices, reconciled post-stop (ADVICE r15 #3): a
-    # lost NON-empty feed file must fail loudly, not pass as empty
-    seen_slices: set[int] = set()
-    # driver-side "index is non-empty" flag: slice membership is not
-    # the right guard (an empty slice 0 would leave the index path
-    # unwritten while slice 1 still has no priors to probe)
-    has_index = [False]
 
-    def gate_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        slices = [
-            r[0]
-            for r in batch_df.select((F.col("doc_id") % 3).alias("s"))
-            .distinct()
-            .collect()
-        ]
-        if len(slices) > 1 or (slices and slices[0] < expected[0]):
-            raise RuntimeError(
-                f"expected slice >= {expected[0]} alone, got {sorted(slices)}"
-            )
-        if not slices:
-            # a sparse corpus can leave a slice empty; nothing arrived:
-            # nothing to probe, nothing to append.  Do NOT advance the
-            # clock (ADVICE r15 #2): sl is data-derived and the guard
-            # tolerates forward jumps, so the increment was redundant
-            # for the empty-feed-file case and over-advances on any
-            # zero-row micro-batch that is NOT a slice's feed file.
-            return
-        # sl comes from the DATA, not the batch counter: when an empty
-        # slice produced NO feed file at all, the next non-empty slice
-        # arrives early and the clock jumps with it.  Genuine
-        # out-of-order (sl < expected) still raises above.
-        sl = int(slices[0])
-        seen_slices.add(sl)
+    def gate_batch(batch_df: DataFrame, sl: int, prev_sl: int | None) -> None:
         media = multimodal.as_media(
             batch_df, id_col="doc_id", payload=F.col("payload"),
             kind="image", mime="image/png",
@@ -1805,7 +1581,9 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(sl).cast("int").alias("slice"),
             "phash",
         )
-        if not has_index[0]:
+        # the index is non-empty once any earlier slice was processed
+        # (not "sl > 0": an empty slice 0 writes no index rows)
+        if prev_sl is None:
             out = base.select(
                 "media_id", "slice", "phash",
                 F.lit(0).cast("long").alias("n_prior_dups"),
@@ -1837,18 +1615,8 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.write.mode("append").parquet(f"{out_dir}/data")
         # append AFTER probing: the index holds strictly-earlier batches
         bands.write.mode("append").parquet(f"{index_dir}/data")
-        has_index[0] = True
-        expected[0] = sl + 1
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(gate_batch).start()
-    q.processAllAvailable()
-    q.stop()
-    _reconcile_slices(seen_slices, slice_obs)
+    _ordered_sliced_feed(staged, "doc_id", gate_batch)
     return spark.read.parquet(f"{out_dir}/data")
 
 
@@ -1949,16 +1717,14 @@ def streaming_unigram_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     one fewer vocabulary-sized training, value-pinned by the
     batch-side from-scratch retrain in tests/test_streaming.py.
 
-    Batch boundaries are content-derived (doc_id % 3, one slice per
-    file, mtime-staggered) with the arrival-order assertion — an
+    Batch boundaries are content-derived (doc_id % 3) and arrive
+    through streaming/sources.py::_ordered_sliced_feed — an
     out-of-order batch would merge the wrong state version and raises
     instead.  Everything in the decision path is exact integers (QLOG
     costs, counts), so the driver value-hashes the whole maintenance
     loop.  Oracle: from-scratch retrains at every version — Spark
     merges, the oracle never does, which is precisely what certifies
     the merge."""
-    import os
-
     from financial_data_stream_processing_engine_spark.operators import unigram
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1984,69 +1750,23 @@ def streaming_unigram_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).write.mode("overwrite").parquet(fin_dir)
     fin_all = spark.read.parquet(fin_dir)
 
-    feed_dir = scratch_dir(prefix="unigram_cdc_feed_")
-    t0 = 1_000_000_000.0
-    stamped: set[str] = set()
-    feed_src, slice_obs = _observed_slice_source(docs)
-    for i in range(3):
-        feed_src.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(feed_dir)
-        for f in os.listdir(feed_dir):
-            p = os.path.join(feed_dir, f)
-            if f.endswith(".parquet") and p not in stamped:
-                os.utime(p, (t0 + 10 * i, t0 + 10 * i))
-                stamped.add(p)
-
     state_dir = scratch_dir(prefix="unigram_cdc_state_")
     out_dir = scratch_dir(prefix="unigram_cdc_scores_")
-    expected = [0]
-    # processed data slices, reconciled post-stop (ADVICE r15 #3): a
-    # lost NON-empty feed file must fail loudly, not pass as empty
-    seen_slices: set[int] = set()
-    # path of the NEWEST written state version — an empty or skipped
-    # slice leaves the state untouched, so "previous state" is "newest
-    # written", not "v{sl-1}"
-    last_state: list[str | None] = [None]
 
-    def merge_and_segment(batch_df: DataFrame, epoch_id: int) -> None:
-        slices = [
-            r[0]
-            for r in batch_df.select((F.col("doc_id") % 3).alias("s"))
-            .distinct()
-            .collect()
-        ]
-        if len(slices) > 1 or (slices and slices[0] < expected[0]):
-            raise RuntimeError(
-                f"expected slice >= {expected[0]} alone, got {sorted(slices)}"
-            )
-        if not slices:
-            # a sparse corpus can leave a slice empty; no words
-            # arrived: merge is the identity, the state version simply
-            # carries.  Do NOT advance the clock (ADVICE r15 #2): sl is
-            # data-derived and the guard tolerates forward jumps, so
-            # the increment was redundant for the empty-feed-file case
-            # and over-advances on any zero-row micro-batch that is NOT
-            # a slice's feed file.
-            return
-        # sl comes from the DATA, not the batch counter: when an empty
-        # slice produced NO feed file at all, the next non-empty slice
-        # arrives early and the clock jumps with it.  Genuine
-        # out-of-order (sl < expected) still raises above.
-        sl = int(slices[0])
-        seen_slices.add(sl)
+    def merge_and_segment(batch_df: DataFrame, sl: int, prev_sl: int | None) -> None:
+        # an empty slice leaves the state untouched, so the previous
+        # version is the newest one written, not v{sl-1}
         batch_words = unigram.word_freqs(batch_df)
-        if last_state[0] is None:
+        if prev_sl is None:
             merged = batch_words
         else:
-            prev = spark.read.parquet(last_state[0])
+            prev = spark.read.parquet(f"{state_dir}/v{prev_sl}")
             merged = (
                 prev.unionByName(batch_words)
                 .groupBy("word")
                 .agg(F.sum("freq").cast("long").alias("freq"))
             )
         merged.write.mode("overwrite").parquet(f"{state_dir}/v{sl}")
-        last_state[0] = f"{state_dir}/v{sl}"
         if sl == 2:
             # the merged state at the LAST slice IS the full corpus
             # (slices 0..2 partition doc_id % 3), so its rolling model
@@ -2065,7 +1785,7 @@ def streaming_unigram_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("total_cost_final").alias("total_cost_roll"),
             )
         else:
-            state = spark.read.parquet(last_state[0])
+            state = spark.read.parquet(f"{state_dir}/v{sl}")
             roll_vocab, _ = unigram.unigram_train_words(
                 state, rounds=_CDC_UNIGRAM_ROUNDS, spill=False
             )
@@ -2084,15 +1804,6 @@ def streaming_unigram_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out.write.mode("append").parquet(f"{out_dir}/data")
-        expected[0] = sl + 1
 
-    feed = (
-        spark.readStream.schema(spark.read.parquet(feed_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    q = feed.writeStream.foreachBatch(merge_and_segment).start()
-    q.processAllAvailable()
-    q.stop()
-    _reconcile_slices(seen_slices, slice_obs)
+    _ordered_sliced_feed(docs, "doc_id", merge_and_segment)
     return spark.read.parquet(f"{out_dir}/data")

@@ -684,7 +684,7 @@ def test_reconcile_slices_catches_dropped_nonempty_slice(spark):
 
     from pyspark.sql import functions as F
 
-    from financial_data_stream_processing_engine_spark.plans.streaming_queries import (
+    from financial_data_stream_processing_engine_spark.streaming.sources import (
         _observed_slice_source,
         _reconcile_slices,
     )
@@ -695,8 +695,10 @@ def test_reconcile_slices_catches_dropped_nonempty_slice(spark):
 
     def observed(df):
         # the gate's feed-writer shape: slice the OBSERVED frame; the
-        # first slice action delivers the full pre-filter slice set
-        src, obs = _observed_slice_source(df)
+        # first slice action delivers the full pre-filter slice set.
+        # This pins what the ordered feed relies on: the first slice
+        # write alone fills the Observation with every slice.
+        src, obs = _observed_slice_source(df, "doc_id")
         src.filter(F.col("doc_id") % 3 == 0).write.format("noop").mode(
             "overwrite"
         ).save()
@@ -713,3 +715,48 @@ def test_reconcile_slices_catches_dropped_nonempty_slice(spark):
     # a phantom processed slice (clock over-advance regression) raises
     with _pytest.raises(RuntimeError, match="slice reconciliation failed"):
         _reconcile_slices({0, 1, 2}, observed(sparse))
+
+
+def test_ordered_feed_guard_raises_on_multi_slice_and_backward_batch(spark):
+    """The ordered feed's per-batch guard: a batch holding two slices,
+    or a slice not newer than one already processed, raises before the
+    body runs; an empty batch between two slices is skipped without
+    moving the clock, so the next slice still passes.  The guard is
+    driven directly (the feed itself never builds a bad batch), then
+    the whole ordered feed runs on a corpus with an empty middle
+    slice."""
+    from financial_data_stream_processing_engine_spark.streaming.sources import (
+        _ordered_sliced_feed,
+        _SliceGuard,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(6)], "doc_id long, text string"
+    )
+
+    def only(k):
+        return docs.filter(F.col("doc_id") % 3 == k)
+
+    calls = []
+
+    def on_slice(batch_df, sl, prev_sl):
+        calls.append((sl, prev_sl))
+
+    with pytest.raises(RuntimeError, match=r"expected slice >= 0 alone, got \[0, 1\]"):
+        _SliceGuard(on_slice, "doc_id")(docs.filter("doc_id % 3 != 2"), 0)
+    guard = _SliceGuard(on_slice, "doc_id")
+    guard(only(1), 0)
+    with pytest.raises(RuntimeError, match=r"expected slice >= 2 alone, got \[0\]"):
+        guard(only(0), 1)
+    assert calls == [(1, None)]
+
+    calls.clear()
+    guard = _SliceGuard(on_slice, "doc_id")
+    guard(only(0), 0)
+    guard(docs.limit(0), 1)
+    guard(only(1), 2)
+    assert calls == [(0, None), (1, 0)] and guard.seen == {0, 1}
+
+    calls.clear()
+    _ordered_sliced_feed(docs.filter("doc_id % 3 != 1"), "doc_id", on_slice)
+    assert calls == [(0, None), (2, 0)]
