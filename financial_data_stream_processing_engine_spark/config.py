@@ -52,7 +52,10 @@ class EngineConfig:
     #: processing-time timeout the engine schedules continuous empty
     #: micro-batches and processAllAvailable never settles).
     state_ttl_ms: int | None = 24 * 3600 * 1000
-    #: shuffle partitions for local runs; on a real cluster leave to AQE.
+    #: shuffle partitions of batch queries for local runs (AQE coalesces
+    #: them); on a real cluster leave to AQE.  The live engine's state
+    #: partitions do not follow this: they come from the task slots
+    #: (``session._state_partitions``).
     shuffle_partitions: int = 32
 
 

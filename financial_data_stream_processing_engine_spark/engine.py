@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from financial_data_stream_processing_engine_spark.operators.core import clean
+from financial_data_stream_processing_engine_spark.session import _state_partitions
 from financial_data_stream_processing_engine_spark.sources.alpha_vantage import AlphaVantageSource
 from financial_data_stream_processing_engine_spark.sources.batch import normalize_alpha_vantage
 from financial_data_stream_processing_engine_spark.streaming import sources as stream_sources
@@ -219,6 +220,31 @@ class LiveEngine:
     # -- lifecycle ---------------------------------------------------------
 
     def start(self, checkpoint_dir: str | None = None) -> "LiveEngine":
+        """Start the ``live_engine`` query on the caller's session (so
+        ``spark.streams`` and its listeners see it).
+
+        Per-query properties:
+
+        * the enabled sources, and the spool directory of the
+          AlphaVantage source;
+        * state partitions, one per task slot
+          (:func:`~financial_data_stream_processing_engine_spark.session._state_partitions`),
+          applied to this query only: the caller's
+          ``spark.sql.shuffle.partitions``, which governs batch
+          shuffles, reads the same after ``start()``;
+        * the MA state schema (one price buffer per symbol);
+        * the name ``live_engine``, the MA window
+          ``config.moving_average_window`` and the state TTL
+          ``config.state_ttl_ms``.
+
+        With ``checkpoint_dir``, the checkpoint freezes the first three
+        at the query's first start.  A restart from it must enable the
+        same sources on the same spool, and it keeps the recorded state
+        partition count whatever the slots are now (32 for checkpoints
+        written while the count followed
+        ``EngineConfig.shuffle_partitions``).  The last three are not
+        frozen: each start sets them afresh.
+        """
         if self.query is not None:
             return self  # already running (reference :380)
         ticks = self._source_union()
@@ -238,7 +264,15 @@ class LiveEngine:
             )
             self._poller = _AvPollerThread(self.av_source, self._spool_dir, av_interval)
             self._poller.start()
-        self.query = writer.start()
+        # writer.start() copies the session conf into the query's own
+        # session, so the count set here reaches this query alone
+        conf = self.spark.conf
+        caller_partitions = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(_state_partitions(self.spark)))
+        try:
+            self.query = writer.start()
+        finally:
+            conf.set("spark.sql.shuffle.partitions", caller_partitions)
         return self
 
     def process_all_available(self) -> None:

@@ -52,6 +52,19 @@ def _default_driver_mem(master: str) -> str:
     return f"{mem_mib}m"
 
 
+def _state_partitions(spark: SparkSession) -> int:
+    """State partitions of a stateful streaming query: one per task
+    slot, ``sparkContext.defaultParallelism`` — N for ``local[N]``, the
+    total executor cores on a cluster.  Every micro-batch loads, updates
+    and commits each state partition once and makes one Python round
+    trip per partition, so above the slot count the extra partitions
+    only queue behind the busy slots.  Spark records the count in the
+    query's checkpoint (offset log) at its first start and reuses the
+    recorded count on every restart, so this rule sizes new checkpoints
+    only."""
+    return spark.sparkContext.defaultParallelism
+
+
 def _ship_package_path(spark: SparkSession) -> None:
     """Put the package's parent directory on the Python workers'
     ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, merged with any

@@ -21,6 +21,7 @@ import time
 
 import pytest
 
+from financial_data_stream_processing_engine_spark import engine as engine_module
 from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, SourceConfig
 from financial_data_stream_processing_engine_spark.engine import LiveEngine
 from financial_data_stream_processing_engine_spark.sources.alpha_vantage import AlphaVantageSource
@@ -93,14 +94,23 @@ def test_live_engine_end_to_end(spark, tmp_path):
     assert engine.query is None
 
 
-def test_checkpoint_recovery_resumes_ma_state(spark, tmp_path):
+def _state_partitions_of(query) -> int:
+    """The state partition count a query ran with, read from its
+    progress (the first batch that reports a state operator)."""
+    for p in query.recentProgress:
+        if p["stateOperators"]:
+            return p["stateOperators"][0]["numShufflePartitions"]
+    raise AssertionError("no progress reported a state operator")
+
+
+def _restart_across_checkpoint(spark, tmp_path, monkeypatch=None, phase1_partitions=None):
     """Kill the engine mid-stream, restart from the same checkpoint +
     spool dir, and prove (a) exactly-once delivery across the restart —
     no row lost, none duplicated — and (b) the keyed MA ring buffer
     survived: the first windows after restart average over prices
-    delivered BEFORE the restart.  The reference drops in-flight rows
-    on shutdown (financial_engine.py:397-416); this is the stronger
-    semantics SURVEY §3.3 claims."""
+    delivered BEFORE the restart.  With ``phase1_partitions``, phase 1
+    runs with the state partition rule patched to return it.  Returns
+    each phase's state partition count."""
     cfg = dataclasses.replace(
         DEFAULT_CONFIG,
         state_ttl_ms=None,
@@ -123,7 +133,7 @@ def test_checkpoint_recovery_resumes_ma_state(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     n = cfg.moving_average_window
 
-    def run_phase(min_rows: int) -> list:
+    def run_phase(min_rows: int) -> tuple[list, int]:
         engine = LiveEngine(
             spark,
             config=cfg,
@@ -133,14 +143,19 @@ def test_checkpoint_recovery_resumes_ma_state(spark, tmp_path):
             spool_dir=spool,
         )
         engine.start(checkpoint_dir=ckpt)
+        query = engine.query
         deadline = time.time() + 120
         while time.time() < deadline and len(engine.recent) < min_rows:
             time.sleep(0.25)
         engine.drain_and_stop()
-        return engine.recent
+        return engine.recent, _state_partitions_of(query)
 
-    phase1 = run_phase(n + 3)
-    phase2 = run_phase(3)
+    if phase1_partitions is not None:
+        monkeypatch.setattr(engine_module, "_state_partitions", lambda s: phase1_partitions)
+    phase1, parts1 = run_phase(n + 3)
+    if phase1_partitions is not None:
+        monkeypatch.undo()
+    phase2, parts2 = run_phase(3)
     assert len(phase1) >= n + 3, f"phase 1 produced {len(phase1)} rows"
     assert len(phase2) >= 3, f"phase 2 produced {len(phase2)} rows"
 
@@ -162,6 +177,52 @@ def test_checkpoint_recovery_resumes_ma_state(spark, tmp_path):
     # the boundary was actually exercised: phase 2 started deep enough
     # that its first full window reaches back into phase-1 prices
     assert min(r["price"] for r in phase2) > 100.0 + (n - 1)
+    return parts1, parts2
+
+
+def test_checkpoint_recovery_resumes_ma_state(spark, tmp_path):
+    """Exactly-once delivery and the MA ring buffer survive a restart
+    from the same checkpoint + spool dir.  The reference drops
+    in-flight rows on shutdown (financial_engine.py:397-416); this is
+    the stronger semantics SURVEY §3.3 claims."""
+    _restart_across_checkpoint(spark, tmp_path)
+
+
+def test_fresh_start_sizes_state_to_slots_for_its_query_only(spark, tmp_path):
+    """A fresh checkpoint gets one state partition per task slot, while
+    the caller's session keeps its own shuffle partition count."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    engine = LiveEngine(
+        spark,
+        config=dataclasses.replace(DEFAULT_CONFIG, state_ttl_ms=None),
+        ws_rows_per_second=20,
+        csv_rows_per_second=0,
+    )
+    try:
+        engine.start(checkpoint_dir=str(tmp_path / "ckpt"))
+        assert spark.conf.get(key) == "32"
+        deadline = time.time() + 60
+        while time.time() < deadline and not engine.recent:
+            time.sleep(0.25)
+        query = engine.query
+    finally:
+        engine.stop()
+        spark.conf.set(key, before)
+    assert engine.recent, "engine produced no rows"
+    # the local[4] fixture: 4 slots
+    assert _state_partitions_of(query) == spark.sparkContext.defaultParallelism == 4
+
+
+def test_restart_keeps_checkpointed_state_partitions(spark, tmp_path, monkeypatch):
+    """A checkpoint written with 32 state partitions (the count before
+    it followed the slots) restarts with 32, and the MA still crosses
+    the restart boundary exactly."""
+    parts1, parts2 = _restart_across_checkpoint(
+        spark, tmp_path, monkeypatch, phase1_partitions=32
+    )
+    assert (parts1, parts2) == (32, 32)
 
 
 def test_fanout_quiet_epoch_is_one_action(spark):

@@ -226,6 +226,51 @@ def test_stateful_ma_with_ttl_processes_data(spark, tick_dir):
     assert n == 240
 
 
+def test_stateful_ma_ttl_resets_window_after_idle(spark, tmp_path):
+    """A key idle for longer than the TTL loses its window: when it
+    returns, its new rows get a NULL MA until ``n`` new prices arrive.
+    Expiry happens in the no-data batches that ProcessingTimeTimeout
+    schedules: a key that has data in a batch sees ``hasTimedOut``
+    false even when its TTL has passed, so without those batches the
+    returning key would continue from its stale prices."""
+    ttl_ms, n = 1500, 3
+    path = str(tmp_path / "ticks")
+    base = dt.datetime(2024, 3, 1)
+
+    def append(prices, first):
+        rows = [
+            (f"t{first + i:04d}", "AAA", p, 1, base + dt.timedelta(seconds=first + i), "X")
+            for i, p in enumerate(prices)
+        ]
+        spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.mode("append").parquet(path)
+
+    def wait_rows(count):
+        deadline = time.time() + 60
+        while time.time() < deadline and spark.table("ma_ttl_idle").count() < count:
+            time.sleep(0.2)
+
+    def state_rows(q):
+        ops = (q.lastProgress or {}).get("stateOperators") or [{}]
+        return ops[0].get("numRowsTotal")
+
+    append([10.0, 20.0, 30.0], 0)
+    out = stateful.streaming_moving_average(_stream(spark, path), n=n, ttl_ms=ttl_ms)
+    q = sinks.memory_sink(out, "ma_ttl_idle")
+    try:
+        wait_rows(n)
+        # idle until a no-data batch has expired the key's state
+        deadline = time.time() + 60
+        while time.time() < deadline and state_rows(q) != 0:
+            time.sleep(0.2)
+        append([40.0, 50.0], n)
+        wait_rows(n + 2)
+    finally:
+        q.stop()
+    got = {r.id: r.moving_average for r in spark.table("ma_ttl_idle").collect()}
+    # before the idle gap the window filled; after it the window restarts
+    assert got == {"t0000": None, "t0001": None, "t0002": 20.0, "t0003": None, "t0004": None}
+
+
 def test_streaming_macd_matches_batch_fold(spark, tick_dir):
     from financial_data_stream_processing_engine_spark.operators import finance
 
