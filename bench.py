@@ -229,6 +229,19 @@ def _calibrate(spark, reps: int = 3) -> dict:
     }
 
 
+def _best_of(fn, spark, sf_dir: str, reps: int) -> float:
+    """Best-of-``reps`` wall time of building ``fn(spark, sf_dir)`` and
+    forcing it through the noop sink: the first run pays one-time
+    codegen/planning cost; the min reflects steady-state execution
+    (what a long-running cluster job actually sees)."""
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        best = min(best, time.time() - t0)
+    return best
+
+
 def apply_retry_rule(
     name: str,
     best: float,
@@ -299,15 +312,7 @@ def main() -> int:
     retimed: dict[str, dict] = {}
     timings: dict[str, float] = {}
     for name in names:
-        # best-of-N: the first run pays one-time codegen/planning cost;
-        # the min reflects steady-state execution (what a long-running
-        # cluster job actually sees).
-        best = float("inf")
-        for _ in range(max(1, reps)):
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
+        best = _best_of(qs[name], spark, sf_dir, max(1, reps))
         # Retry rule (VERDICT r16 #2): if even the best-of-N exceeds
         # the trailing driver record by >2x, the number is likelier a
         # transient (GC pause, load spike spanning all reps) than a
@@ -315,13 +320,7 @@ def main() -> int:
         # better, reporting BOTH so nothing is hidden (the contract
         # lives in apply_retry_rule, pinned by tests).
         def _retime(name=name) -> float:
-            retry_best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                df = qs[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                retry_best = min(retry_best, time.time() - t0)
-            return retry_best
+            return _best_of(qs[name], spark, sf_dir, 2)
 
         best = apply_retry_rule(name, best, trailing.get(name), _retime, retimed)
         timings[name] = round(best, 3)

@@ -23,10 +23,10 @@ express the semantics, and then always Arrow-vectorized.
 """
 
 from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from financial_data_stream_processing_engine_spark.engine import LiveEngine, run_live
+from financial_data_stream_processing_engine_spark.engine import LiveEngine
 from financial_data_stream_processing_engine_spark.session import get_spark
 from financial_data_stream_processing_engine_spark.stream_api import TickStream
 
-__all__ = ["DEFAULT_CONFIG", "EngineConfig", "LiveEngine", "TickStream", "get_spark", "run_live"]
+__all__ = ["DEFAULT_CONFIG", "EngineConfig", "LiveEngine", "TickStream", "get_spark"]
 
 __version__ = "0.1.0"

@@ -3,26 +3,19 @@
 Typed replacement for the reference's ConfigurationManager singleton
 (reference: financial_engine.py:20-56).  The reference keeps a global
 string->value dict; here configuration is an immutable dataclass passed
-explicitly, plus a ``spark.conf`` namespace (``engine.*``) for values
-that must be visible inside Spark jobs.
+explicitly.
 
 Reference config keys preserved (financial_engine.py:25-42):
-  moving_average_window=5, price_alert_threshold=108.0, log_level,
-  per-source fetch intervals.  ``processing_delay_ms`` is a simulation
-  artifact and intentionally dropped (SURVEY.md §2.3).
+  moving_average_window=5, price_alert_threshold=108.0, log_level, and
+  the AlphaVantage fetch interval.  The WebSocket and CSV mocks' fetch
+  intervals become the live engine's ``ws_rows_per_second`` /
+  ``csv_rows_per_second`` rates.  ``processing_delay_ms`` is a
+  simulation artifact and intentionally dropped (SURVEY.md §2.3).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
-
-@dataclass(frozen=True)
-class SourceConfig:
-    """Per-source polling configuration (demo/live sources only)."""
-
-    name: str
-    interval_s: float
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -38,13 +31,8 @@ class EngineConfig:
     price_alert_threshold: float = 108.0
     log_level: str = "INFO"
     symbols: tuple[str, ...] = ("IBM", "MSFT", "AAPL", "GOOGL")
-    sources: tuple[SourceConfig, ...] = field(
-        default_factory=lambda: (
-            SourceConfig("AlphaVantage", 15.0),
-            SourceConfig("WebSocketMock", 0.5),
-            SourceConfig("CSVMock", 2.0),
-        )
-    )
+    #: seconds between the live engine's AlphaVantage polls
+    av_poll_interval_s: float = 15.0
     # Scale knobs (not in the reference — 100 TB discipline, SURVEY.md §7):
     #: state TTL for streaming keyed state; the reference leaks state for
     #: unbounded key sets (financial_engine.py:298), we bound it.

@@ -20,7 +20,8 @@ Spark-first translation:
 * Observer fan-out happens inside one ``foreachBatch``: the batch is
   computed once and each observer sees the same epoch — mirroring one
   subject with three attached observers (reference :352-358) without
-  recomputing state per sink.  Observer isolation is structural
+  recomputing state per sink.  It is the package's only console,
+  logging and alert observer (K1-K3).  Observer isolation is structural
   (DataFrames are immutable), replacing the reference's per-observer
   ``deepcopy``.
 * ``stop()`` stops the StreamingQuery and joins the poller thread.
@@ -40,15 +41,15 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from financial_data_stream_processing_engine_spark.operators.core import clean
+from financial_data_stream_processing_engine_spark.operators.core import clean, union_sources
 from financial_data_stream_processing_engine_spark.session import _state_partitions
-from financial_data_stream_processing_engine_spark.sources.alpha_vantage import AlphaVantageSource
+from financial_data_stream_processing_engine_spark.sources.alpha_vantage import (
+    RAW_SCHEMA,
+    AlphaVantageSource,
+)
 from financial_data_stream_processing_engine_spark.sources.batch import normalize_alpha_vantage
 from financial_data_stream_processing_engine_spark.streaming import sources as stream_sources
 from financial_data_stream_processing_engine_spark.streaming.stateful import streaming_moving_average
-
-#: arrow schema of the AV spool files (mirrors alpha_vantage.RAW_SCHEMA)
-_AV_SPOOL_DDL = "`01. symbol` string, `05. price` string, `06. volume` string, arrival timestamp"
 
 
 class _AvPollerThread(threading.Thread):
@@ -171,16 +172,13 @@ class LiveEngine:
         if self.av_source is not None:
             if self._spool_dir is None:
                 self._spool_dir = tempfile.mkdtemp(prefix="av_spool_")
-            raw = self.spark.readStream.schema(_AV_SPOOL_DDL).parquet(self._spool_dir)
+            raw = self.spark.readStream.schema(RAW_SCHEMA).parquet(self._spool_dir)
             streams.append(
                 normalize_alpha_vantage(raw, ts_expr=F.col("arrival"))
             )
         if not streams:
             raise ValueError("LiveEngine: every source is disabled")
-        out = streams[0]
-        for s in streams[1:]:
-            out = out.unionByName(s)
-        return out
+        return union_sources(*streams)
 
     def _fanout(self, batch_df: DataFrame, epoch_id: int) -> None:
         """One computation, three observers (reference :352-358).
@@ -258,11 +256,9 @@ class LiveEngine:
         if checkpoint_dir:
             writer = writer.option("checkpointLocation", checkpoint_dir)
         if self.av_source is not None:
-            av_interval = next(
-                (s.interval_s for s in self.config.sources if s.name == "AlphaVantage"),
-                15.0,
+            self._poller = _AvPollerThread(
+                self.av_source, self._spool_dir, self.config.av_poll_interval_s
             )
-            self._poller = _AvPollerThread(self.av_source, self._spool_dir, av_interval)
             self._poller.start()
         # writer.start() copies the session conf into the query's own
         # session, so the count set here reaches this query alone
@@ -295,28 +291,19 @@ class LiveEngine:
         the reference, by contrast, drops in-flight rows on shutdown
         (financial_engine.py:397-416).  Only meaningful when the
         continuous rate sources are disabled (they never drain)."""
-        if self._poller is not None:
-            self._poller.stop()
-            self._poller.join(timeout=10)
-            self._poller = None
+        self._stop_poller()
         if self.query is not None:
             self.query.processAllAvailable()
         self.stop()
 
     def stop(self) -> None:
-        if self._poller is not None:
-            self._poller.stop()
-            self._poller.join(timeout=10)
-            self._poller = None
+        self._stop_poller()
         if self.query is not None:
             self.query.stop()
             self.query = None
 
-
-def run_live(
-    spark: SparkSession,
-    config: EngineConfig = DEFAULT_CONFIG,
-    **kwargs,
-) -> LiveEngine:
-    """Build and start a :class:`LiveEngine` (kwargs forwarded)."""
-    return LiveEngine(spark, config=config, **kwargs).start()
+    def _stop_poller(self) -> None:
+        if self._poller is not None:
+            self._poller.stop()
+            self._poller.join(timeout=10)
+            self._poller = None

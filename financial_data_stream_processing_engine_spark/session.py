@@ -128,9 +128,4 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package_path(spark)
-    # Engine-namespace conf, visible to operators that need runtime knobs
-    # (the reference exposed these via its ConfigurationManager singleton).
-    spark.conf.set("engine.moving_average_window", str(config.moving_average_window))
-    spark.conf.set("engine.price_alert_threshold", str(config.price_alert_threshold))
-    spark.conf.set("engine.log_level", config.log_level)
     return spark

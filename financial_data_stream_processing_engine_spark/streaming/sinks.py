@@ -1,28 +1,18 @@
-"""Streaming sinks: the Observer fan-out, Spark-style.
+"""Streaming sinks.
 
-The reference attaches console/logging/alert observers to one subject
-and deep-copies each event per observer (financial_engine.py:59-110;
-SURVEY.md §2.1 O1/K1/K2/K3).  With DataFrames the fan-out is free —
-each sink is its own StreamingQuery over the same immutable upstream —
-and observer isolation is structural, not deepcopy-based.
+The reference's console, logging and alert observers (K1-K3,
+financial_engine.py:59-110, attached at :352-358) live in one place:
+``engine.LiveEngine._fanout``, a ``foreachBatch`` that computes each
+epoch once and hands it to all three.  One StreamingQuery per observer
+would run the stateful moving average once per observer.
 
-``foreachBatch`` callables get (batch_df, epoch_id) with exactly-once
-semantics per epoch when the callable is idempotent on epoch_id.
+This module keeps the in-memory sink that tests and debugging read.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
-
-from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-
-
-def console_sink(df: DataFrame, name: str = "console") -> StreamingQuery:
-    """K1 ConsoleNotifier: print every micro-batch."""
-    return df.writeStream.format("console").option("truncate", "false").queryName(name).start()
 
 
 def memory_sink(df: DataFrame, name: str, output_mode: str = "append") -> StreamingQuery:
@@ -30,85 +20,3 @@ def memory_sink(df: DataFrame, name: str, output_mode: str = "append") -> Stream
     return (
         df.writeStream.format("memory").queryName(name).outputMode(output_mode).start()
     )
-
-
-def logging_sink(
-    df: DataFrame,
-    logger: Callable[[str], None],
-    config: EngineConfig = DEFAULT_CONFIG,
-    name: str = "logging",
-    inner: Callable[[DataFrame, int], None] | None = None,
-) -> StreamingQuery:
-    """K2 LoggingModule: emit row counts per epoch, only when the
-    configured log level is INFO (financial_engine.py:93).
-
-    The count rides an ``Observation`` on the epoch's action instead of
-    a dedicated ``count()`` job (the connected_components pattern):
-
-    * composed with a real per-epoch write (``inner`` — e.g. a parquet
-      append), the observed frame is handed to it and the count falls
-      out of the write's own job — ZERO extra jobs for the log line;
-    * standalone, the observed frame flows into a ``noop`` write — one
-      job, but a pure columnar pass with no aggregation shuffle and no
-      driver transfer (strictly cheaper than ``count()``).
-
-    Below INFO the epoch is delegated (or skipped) without observing
-    anything — a disabled logger costs nothing
-    (financial_engine.py:93's level gate).
-    """
-    from pyspark.sql import Observation
-
-    def emit(batch_df: DataFrame, epoch_id: int) -> None:
-        if config.log_level != "INFO":
-            if inner is not None:
-                inner(batch_df, epoch_id)
-            return
-        obs = Observation(f"{name}_epoch_{epoch_id}")
-        observed = batch_df.observe(obs, F.count(F.lit(1)).alias("n"))
-        if inner is not None:
-            inner(observed, epoch_id)
-        else:
-            observed.write.format("noop").mode("overwrite").save()
-        logger(f"epoch={epoch_id} rows={obs.get['n']}")
-
-    return df.writeStream.foreachBatch(emit).queryName(name).start()
-
-
-def alert_sink(
-    df: DataFrame,
-    on_alert: Callable[[list, int], None],
-    threshold: float | None = None,
-    ma_col: str = "moving_average",
-    config: EngineConfig = DEFAULT_CONFIG,
-    name: str = "alerts",
-    max_alerts_per_epoch: int = 10_000,
-) -> StreamingQuery:
-    """K3 AlertGenerator as a foreachBatch sink.
-
-    Filters each epoch to rows whose moving average exceeds the
-    threshold (strictly greater, financial_engine.py:104) and hands the
-    alerts to the callback as ``on_alert(alerts, n_suppressed)``.  The
-    filter runs engine-side; only actual alerts reach Python, and the
-    per-epoch driver fetch is capped at ``max_alerts_per_epoch`` — a
-    mis-set threshold over a 100 TB stream must not materialize the
-    world on the driver.  ``alerts`` is always a list of ``Row`` and
-    ``n_suppressed`` the exact number of alert rows beyond the cap
-    (0 normally), computed from one ``count_if`` aggregate over the
-    persisted micro-batch — a quiet epoch costs exactly one job and
-    the cap never changes the payload's type.
-    """
-    t = config.price_alert_threshold if threshold is None else threshold
-
-    def emit(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
-        try:
-            cond = F.col(ma_col) > F.lit(t)
-            n_hits = batch_df.agg(F.count_if(cond)).collect()[0][0]
-            if not n_hits:
-                return
-            alerts = batch_df.filter(cond).limit(max_alerts_per_epoch).collect()
-            on_alert(alerts, n_hits - len(alerts))
-        finally:
-            batch_df.unpersist()
-
-    return df.writeStream.foreachBatch(emit).queryName(name).start()

@@ -22,7 +22,7 @@ import time
 import pytest
 
 from financial_data_stream_processing_engine_spark import engine as engine_module
-from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, SourceConfig
+from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG
 from financial_data_stream_processing_engine_spark.engine import LiveEngine
 from financial_data_stream_processing_engine_spark.sources.alpha_vantage import AlphaVantageSource
 
@@ -51,11 +51,7 @@ def test_live_engine_end_to_end(spark, tmp_path):
         # row on IBM would legitimately inherit AV's high average and
         # alert with source=WebSocketMock.
         symbols=("EURUSD", "GBPUSD", "USDJPY"),
-        sources=(
-            SourceConfig("AlphaVantage", 0.05),
-            SourceConfig("WebSocketMock", 0.0),
-            SourceConfig("CSVMock", 0.0),
-        ),
+        av_poll_interval_s=0.05,
     )
     alerts: list = []
     logs: list[str] = []
@@ -94,6 +90,15 @@ def test_live_engine_end_to_end(spark, tmp_path):
     assert engine.query is None
 
 
+def test_start_with_every_source_disabled_raises(spark):
+    """With no rate source and no AlphaVantage source there is nothing
+    to union: ``start()`` refuses, and no query is left running."""
+    engine = LiveEngine(spark, ws_rows_per_second=0, csv_rows_per_second=0)
+    with pytest.raises(ValueError, match="every source is disabled"):
+        engine.start()
+    assert engine.query is None
+
+
 def _state_partitions_of(query) -> int:
     """The state partition count a query ran with, read from its
     progress (the first batch that reports a state operator)."""
@@ -111,11 +116,7 @@ def _restart_across_checkpoint(spark, tmp_path, monkeypatch=None, phase1_partiti
     delivered BEFORE the restart.  With ``phase1_partitions``, phase 1
     runs with the state partition rule patched to return it.  Returns
     each phase's state partition count."""
-    cfg = dataclasses.replace(
-        DEFAULT_CONFIG,
-        state_ttl_ms=None,
-        sources=(SourceConfig("AlphaVantage", 0.02),),
-    )
+    cfg = dataclasses.replace(DEFAULT_CONFIG, state_ttl_ms=None, av_poll_interval_s=0.02)
     counter = itertools.count()
 
     def fetch(url: str, timeout_s: float) -> dict:
@@ -332,3 +333,30 @@ def test_fanout_busy_epoch_evaluates_rows_once(spark):
     assert len(alerts) == 1 and len(alerts[0][0]) == 4 and alerts[0][1] == 0
     assert len(engine.recent) == 5
     assert acc.value == 8, f"rows evaluated {acc.value}x, expected once each"
+
+
+def test_fanout_console_prints_epoch_and_evaluates_rows_once(spark, capsys):
+    """K1 ConsoleNotifier: with ``enable_console`` the epoch's rows are
+    printed, and the print reads the persisted epoch, so an upstream
+    accumulator still counts each row once."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType
+
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf(DoubleType())
+    def tap(v):
+        acc.add(1)
+        return v
+
+    engine = LiveEngine(spark, logger=lambda line: None, enable_console=True, keep_recent=0)
+    batch = spark.createDataFrame(
+        [("EURUSD", 1.25), ("GBPUSD", 2.5), ("USDJPY", 3.75)],
+        "symbol string, moving_average double",
+    ).withColumn("moving_average", tap("moving_average"))
+    engine._fanout(batch, epoch_id=0)
+    out = capsys.readouterr().out
+    assert "moving_average" in out
+    for sym, ma in (("EURUSD", "1.25"), ("GBPUSD", "2.5"), ("USDJPY", "3.75")):
+        assert any(sym in line and ma in line for line in out.splitlines()), (sym, out)
+    assert acc.value == 3, f"rows evaluated {acc.value}x, expected once each"

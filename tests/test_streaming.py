@@ -145,19 +145,57 @@ def test_session_window_matches_batch(spark, tick_dir):
     assert got == exp
 
 
-def test_alert_sink_fires_like_batch_filter(spark, tick_dir):
-    collected = []
-    ma = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5, ttl_ms=None)
-    q = sinks.alert_sink(
-        ma, on_alert=lambda rows, n_suppressed: collected.extend(rows), threshold=108.0
+def _drive_fanout(spark, tick_dir, log_level, on_alert, logger):
+    """Run the live engine's observer fan-out as the ``foreachBatch`` of
+    a streamed moving average (n=5) over the shared tick stream."""
+    from financial_data_stream_processing_engine_spark.config import EngineConfig
+    from financial_data_stream_processing_engine_spark.engine import LiveEngine
+
+    engine = LiveEngine(
+        spark,
+        config=EngineConfig(price_alert_threshold=108.0, log_level=log_level),
+        on_alert=on_alert,
+        logger=logger,
+        keep_recent=0,
     )
+    ma = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5, ttl_ms=None)
+    q = ma.writeStream.foreachBatch(engine._fanout).start()
     q.processAllAvailable()
     q.stop()
 
+
+def test_alert_sink_fires_like_batch_filter(spark, tick_dir):
+    """The fan-out's alert observer (K3) receives exactly the rows the
+    batch ``alerts`` filter selects, with nothing suppressed."""
+    collected: list = []
+    suppressed: list[int] = []
+
+    def on_alert(rows, n_suppressed):
+        collected.extend(rows)
+        suppressed.append(n_suppressed)
+
+    _drive_fanout(spark, tick_dir, "ERROR", on_alert, lambda line: None)
+
     batch_ma = moving_average(spark.read.parquet(tick_dir), n=5, order_by=("ts", "id"))
-    expected = alerts(batch_ma, threshold=108.0).count()
-    assert len(collected) == expected
+    expected = {(r.symbol, r.id) for r in alerts(batch_ma, threshold=108.0).collect()}
+    assert expected
+    assert len(collected) == len(expected)
+    assert {(r.symbol, r.id) for r in collected} == expected
     assert all(r.moving_average > 108.0 for r in collected)
+    assert sum(suppressed) == 0
+
+
+def test_logging_sink_respects_log_level(spark, tick_dir):
+    """The fan-out's logging observer (K2) writes one line per epoch at
+    INFO, whose counts cover every row once, and nothing at ERROR."""
+    lines: list[str] = []
+    _drive_fanout(spark, tick_dir, "INFO", lambda rows, n: None, lines.append)
+    assert lines and all(l.startswith("epoch=") for l in lines)
+    assert sum(int(l.split("rows=")[1]) for l in lines) == 240
+
+    lines2: list[str] = []
+    _drive_fanout(spark, tick_dir, "ERROR", lambda rows, n: None, lines2.append)
+    assert lines2 == []
 
 
 def test_rate_source_produces_normalized_ticks(spark):
@@ -186,28 +224,6 @@ def test_csv_replay_cycles_reference_rows(spark):
     # the reference's 3 embedded CSV rows, cycled (financial_engine.py:246,:259)
     assert {r.symbol for r in rows} == {"MSFT_mock", "TSLA_mock", "NVDA_mock"}
     assert {r.price for r in rows} == {205.50, 880.10, 550.25}
-
-
-def test_logging_sink_respects_log_level(spark, tick_dir):
-    from financial_data_stream_processing_engine_spark.config import EngineConfig
-
-    lines: list[str] = []
-    q = sinks.logging_sink(
-        _stream(spark, tick_dir), logger=lines.append, config=EngineConfig(log_level="INFO"),
-        name="log_on",
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert lines and "rows=240" in lines[0]
-
-    lines2: list[str] = []
-    q = sinks.logging_sink(
-        _stream(spark, tick_dir), logger=lines2.append,
-        config=EngineConfig(log_level="ERROR"), name="log_off",
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert lines2 == []
 
 
 def test_stateful_ma_with_ttl_processes_data(spark, tick_dir):
@@ -337,43 +353,6 @@ def test_streaming_zscore_alerts_matches_batch(spark, tmp_path):
     exp = {r.event_id: (r.baseline_mean, r.baseline_sd, r.zscore) for r in batch}
     assert set(got) == set(exp) == {25}
     assert got[25] == exp[25]  # bitwise: Decimal-replicated window sums
-
-
-def test_logging_sink_count_rides_inner_action(spark, tick_dir):
-    """The INFO-level row count comes from an Observation riding the
-    epoch's own write — not a separate count() job.  An accumulator
-    UDF in the pipeline proves each row is evaluated exactly once: a
-    dedicated counting job would re-run the pipeline and double it."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType
-    from financial_data_stream_processing_engine_spark.config import EngineConfig
-
-    acc = spark.sparkContext.accumulator(0)
-
-    @F.udf(StringType())
-    def tap(v):
-        acc.add(1)
-        return v
-
-    lines: list[str] = []
-    epochs: list[int] = []
-
-    def inner(batch_df, epoch_id):
-        batch_df.write.format("noop").mode("overwrite").save()
-        epochs.append(epoch_id)
-
-    q = sinks.logging_sink(
-        _stream(spark, tick_dir).withColumn("id", tap("id")),
-        logger=lines.append,
-        config=EngineConfig(log_level="INFO"),
-        name="log_obs",
-        inner=inner,
-    )
-    q.processAllAvailable()
-    q.stop()
-    assert lines and "rows=240" in lines[0]
-    assert epochs  # the inner write ran and delivered the observation
-    assert acc.value == 240, f"rows evaluated {acc.value}x, expected once each"
 
 
 def test_streaming_pattern_distance_matches_batch_bitwise(spark, sf_dir):
