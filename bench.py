@@ -229,17 +229,47 @@ def _calibrate(spark, reps: int = 3) -> dict:
     }
 
 
-def _best_of(fn, spark, sf_dir: str, reps: int) -> float:
-    """Best-of-``reps`` wall time of building ``fn(spark, sf_dir)`` and
-    forcing it through the noop sink: the first run pays one-time
-    codegen/planning cost; the min reflects steady-state execution
-    (what a long-running cluster job actually sees)."""
-    best = float("inf")
-    for _ in range(reps):
+def bench_session(app_name: str, master: str | None):
+    """The timing tools' shared setup: a session from ``get_spark``, the
+    catalog's ``queries()``, and one trivial warm-up query so the first
+    timed entry doesn't absorb JVM/codegen startup."""
+    from financial_data_stream_processing_engine_spark.session import get_spark
+
+    spark = get_spark(app_name, master=master)
+    import __spark_entry__ as entrymod
+
+    qs = entrymod.queries()
+    spark.range(1000).selectExpr("sum(id)").collect()
+    return spark, qs
+
+
+def local_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, 32 slots by default."""
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+
+
+def time_reps(fn, spark, sf_dir: str, reps: int, label: str | None = None):
+    """Wall time of each of ``reps`` runs of building ``fn(spark,
+    sf_dir)`` and forcing it through the noop sink, and the first run's
+    frame (for its plan).  The first run pays one-time codegen/planning
+    cost; the min reflects steady-state execution (what a long-running
+    cluster job actually sees).  With ``label``, each run's jobs carry
+    the description ``{label}:rep{i}``."""
+    sc = spark.sparkContext
+    times: list[float] = []
+    first = None
+    for i in range(reps):
+        if label:
+            sc.setJobDescription(f"{label}:rep{i}")
         t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return best
+        df = fn(spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        times.append(time.time() - t0)
+        if first is None:
+            first = df
+    if label:
+        sc.setJobDescription(None)
+    return times, first
 
 
 def apply_retry_rule(
@@ -283,20 +313,10 @@ def _trailing_records() -> dict[str, float]:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
-    from financial_data_stream_processing_engine_spark.session import get_spark
-
-    spark = get_spark("bench", master=f"local[{cpus}]")
-
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
+    spark, qs = bench_session("bench", local_master())
     names = [n for n in HEADLINE if n in qs]
-    # Warm the JVM/codegen path once on a trivial query so the first
-    # measured query doesn't absorb session startup.
-    spark.range(1000).selectExpr("sum(id)").collect()
 
     # Era calibration first (VERDICT r16 #2): 3 reps of the fixed
     # synthetic workload; its median / CAL_REFERENCE_SEC is the era
@@ -312,7 +332,7 @@ def main() -> int:
     retimed: dict[str, dict] = {}
     timings: dict[str, float] = {}
     for name in names:
-        best = _best_of(qs[name], spark, sf_dir, max(1, reps))
+        best = min(time_reps(qs[name], spark, sf_dir, max(1, reps))[0])
         # Retry rule (VERDICT r16 #2): if even the best-of-N exceeds
         # the trailing driver record by >2x, the number is likelier a
         # transient (GC pause, load spike spanning all reps) than a
@@ -320,7 +340,7 @@ def main() -> int:
         # better, reporting BOTH so nothing is hidden (the contract
         # lives in apply_retry_rule, pinned by tests).
         def _retime(name=name) -> float:
-            return _best_of(qs[name], spark, sf_dir, 2)
+            return min(time_reps(qs[name], spark, sf_dir, 2)[0])
 
         best = apply_retry_rule(name, best, trailing.get(name), _retime, retimed)
         timings[name] = round(best, 3)

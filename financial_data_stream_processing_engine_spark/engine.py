@@ -33,7 +33,6 @@ in; tests inject one with a canned ``fetch`` callable.
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 import time
 from collections.abc import Callable
@@ -41,6 +40,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from financial_data_stream_processing_engine_spark.config import DEFAULT_CONFIG, EngineConfig
+from financial_data_stream_processing_engine_spark.io_utils import scratch_dir
 from financial_data_stream_processing_engine_spark.operators.core import clean, union_sources
 from financial_data_stream_processing_engine_spark.session import _state_partitions
 from financial_data_stream_processing_engine_spark.sources.alpha_vantage import (
@@ -73,15 +73,11 @@ class _AvPollerThread(threading.Thread):
     def run(self) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = pa.schema(
-            [
-                ("01. symbol", pa.string()),
-                ("05. price", pa.string()),
-                ("06. volume", pa.string()),
-                ("arrival", pa.timestamp("us")),
-            ]
-        )
+        # ``arrival`` becomes timestamp[us, tz=UTC]: the file stores the
+        # poll instant, whatever the reading session's time zone
+        schema = to_arrow_schema(RAW_SCHEMA)
         while not self._halt.is_set():
             row = self.source.poll_once()
             if row is not None:
@@ -171,7 +167,9 @@ class LiveEngine:
             )
         if self.av_source is not None:
             if self._spool_dir is None:
-                self._spool_dir = tempfile.mkdtemp(prefix="av_spool_")
+                # engine-owned, so removed at interpreter exit; a
+                # caller-supplied spool_dir is never removed
+                self._spool_dir = scratch_dir("av_spool_")
             raw = self.spark.readStream.schema(RAW_SCHEMA).parquet(self._spool_dir)
             streams.append(
                 normalize_alpha_vantage(raw, ts_expr=F.col("arrival"))

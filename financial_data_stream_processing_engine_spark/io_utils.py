@@ -16,8 +16,6 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from financial_data_stream_processing_engine_spark.schema import TABLE_NAMES
-
 
 def scratch_dir(prefix: str) -> str:
     """``tempfile.mkdtemp`` that cleans up at interpreter exit.
@@ -72,16 +70,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if field.dataType.typeName().startswith("timestamp"):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all driver tables as a name->DataFrame dict."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all tables and register them as temp views (for spark.sql)."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

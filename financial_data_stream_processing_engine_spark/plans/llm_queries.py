@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from financial_data_stream_processing_engine_spark.functions.numeric import davg_sql, qcast_sql, qint_sql
 from financial_data_stream_processing_engine_spark.io_utils import load_table, scratch_dir
 from financial_data_stream_processing_engine_spark.operators import dedup, multimodal, similarity, text
+from financial_data_stream_processing_engine_spark.plans import media_fixtures
 from financial_data_stream_processing_engine_spark.plans.catalog import register
 from financial_data_stream_processing_engine_spark.streaming.sources import _sliced_feed
 
@@ -58,6 +59,16 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
+
+
+def _fixture_media(spark: SparkSession, sf_dir: str, build, kind: str, mime: str) -> DataFrame:
+    """One media row per document whose payload is ``build(doc_id)``, a
+    :mod:`plans.media_fixtures` builder."""
+    docs = _docs(spark, sf_dir).select("doc_id")
+    return multimodal.as_media(
+        media_fixtures.payload_frame(docs, build), id_col="doc_id",
+        payload=F.col("payload"), kind=kind, mime=mime,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -925,15 +936,6 @@ def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sha_byte(i: int) -> str:
-    """DuckDB expression: byte ``i`` (0-based) of a lowercase sha256 hex
-    digest held in column ``sha`` — mirrors ``hashlib.sha256(...).digest()[i]``."""
-    return (
-        f"((STRPOS('0123456789abcdef', SUBSTR(sha, {2 * i + 1}, 1)) - 1) * 16"
-        f" + (STRPOS('0123456789abcdef', SUBSTR(sha, {2 * i + 2}, 1)) - 1))"
-    )
-
-
 # RETIRED r13 (VERDICT r12 next-step #7): the fake=True
 # multimodal_image_features / multimodal_audio_features catalog
 # entries — the sha-derived stand-ins predate the real codec families
@@ -1049,55 +1051,6 @@ def _md5_sum(f: str) -> str:
     return " + ".join(f.format(b=_hex_byte("m", i)) for i in range(16))
 
 
-def _md5_png_generator():
-    """mapInPandas generator: doc_id → 4×4 grayscale PNG whose 16 pixels
-    are the md5(doc_id) digest bytes, one scanline per PNG filter type
-    0/1/2/3.  Nested def so cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                px = np.frombuffer(
-                    hashlib.md5(str(did).encode()).digest(), np.uint8
-                ).reshape(4, 4)
-                scan, prev = b"", np.zeros(4, np.int32)
-                for y, f in enumerate((0, 1, 2, 3)):
-                    line = px[y].astype(np.int32)
-                    left = np.concatenate([[0], line[:-1]])
-                    if f == 0:
-                        out = line
-                    elif f == 1:
-                        out = line - left
-                    elif f == 2:
-                        out = line - prev
-                    else:
-                        out = line - ((left + prev) >> 1)
-                    scan += bytes([f]) + bytes((out & 0xFF).astype(np.uint8))
-                    prev = line
-                ihdr = struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
-
-
 @register(
     "multimodal_png_roundtrip",
     sql=f"""
@@ -1121,84 +1074,8 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise.  A corrupted chunk parse, inflate, unfilter pass, or luma
     reduction all break the match.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_png_generator()
-    pngs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        pngs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/png",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.png_4x4, "image", "image/png")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_png_adam7_generator():
-    """mapInPandas generator: doc_id → 8×8 grayscale INTERLACED
-    (Adam7) PNG whose 64 raster-order pixels are md5(doc_id) digest
-    bytes tiled 4× — the seven reduced passes each carry their standard
-    (x0, y0, dx, dy) sub-grid, independently filtered with a rotating
-    filter type (pass+row) % 5 so all five PNG filters occur inside
-    sub-images.  Nested def so cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        PASSES = (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        )
-
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        def filt(f: int, line, prev):
-            left = np.concatenate([[0], line[:-1]])
-            if f == 0:
-                out = line
-            elif f == 1:
-                out = line - left
-            elif f == 2:
-                out = line - prev
-            elif f == 3:
-                out = line - ((left + prev) >> 1)
-            else:  # Paeth
-                c = np.concatenate([[0], prev[:-1]])
-                p = left + prev - c
-                pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - c)
-                pr = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, c)
-                )
-                out = line - pr
-            return bytes((out & 0xFF).astype(np.uint8))
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = hashlib.md5(str(did).encode()).digest()
-                px = np.array([d[i % 16] for i in range(64)], np.int32).reshape(8, 8)
-                scan = b""
-                for pi, (x0, y0, dx, dy) in enumerate(PASSES):
-                    sub = px[y0::dy, x0::dx]
-                    prev = np.zeros(sub.shape[1], np.int32)
-                    for r in range(sub.shape[0]):
-                        line = sub[r]
-                        scan += bytes([(pi + r) % 5]) + filt((pi + r) % 5, line, prev)
-                        prev = line
-                ihdr = struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 1)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
 
 
 @register(
@@ -1226,97 +1103,8 @@ def multimodal_png_adam7_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     mean cannot see) is pinned by tests/test_multimodal_codecs.py
     against the raster recipe pixel-for-pixel.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_png_adam7_generator()
-    pngs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        pngs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/png",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.png_adam7, "image", "image/png")
     return multimodal.decode_image_features(media, fake=False)
-
-
-#: fixed 16-color GIF fixture palette: i → (17i, 255−17i, (37i+11)%256)
-_GIF_PALETTE = [(17 * i, 255 - 17 * i, (37 * i + 11) % 256) for i in range(16)]
-
-
-def _md5_gif_generator():
-    """mapInPandas generator: doc_id → 4×4 INTERLACED GIF89a whose 16
-    pixels index the fixed 16-color palette by the md5 digest's
-    nibbles, compressed with a REAL greedy longest-match LZW encoder
-    (variable code width, clear/EOI, LSB-first packing) and preceded by
-    a graphics-control extension the decoder must skip.  Nested def so
-    cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        palette = b"".join(bytes(c) for c in _GIF_PALETTE)
-        mcs = 4
-
-        def lzw_encode(indices):
-            clear, eoi, width = 1 << mcs, (1 << mcs) + 1, mcs + 1
-            table = {(i,): i for i in range(1 << mcs)}
-            next_code = eoi + 1
-            bits = []
-
-            def emit(code, wd):
-                for i in range(wd):
-                    bits.append((code >> i) & 1)
-
-            emit(clear, width)
-            buf = ()
-            for px in indices:
-                cand = buf + (int(px),)
-                if cand in table:
-                    buf = cand
-                    continue
-                emit(table[buf], width)
-                if next_code < 4096:
-                    table[cand] = next_code
-                    next_code += 1
-                    if next_code > (1 << width) and width < 12:
-                        width += 1
-                buf = (int(px),)
-            if buf:
-                emit(table[buf], width)
-            emit(eoi, width)
-            while len(bits) % 8:
-                bits.append(0)
-            out = bytearray()
-            for i in range(0, len(bits), 8):
-                v = 0
-                for j in range(8):
-                    v |= bits[i + j] << j
-                out.append(v)
-            return bytes(out)
-
-        def build(did) -> bytes:
-            hx = hashlib.md5(str(did).encode()).hexdigest()
-            idx = [[int(hx[4 * r + c], 16) for c in range(4)] for r in range(4)]
-            rows = []
-            for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-                rows.extend(range(start, 4, step))
-            seq = [v for r in rows for v in idx[r]]
-            out = b"GIF89a" + struct.pack("<HHBBB", 4, 4, 0x80 | 3, 0, 0) + palette
-            out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE, skipped
-            out += b"\x2c" + struct.pack("<HHHHB", 0, 0, 4, 4, 0x40)
-            out += bytes([mcs])
-            data = lzw_encode(seq)
-            for i in range(0, len(data), 255):
-                ch = data[i : i + 255]
-                out += bytes([len(ch)]) + ch
-            return out + b"\x00\x3b"
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(d) for d in pdf["doc_id"]]}
-            )
-
-    return gen
 
 
 def _gif_oracle_sql() -> str:
@@ -1327,7 +1115,7 @@ def _gif_oracle_sql() -> str:
     sum in closed form (r_i = x_i + x_{i+8}, then the balanced
     4-2-1 combine) — the ``multimodal_jpeg_420_roundtrip`` precedent
     generalized to 16 arbitrary values."""
-    lumas = [(0.299 * r + 0.587 * g) + 0.114 * bl for r, g, bl in _GIF_PALETTE]
+    lumas = [(0.299 * r + 0.587 * g) + 0.114 * bl for r, g, bl in media_fixtures.GIF_PALETTE]
     # scientific notation forces DOUBLE literals (plain decimals parse
     # as DECIMAL in DuckDB — the documented dtype-drift gotcha)
     lit = "[" + ", ".join(
@@ -1352,44 +1140,6 @@ SELECT doc_id AS media_id, 'image' AS kind,
        ({total}) / 16.0 / 255.0 AS mean_luma
 FROM acc
 """
-
-
-def _md5_bmp_generator():
-    """mapInPandas generator: doc_id → 4×4 24-bit bottom-up BMP whose
-    pixel (r, g, b) at raster position i is md5 bytes (i, (i+5)%16,
-    (i+11)%16) — written as BGR rows bottom-up with 4-byte padding
-    (w=4 → 12-byte rows, no pad, so the padding path is pinned by the
-    pytest's odd widths instead).  Nested def so cloudpickle ships it
-    by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        def build(did) -> bytes:
-            d = hashlib.md5(str(did).encode()).digest()
-            stride = (4 * 3 + 3) & ~3
-            rows = b""
-            for y in range(3, -1, -1):  # bottom-up storage
-                row = b""
-                for x in range(4):
-                    i = 4 * y + x
-                    r, g, bl = d[i], d[(i + 5) % 16], d[(i + 11) % 16]
-                    row += bytes([bl, g, r])  # BGR on disk
-                rows += row + b"\x00" * (stride - len(row))
-            dib = struct.pack("<IiiHHIIiiII", 40, 4, 4, 1, 24, 0, len(rows), 2835, 2835, 0, 0)
-            off = 14 + 40
-            head = b"BM" + struct.pack("<IHHI", off + len(rows), 0, 0, off)
-            return head + dib + rows
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(d) for d in pdf["doc_id"]]}
-            )
-
-    return gen
 
 
 def _bmp_oracle_sql() -> str:
@@ -1440,13 +1190,7 @@ def multimodal_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding and malformed variants are pinned by
     tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_bmp_generator()
-    bmps = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        bmps, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/bmp",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.bmp, "image", "image/bmp")
     return multimodal.decode_image_features(media, fake=False)
 
 
@@ -1467,97 +1211,8 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and malformed variants are pinned by
     tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_gif_generator()
-    gifs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        gifs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/gif",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.gif, "image", "image/gif")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_png4bit_generator():
-    """mapInPandas generator: doc_id → 8×4 four-BIT grayscale PNG,
-    Adam7-INTERLACED, whose 32 samples are the md5 digest's nibbles in
-    hex order — six non-empty reduced passes (some one sample wide, so
-    scanlines carry padding bits), every pass independently filtered
-    with a rotating filter.  Exercises sub-byte MSB-first unpacking,
-    per-pass bit re-packing, padding-bit discard, and the fbpp=1
-    filter lane at once.  Nested def so cloudpickle ships it by
-    value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        PASSES = (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        )
-
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        def pack4(row):
-            bits = []
-            for v in row:
-                for i in (3, 2, 1, 0):
-                    bits.append((int(v) >> i) & 1)
-            while len(bits) % 8:
-                bits.append(0)
-            return np.packbits(np.array(bits, np.uint8)).tobytes()
-
-        def filt(f: int, line, prev):
-            left = np.concatenate([[0], line[:-1]])
-            if f == 0:
-                out = line
-            elif f == 1:
-                out = line - left
-            elif f == 2:
-                out = line - prev
-            elif f == 3:
-                out = line - ((left + prev) >> 1)
-            else:
-                c = np.concatenate([[0], prev[:-1]])
-                p = left + prev - c
-                pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - c)
-                pr = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, c)
-                )
-                out = line - pr
-            return bytes([f]) + bytes((out & 0xFF).astype(np.uint8))
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                hx = hashlib.md5(str(did).encode()).hexdigest()
-                px = np.array([int(c, 16) for c in hx], np.uint8).reshape(4, 8)
-                scan = b""
-                for pi, (x0, y0, dx, dy) in enumerate(PASSES):
-                    sub = px[y0::dy, x0::dx]
-                    if sub.shape[0] == 0 or sub.shape[1] == 0:
-                        continue
-                    prev = np.zeros(len(pack4(sub[0])), np.int32)
-                    for r in range(sub.shape[0]):
-                        line = np.frombuffer(pack4(sub[r]), np.uint8).astype(np.int32)
-                        scan += filt((pi + r) % 5, line, prev)
-                        prev = line
-                ihdr = struct.pack(">IIBBBBB", 8, 4, 4, 0, 0, 0, 1)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
 
 
 @register(
@@ -1590,84 +1245,8 @@ def multimodal_png_4bit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     — bitwise.  1/2-bit depths and sub-byte palette images are pinned
     pixel-for-pixel by tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_png4bit_generator()
-    pngs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        pngs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/png",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.png_4bit, "image", "image/png")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_png16_generator():
-    """mapInPandas generator: doc_id → 4×4 grayscale 16-BIT PNG whose
-    big-endian samples are ``md5[i]·256 + md5[(i+1) mod 16]`` (every
-    digest byte appears once as a high and once as a low byte, so the
-    sample total is exactly 257·Σdigest — SQL-restatable).  Rows are
-    filtered Paeth/Sub/Up/Average with the 2-byte-per-pixel lane
-    offset, the part an 8-bit-only unfilter gets wrong.  Nested def so
-    cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-        import zlib
-
-        import numpy as np
-        import pandas as pd
-
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        def filt(f: int, line, prev, bpp: int):
-            left = (
-                np.concatenate([np.zeros(bpp, np.int32), line[:-bpp]])
-                if len(line) > bpp else np.zeros_like(line)
-            )
-            if f == 1:
-                out = line - left
-            elif f == 2:
-                out = line - prev
-            elif f == 3:
-                out = line - ((left + prev) >> 1)
-            else:  # Paeth
-                c = (
-                    np.concatenate([np.zeros(bpp, np.int32), prev[:-bpp]])
-                    if len(prev) > bpp else np.zeros_like(prev)
-                )
-                p = left + prev - c
-                pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - c)
-                pr = np.where(
-                    (pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, c)
-                )
-                out = line - pr
-            return bytes([f]) + bytes((out & 0xFF).astype(np.uint8))
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                d = hashlib.md5(str(did).encode()).digest()
-                be = np.zeros((4, 4, 2), np.uint8)
-                for i in range(16):
-                    be[i // 4, i % 4, 0] = d[i]
-                    be[i // 4, i % 4, 1] = d[(i + 1) % 16]
-                rows = be.reshape(4, 8).astype(np.int32)
-                scan, prev = b"", np.zeros(8, np.int32)
-                for y, f in enumerate((4, 1, 2, 3)):
-                    scan += filt(f, rows[y], prev, 2)
-                    prev = rows[y]
-                ihdr = struct.pack(">IIBBBBB", 4, 4, 16, 0, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
 
 
 @register(
@@ -1696,105 +1275,8 @@ def multimodal_png_16bit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     Adam7 16-bit variants are pinned pixel-for-pixel by
     tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_png16_generator()
-    pngs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        pngs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/png",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.png_16bit, "image", "image/png")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_jpeg_generator():
-    """mapInPandas generator: doc_id → 16×16 baseline grayscale JPEG of
-    four 8×8 blocks whose constant values are md5(doc_id) bytes 0-3.
-    All-ones quantization + constant (DC-only) blocks make the decode
-    EXACT: DCT of a constant block has a single integer DC coefficient,
-    so dequantize+IDCT reproduces the constants bit-for-bit after
-    rounding — which is what lets DuckDB state the expected mean luma
-    from the md5 bytes alone.  The AC path is exercised through its
-    Huffman table + EOB codes.  Nested def: cloudpickle by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        # canonical Huffman: standard Annex-K luminance DC table
-        dc_bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        dc_vals = list(range(12))
-        dc_code = {}
-        code = 0
-        vi = 0
-        for ln in range(1, 17):
-            for _ in range(dc_bits[ln - 1]):
-                dc_code[dc_vals[vi]] = (ln, code)
-                code += 1
-                vi += 1
-            code <<= 1
-        # minimal AC table: the single symbol EOB(0x00) with code '0'
-        ac_bits = [1] + [0] * 15
-        ac_vals = [0x00]
-        eob = (1, 0)
-
-        class BitWriter:
-            def __init__(self):
-                self.out = bytearray()
-                self.acc = 0
-                self.n = 0
-
-            def put(self, val: int, ln: int) -> None:
-                for i in range(ln - 1, -1, -1):
-                    self.acc = (self.acc << 1) | ((val >> i) & 1)
-                    self.n += 1
-                    if self.n == 8:
-                        self.out.append(self.acc)
-                        if self.acc == 0xFF:
-                            self.out.append(0x00)  # byte stuffing
-                        self.acc, self.n = 0, 0
-
-            def flush(self) -> bytes:
-                if self.n:
-                    self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                return bytes(self.out)
-
-        def seg(marker: int, payload: bytes) -> bytes:
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        head = (
-            b"\xff\xd8"
-            + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            + seg(0xC0, struct.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-            + seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-            + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-            + seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        )
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                digest = hashlib.md5(str(did).encode()).digest()
-                bw = BitWriter()
-                pred = 0
-                for c in digest[:4]:  # MCU raster order (0,0)(0,1)(1,0)(1,1)
-                    dc = 8 * (int(c) - 128)
-                    diff = dc - pred
-                    pred = dc
-                    size = diff.bit_length() if diff != 0 else 0
-                    ln, cd = dc_code[size]
-                    bw.put(cd, ln)
-                    if size:
-                        bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-                    bw.put(eob[1], eob[0])
-                payloads.append(head + bw.flush() + b"\xff\xd9")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
 
 
 @register(
@@ -1819,176 +1301,14 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDCT) through the Arrow mapInPandas path (fake=False).
 
     Oracle strategy: DC-only constant blocks survive quantize/IDCT
-    exactly (see _md5_jpeg_generator), so DuckDB restates dimensions
+    exactly (see media_fixtures.jpeg), so DuckDB restates dimensions
     and the exact mean luma from the md5 bytes — any corruption in the
     marker walk, Huffman tables, bit reader, predictor, or IDCT breaks
     the value hash.  The AC run/size path beyond EOB is covered by
     tests/test_multimodal_codecs.py against synthetic coefficients.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_jpeg_generator()
-    jpegs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        jpegs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/jpeg",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.jpeg, "image", "image/jpeg")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_jpeg_progressive_generator():
-    """mapInPandas generator: doc_id → 16×16 PROGRESSIVE (SOF2)
-    grayscale JPEG of four 8×8 blocks, decoded over SIX scans:
-    DC-first (Al=1), AC band 1-5 first (Al=1), AC band 6-63 first
-    (Al=1), a MID-STREAM DHT that redefines both AC table ids, AC band
-    1-5 refinement (corrections consumed inside a cross-block EOB4
-    run), AC band 6-63 refinement (newly-significant ±1 insertion),
-    and a DC refinement bit per block.  Pixel recipe: block i's
-    constant is md5 byte i — the DC LSB (md5-derived, sent only in the
-    DC refinement scan) and the ±2 / ±1 AC coefficients perturb each
-    pixel by < 0.5, so rint() restores the exact constants and the
-    baseline-roundtrip oracle applies unchanged.  Nested def so
-    cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        def enc_map(bits, vals):
-            m, code, vi = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    m[vals[vi]] = (ln, code)
-                    code += 1
-                    vi += 1
-                code <<= 1
-            return m
-
-        dc_bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        dc_vals = list(range(12))
-        DC = enc_map(dc_bits, dc_vals)
-        # first-scan AC tables vs post-DHT refinement tables: same ids
-        # (0 and 1), DIFFERENT code→symbol meanings — decodes only if
-        # the decoder snapshots tables per scan
-        A0_1B, A0_1V = [1, 2] + [0] * 14, [0x11, 0x00, 0x10]
-        A1_1B, A1_1V = [1] + [0] * 15, [0x20]
-        A0_2B, A0_2V = [1] + [0] * 15, [0x20]
-        A1_2B, A1_2V = [1, 2] + [0] * 14, [0x41, 0x00, 0x10]
-        AC0_V1, AC1_V1 = enc_map(A0_1B, A0_1V), enc_map(A1_1B, A1_1V)
-        AC0_V2, AC1_V2 = enc_map(A0_2B, A0_2V), enc_map(A1_2B, A1_2V)
-
-        class BW:
-            def __init__(self):
-                self.out, self.acc, self.n = bytearray(), 0, 0
-
-            def put(self, val, ln):
-                for i in range(ln - 1, -1, -1):
-                    self.acc = (self.acc << 1) | ((val >> i) & 1)
-                    self.n += 1
-                    if self.n == 8:
-                        self.out.append(self.acc)
-                        if self.acc == 0xFF:
-                            self.out.append(0x00)
-                        self.acc, self.n = 0, 0
-
-            def code(self, m, sym):
-                ln, cd = m[sym]
-                self.put(cd, ln)
-
-            def flush(self):
-                if self.n:
-                    self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                return bytes(self.out)
-
-        def seg(marker, payload):
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        def dht(tc, th, bits, vals):
-            return seg(0xC4, bytes([tc << 4 | th]) + bytes(bits) + bytes(vals))
-
-        def sos(tdta, ss, se, ah, al):
-            return seg(0xDA, bytes([1, 1, tdta, ss, se, ah << 4 | al]))
-
-        head = (
-            b"\xff\xd8"
-            + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            + seg(0xC2, struct.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-            + dht(0, 0, dc_bits, dc_vals)
-            + dht(1, 0, A0_1B, A0_1V)
-            + dht(1, 1, A1_1B, A1_1V)
-        )
-        redefine = dht(1, 0, A0_2B, A0_2V) + dht(1, 1, A1_2B, A1_2V)
-
-        def build(did) -> bytes:
-            d = hashlib.md5(str(did).encode()).digest()
-            consts = [d[0], d[1], d[2], d[3]]
-            lsb = [0, 0, d[6] & 1, d[7] & 1]
-            dcs = [8 * (consts[i] - 128) + lsb[i] for i in range(4)]
-            ac2 = [2 if d[8] & 1 else -2, 2 if d[9] & 1 else -2]
-            ac10 = [1 if d[10] & 1 else -1, 1 if d[11] & 1 else -1]
-            out = bytearray(head)
-            # scan 1: DC first, Al=1 — diffs of dc>>1, raster order
-            bw, pred = BW(), 0
-            for dc in dcs:
-                v = dc >> 1
-                diff, pred = v - pred, v
-                size = abs(diff).bit_length()
-                bw.code(DC, size)
-                if size:
-                    bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-            out += sos(0x00, 0, 0, 0, 1) + bw.flush()
-            # scan 2: AC 1-5 first, Al=1 — ±1 high-bits at zigzag 2 in
-            # blocks 0,1; EOB2 run across blocks 2,3
-            bw = BW()
-            for b in (0, 1):
-                bw.code(AC0_V1, 0x11)  # run=1, size=1
-                bw.put(1 if ac2[b] > 0 else 0, 1)
-                bw.code(AC0_V1, 0x00)
-            bw.code(AC0_V1, 0x10)  # EOBn r=1 → eobrun 2
-            bw.put(0, 1)
-            out += sos(0x00, 1, 5, 0, 1) + bw.flush()
-            # scan 3: AC 6-63 first, Al=1 — nothing visible yet: EOB4
-            bw = BW()
-            bw.code(AC1_V1, 0x20)
-            bw.put(0, 2)
-            out += sos(0x01, 6, 63, 0, 1) + bw.flush()
-            out += redefine  # mid-stream DHT: new meanings for ids 0,1
-            # scan 4: AC 1-5 refinement — EOB4 run; blocks 0,1's
-            # nonzero-history coeff takes its correction bit INSIDE the
-            # run (|±2| has LSB 0)
-            bw = BW()
-            bw.code(AC0_V2, 0x20)
-            bw.put(0, 2)
-            bw.put(0, 1)  # block 0 correction
-            bw.put(0, 1)  # block 1 correction (consumed mid-EOB-run)
-            out += sos(0x00, 1, 5, 1, 0) + bw.flush()
-            # scan 5: AC 6-63 refinement — EOB2 over blocks 0,1, then
-            # newly-significant ±1 at zigzag 10 in blocks 2,3
-            bw = BW()
-            bw.code(AC1_V2, 0x10)
-            bw.put(0, 1)
-            for b in (0, 1):
-                bw.code(AC1_V2, 0x41)  # 4 zero-history coeffs, then ±1
-                bw.put(1 if ac10[b] > 0 else 0, 1)
-                bw.code(AC1_V2, 0x00)
-            out += sos(0x01, 6, 63, 1, 0) + bw.flush()
-            # scan 6: DC refinement — the md5-derived LSB per block
-            bw = BW()
-            for dc in dcs:
-                bw.put(dc & 1, 1)
-            out += sos(0x00, 0, 0, 1, 0) + bw.flush()
-            return bytes(out + b"\xff\xd9")
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(d) for d in pdf["doc_id"]]}
-            )
-
-    return gen
 
 
 @register(
@@ -2022,108 +1342,8 @@ def multimodal_jpeg_progressive_roundtrip(spark: SparkSession, sf_dir: str) -> D
     machinery.  The refinement correction-bit=1 branch (|v|=3) is
     pinned by tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_jpeg_progressive_generator()
-    jpegs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        jpegs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/jpeg",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.jpeg_progressive, "image", "image/jpeg")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_jpeg_restart_generator():
-    """mapInPandas generator: doc_id → 16×16 baseline grayscale JPEG
-    with DRI=1 — every MCU is its own byte-aligned entropy segment
-    separated by RST0..RST2, so each block's DC diff is the ABSOLUTE
-    value (predictor resets at every marker).  A decoder that fails to
-    byte-align, misses the predictor reset, or treats the RST bytes as
-    entropy data produces wrong constants or EOF → NULL.  Same md5
-    pixel recipe as the plain baseline fixture.  Nested def so
-    cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        def enc_map(bits, vals):
-            m, code, vi = {}, 0, 0
-            for ln in range(1, 17):
-                for _ in range(bits[ln - 1]):
-                    m[vals[vi]] = (ln, code)
-                    code += 1
-                    vi += 1
-                code <<= 1
-            return m
-
-        dc_bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        dc_vals = list(range(12))
-        DC = enc_map(dc_bits, dc_vals)
-        AC = enc_map([1] + [0] * 15, [0x00])
-
-        class BW:
-            def __init__(self):
-                self.out, self.acc, self.n = bytearray(), 0, 0
-
-            def put(self, val, ln):
-                for i in range(ln - 1, -1, -1):
-                    self.acc = (self.acc << 1) | ((val >> i) & 1)
-                    self.n += 1
-                    if self.n == 8:
-                        self.out.append(self.acc)
-                        if self.acc == 0xFF:
-                            self.out.append(0x00)
-                        self.acc, self.n = 0, 0
-
-            def code(self, m, sym):
-                ln, cd = m[sym]
-                self.put(cd, ln)
-
-            def flush(self):
-                if self.n:
-                    self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                return bytes(self.out)
-
-        def seg(marker, payload):
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        head = (
-            b"\xff\xd8"
-            + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            + seg(0xC0, struct.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-            + seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-            + seg(0xC4, bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0x00]))
-            + seg(0xDD, struct.pack(">H", 1))
-            + seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        )
-
-        def build(did) -> bytes:
-            digest = hashlib.md5(str(did).encode()).digest()
-            out = bytearray(head)
-            for i, c in enumerate(digest[:4]):
-                bw = BW()
-                dc = 8 * (int(c) - 128)  # absolute: predictor was reset
-                size = abs(dc).bit_length()
-                bw.code(DC, size)
-                if size:
-                    bw.put(dc if dc > 0 else dc + (1 << size) - 1, size)
-                bw.code(AC, 0x00)  # EOB
-                out += bw.flush()
-                if i < 3:
-                    out += bytes([0xFF, 0xD0 + (i % 8)])
-            return bytes(out + b"\xff\xd9")
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(d) for d in pdf["doc_id"]]}
-            )
-
-    return gen
 
 
 @register(
@@ -2155,13 +1375,7 @@ def multimodal_jpeg_restart_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     EOB-run-across-restart rejection are pinned by
     tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_jpeg_restart_generator()
-    jpegs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        jpegs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/jpeg",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.jpeg_restart, "image", "image/jpeg")
     return multimodal.decode_image_features(media, fake=False)
 
 
@@ -2189,32 +1403,7 @@ def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a double, so the single SQRT rounding matches bitwise across
     engines — the hash check covers the whole RIFF parse + PCM math.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        import hashlib
-        import io
-        import wave
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(1)
-                    wf.setframerate(8000)
-                    wf.writeframes(hashlib.md5(str(did).encode()).digest())
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    wavs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav, "audio", "audio/wav")
     return multimodal.decode_audio_features(media, fake=False)
 
 
@@ -2432,104 +1621,8 @@ def multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     restate the resized mean luma exactly and the hash match covers
     decode + resample end-to-end.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_png_generator()
-    pngs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        pngs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/png",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.png_4x4, "image", "image/png")
     return multimodal.decode_image_resized(media, out_w=2, out_h=2)
-
-
-def _md5_jpeg_color_generator():
-    """mapInPandas generator: doc_id → 1×1 baseline 4:4:4 COLOR JPEG
-    whose single interleaved MCU carries three DC-only blocks with
-    constants Y/Cb/Cr = md5(doc_id) bytes 0/1/2.  All-ones quant makes
-    the component planes exact (same argument as the grayscale
-    fixture), so the decoded RGB pixel is the JFIF BT.601 conversion of
-    the md5 bytes — restatable in SQL.  The 1×1 frame keeps the luma
-    mean a single-value mean (no float summation tree to replicate).
-    Nested def: cloudpickle by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        dc_bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        dc_vals = list(range(12))
-        dc_code = {}
-        code = 0
-        vi = 0
-        for ln in range(1, 17):
-            for _ in range(dc_bits[ln - 1]):
-                dc_code[dc_vals[vi]] = (ln, code)
-                code += 1
-                vi += 1
-            code <<= 1
-        ac_bits = [1] + [0] * 15
-        ac_vals = [0x00]
-        eob = (1, 0)
-
-        class BitWriter:
-            def __init__(self):
-                self.out = bytearray()
-                self.acc = 0
-                self.n = 0
-
-            def put(self, val: int, ln: int) -> None:
-                for i in range(ln - 1, -1, -1):
-                    self.acc = (self.acc << 1) | ((val >> i) & 1)
-                    self.n += 1
-                    if self.n == 8:
-                        self.out.append(self.acc)
-                        if self.acc == 0xFF:
-                            self.out.append(0x00)
-                        self.acc, self.n = 0, 0
-
-            def flush(self) -> bytes:
-                if self.n:
-                    self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                return bytes(self.out)
-
-        def seg(marker: int, payload: bytes) -> bytes:
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        head = (
-            b"\xff\xd8"
-            + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            + seg(
-                0xC0,
-                struct.pack(">BHHB", 8, 1, 1, 3)
-                + bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-            )
-            + seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-            + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-            + seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-        )
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                digest = hashlib.md5(str(did).encode()).digest()
-                bw = BitWriter()
-                for c in digest[:3]:  # one MCU: Y, Cb, Cr blocks
-                    dc = 8 * (int(c) - 128)  # per-component pred starts at 0
-                    size = dc.bit_length() if dc != 0 else 0
-                    ln, cd = dc_code[size]
-                    bw.put(cd, ln)
-                    if size:
-                        bw.put(dc if dc > 0 else dc + (1 << size) - 1, size)
-                    bw.put(eob[1], eob[0])
-                payloads.append(head + bw.flush() + b"\xff\xd9")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
 
 
 @register(
@@ -2565,115 +1658,8 @@ def multimodal_jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     md5 bytes (round-then-clip, matching the decoder), so the value
     hash covers the color pipeline end-to-end bit-for-bit.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_jpeg_color_generator()
-    jpegs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        jpegs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/jpeg",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.jpeg_color, "image", "image/jpeg")
     return multimodal.decode_image_features(media, fake=False)
-
-
-def _md5_jpeg_420_generator():
-    """mapInPandas generator: doc_id → 16×16 baseline **4:2:0** COLOR
-    JPEG — one interleaved MCU with luma sampling 2×2 (FOUR Y blocks,
-    DC-coded as successive differences off the shared per-component
-    predictor) plus one Cb and one Cr block.  DC-only blocks with
-    all-ones quant make each 8×8 Y quadrant exactly md5(doc_id) byte
-    0/1/2/3 and the (2×-upsampled) chroma planes constant bytes 4/5 —
-    so the decoded RGB image is four constant quadrants restatable in
-    SQL.  This exercises everything 4:4:4 cannot: the multi-block MCU
-    walk, intra-MCU DC prediction, per-component plane geometry, and
-    chroma replication upsampling.  Nested def: cloudpickle by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        dc_bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        dc_vals = list(range(12))
-        dc_code = {}
-        code = 0
-        vi = 0
-        for ln in range(1, 17):
-            for _ in range(dc_bits[ln - 1]):
-                dc_code[dc_vals[vi]] = (ln, code)
-                code += 1
-                vi += 1
-            code <<= 1
-        ac_bits = [1] + [0] * 15
-        ac_vals = [0x00]
-        eob = (1, 0)
-
-        class BitWriter:
-            def __init__(self):
-                self.out = bytearray()
-                self.acc = 0
-                self.n = 0
-
-            def put(self, val: int, ln: int) -> None:
-                for i in range(ln - 1, -1, -1):
-                    self.acc = (self.acc << 1) | ((val >> i) & 1)
-                    self.n += 1
-                    if self.n == 8:
-                        self.out.append(self.acc)
-                        if self.acc == 0xFF:
-                            self.out.append(0x00)
-                        self.acc, self.n = 0, 0
-
-            def flush(self) -> bytes:
-                if self.n:
-                    self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                return bytes(self.out)
-
-        def seg(marker: int, payload: bytes) -> bytes:
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        head = (
-            b"\xff\xd8"
-            + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            + seg(
-                0xC0,
-                struct.pack(">BHHB", 8, 16, 16, 3)
-                + bytes([1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-            )
-            + seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-            + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-            + seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-        )
-
-        def put_dc(bw, diff):
-            size = abs(diff).bit_length() if diff != 0 else 0
-            ln, cd = dc_code[size]
-            bw.put(cd, ln)
-            if size:
-                bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-            bw.put(eob[1], eob[0])
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                digest = hashlib.md5(str(did).encode()).digest()
-                bw = BitWriter()
-                # four Y blocks: the component predictor carries across
-                # blocks, so emit dc0 then successive differences
-                pred = 0
-                for c in digest[:4]:
-                    dc = 8 * (int(c) - 128)
-                    put_dc(bw, dc - pred)
-                    pred = dc
-                for c in digest[4:6]:  # Cb, Cr: fresh predictors
-                    put_dc(bw, 8 * (int(c) - 128))
-                payloads.append(head + bw.flush() + b"\xff\xd9")
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
 
 
 def _jpeg420_oracle_sql() -> str:
@@ -2743,13 +1729,7 @@ def multimodal_jpeg_420_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     luma.  The oracle restates the whole thing from the md5 bytes,
     INCLUDING numpy's pairwise mean reduced to a closed form
     (operators/multimodal.py::_jpeg_pixel_decoder)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_jpeg_420_generator()
-    jpegs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        jpegs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/jpeg",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.jpeg_420, "image", "image/jpeg")
     return multimodal.decode_image_features(media, fake=False)
 
 
@@ -3705,145 +2685,8 @@ def multimodal_wav_ulaw_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     the fact-chunk skip), the complement, and the segment expansion.
     IMA-ADPCM decode and the sign path are pinned by
     tests/test_multimodal_codecs.py."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        def build(did) -> bytes:
-            data = hashlib.md5(str(did).encode()).digest()
-            fmt = struct.pack("<HHIIHHH", 7, 1, 8000, 8000, 1, 8, 0)
-            body = (
-                b"WAVE"
-                + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                + b"fact" + struct.pack("<II", 4, len(data))
-                + b"data" + struct.pack("<I", len(data)) + data
-            )
-            return b"RIFF" + struct.pack("<I", len(body)) + body
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(d) for d in pdf["doc_id"]]}
-            )
-
-    wavs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/basic",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_ulaw, "audio", "audio/basic")
     return multimodal.decode_audio_features(media, fake=False)
-
-
-def _mjpeg_avi_generator():
-    """mapInPandas generator: doc_id → a minimal-but-well-formed AVI
-    (RIFF 'AVI ': LIST hdrl with avih + one vids/MJPG LIST strl, LIST
-    movi) containing FOUR 16×16 grayscale baseline JPEG frames; frame
-    f's four 8×8 blocks are md5(doc_id) bytes 4f..4f+3 — the
-    _md5_jpeg_generator fixture promoted to a video container.
-    Nested def so cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-
-        import pandas as pd
-
-        dc_bits = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-        dc_vals = list(range(12))
-        dc_code = {}
-        code = 0
-        vi = 0
-        for ln in range(1, 17):
-            for _ in range(dc_bits[ln - 1]):
-                dc_code[dc_vals[vi]] = (ln, code)
-                code += 1
-                vi += 1
-            code <<= 1
-        ac_bits = [1] + [0] * 15
-        ac_vals = [0x00]
-
-        class BitWriter:
-            def __init__(self):
-                self.out = bytearray()
-                self.acc = 0
-                self.n = 0
-
-            def put(self, val: int, ln: int) -> None:
-                for i in range(ln - 1, -1, -1):
-                    self.acc = (self.acc << 1) | ((val >> i) & 1)
-                    self.n += 1
-                    if self.n == 8:
-                        self.out.append(self.acc)
-                        if self.acc == 0xFF:
-                            self.out.append(0x00)
-                        self.acc, self.n = 0, 0
-
-            def flush(self) -> bytes:
-                if self.n:
-                    self.acc = (self.acc << (8 - self.n)) | ((1 << (8 - self.n)) - 1)
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                return bytes(self.out)
-
-        def seg(marker: int, payload: bytes) -> bytes:
-            return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-        head = (
-            b"\xff\xd8"
-            + seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-            + seg(0xC0, struct.pack(">BHHB", 8, 16, 16, 1) + bytes([1, 0x11, 0]))
-            + seg(0xC4, bytes([0x00]) + bytes(dc_bits) + bytes(dc_vals))
-            + seg(0xC4, bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals))
-            + seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-        )
-
-        def jpeg(block_vals) -> bytes:
-            bw = BitWriter()
-            pred = 0
-            for c in block_vals:
-                dc = 8 * (int(c) - 128)
-                diff = dc - pred
-                pred = dc
-                size = diff.bit_length() if diff != 0 else 0
-                ln, cd = dc_code[size]
-                bw.put(cd, ln)
-                if size:
-                    bw.put(diff if diff > 0 else diff + (1 << size) - 1, size)
-                bw.put(0, 1)  # EOB
-            return head + bw.flush() + b"\xff\xd9"
-
-        def chunk(cid: bytes, body: bytes) -> bytes:
-            return cid + struct.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-        def lst(ltype: bytes, body: bytes) -> bytes:
-            return chunk(b"LIST", ltype + body)
-
-        def build(did) -> bytes:
-            d = hashlib.md5(str(did).encode()).digest()
-            frames = [jpeg(d[4 * f : 4 * f + 4]) for f in range(4)]
-            avih = struct.pack("<IIIIIIIIII", 40000, 0, 0, 0x10, 4, 0, 1, 0, 16, 16)
-            avih += b"\x00" * 16
-            strh = (
-                b"vidsMJPG"
-                + struct.pack("<IHHIIIIIIII", 0, 0, 0, 0, 1, 25, 0, 4, 0, 0, 0)
-                + struct.pack("<hhhh", 0, 0, 16, 16)
-            )
-            strf = struct.pack("<IiiHH4sIiiII", 40, 16, 16, 1, 24, b"MJPG", 0, 0, 0, 0, 0)
-            hdrl = lst(b"hdrl", chunk(b"avih", avih)
-                       + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-            movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-            return b"RIFF" + struct.pack("<I", 4 + len(hdrl) + len(movi)) + b"AVI " + hdrl + movi
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(d) for d in pdf["doc_id"]]}
-            )
-
-    return gen
 
 
 def _mjpeg_oracle_sql() -> str:
@@ -3886,13 +2729,7 @@ def multimodal_video_frames_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     hash.  Truncated containers, odd-sized (padded) chunks and
     corrupt-single-frame isolation are pinned by
     tests/test_multimodal_codecs.py."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _mjpeg_avi_generator()
-    avis = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        avis, id_col="doc_id", payload=F.col("payload"),
-        kind="video", mime="video/x-msvideo",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.mjpeg_avi, "video", "video/x-msvideo")
     return multimodal.decode_video_frames(media, max_frames=8)
 
 
@@ -3945,13 +2782,7 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: the roundtrip's md5 luma reconstruction + the identical
     LAG/subtract/ABS/threshold chain (see _video_scene_cuts_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _mjpeg_avi_generator()
-    avis = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        avis, id_col="doc_id", payload=F.col("payload"),
-        kind="video", mime="video/x-msvideo",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.mjpeg_avi, "video", "video/x-msvideo")
     frames = multimodal.decode_video_frames(media, max_frames=8)
     return multimodal.video_scene_cuts(frames, threshold=0.25)
 
@@ -4013,32 +2844,7 @@ def multimodal_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: full reconstruction — md5 sample bytes, the identical
     twiddle doubles as VARCHAR-bridged literals, the identical
     quantize-sum-square chain (see _audio_spectrum_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-
-    def gen(batches):
-        import hashlib
-        import io
-        import wave
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(1)
-                    wf.setframerate(8000)
-                    wf.writeframes(hashlib.md5(str(did).encode()).digest())
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    wavs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=16)
     return multimodal.audio_power_spectrum(samples, n_fft=16, bins=(1, 2, 3))
 
@@ -4060,186 +2866,6 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (overlaps included), tie-breaking, or merge-pass semantics
     desynchronizes every later round's counts and mismatches."""
     return text.bpe_train_merges(_docs(spark, sf_dir), k=10)
-
-
-def _md5_tiff_generator():
-    """mapInPandas generator: doc_id → a 4×4 8-bit grayscale TIFF whose
-    16 pixels are the md5(doc_id) digest bytes, cycling through seven
-    real encoder layouts by doc_id so ONE oracle certifies every
-    decode path on identical pixel values:
-
-      doc_id%7==0  II (little-endian), uncompressed, one strip
-      doc_id%7==1  MM (big-endian), uncompressed, TWO strips (rps=2,
-                   offset/count arrays offset-addressed)
-      doc_id%7==2  II, PackBits-compressed strip
-      doc_id%7==3  MM, PhotometricInterpretation 0 (WhiteIsZero) with
-                   pre-inverted sample bytes — decode re-inverts, so
-                   the luma equals the other variants'
-      doc_id%7==4  II, LZW-compressed strip (MSB-first, ClearCode/EOI;
-                   width growth and table resets are pytest territory
-                   — a 16-byte strip stays at 9-bit codes)
-      doc_id%7==5  II, LZW under Predictor 2 (horizontal differencing)
-      doc_id%7==6  II, Deflate (Compression 8, zlib strip) under
-                   Predictor 2 — the predictor composes with both
-                   entropy coders through the same cumsum reversal
-
-    Nested def so cloudpickle ships it by value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        def lzw(s: bytes) -> bytes:
-            CLEAR, EOI = 256, 257
-            out = bytearray()
-            acc = nacc = 0
-            width = 9
-
-            def put(code):
-                nonlocal acc, nacc
-                acc = (acc << width) | code
-                nacc += width
-                while nacc >= 8:
-                    out.append((acc >> (nacc - 8)) & 0xFF)
-                    nacc -= 8
-
-            table = {bytes([i]): i for i in range(256)}
-            nextcode = 258
-            put(CLEAR)
-            w = b""
-            for ch in s:
-                c = bytes([ch])
-                if w + c in table:
-                    w = w + c
-                    continue
-                put(table[w])
-                table[w + c] = nextcode
-                nextcode += 1
-                # encoder table runs one entry ahead of the decoder's,
-                # which grows at (1<<width)-1 — mirror point 1<<width
-                if nextcode == (1 << width) and width < 12:
-                    width += 1
-                if nextcode >= 4093:  # near-full: spec ClearCode reset
-                    put(CLEAR)
-                    table = {bytes([i]): i for i in range(256)}
-                    nextcode, width = 258, 9
-                w = c
-            if w:
-                put(table[w])
-            put(EOI)
-            if nacc:
-                out.append((acc << (8 - nacc)) & 0xFF)
-            return bytes(out)
-
-        def packbits(s: bytes) -> bytes:
-            out = bytearray()
-            i = 0
-            while i < len(s):
-                j = i
-                while j + 1 < len(s) and s[j + 1] == s[j] and j - i < 127:
-                    j += 1
-                if j > i:  # replicate run of 2+
-                    out += bytes([257 - (j - i + 1), s[i]])
-                    i = j + 1
-                else:
-                    k = i
-                    while (
-                        k < len(s) and k - i < 128
-                        and not (k + 1 < len(s) and s[k] == s[k + 1])
-                    ):
-                        k += 1
-                    out += bytes([k - i - 1]) + s[i:k]
-                    i = k
-            return bytes(out)
-
-        def build(did: int) -> bytes:
-            data = hashlib.md5(str(did).encode()).digest()
-            variant = did % 7
-            e = "<" if variant in (0, 2, 4, 5, 6) else ">"
-            photo = 0 if variant == 3 else 1
-            if variant == 3:
-                data = bytes(255 - x for x in data)
-            if variant == 1:
-                strips = [data[:8], data[8:]]
-                rps = 2
-            elif variant == 2:
-                strips = [packbits(data)]
-                rps = 4
-            elif variant == 4:
-                strips = [lzw(data)]
-                rps = 4
-            elif variant in (5, 6):
-                # Predictor 2: each 4-byte row stores horizontal
-                # deltas mod 256 (first sample absolute), entropy-coded
-                # by LZW (variant 5) or a zlib Deflate stream (6)
-                rows = [data[i * 4 : (i + 1) * 4] for i in range(4)]
-                diffed = b"".join(
-                    bytes([r[0]] + [(r[j] - r[j - 1]) % 256 for j in range(1, 4)])
-                    for r in rows
-                )
-                strips = [lzw(diffed) if variant == 5 else zlib.compress(diffed)]
-                rps = 4
-            else:
-                strips = [data]
-                rps = 4
-            comp = {2: 32773, 4: 5, 5: 5, 6: 8}.get(variant, 1)
-            n_strips = len(strips)
-            ntags = 10 if variant in (5, 6) else 9
-            ifd_off = 8
-            arrays_off = ifd_off + 2 + 12 * ntags + 4
-            if n_strips > 1:
-                so_off = arrays_off
-                sc_off = so_off + 4 * n_strips
-                data_off = sc_off + 4 * n_strips
-            else:
-                data_off = arrays_off
-            offs, pos = [], data_off
-            for s in strips:
-                offs.append(pos)
-                pos += len(s)
-
-            def short_val(v):
-                return struct.pack(e + "HH", v, 0)
-
-            def long_val(v):
-                return struct.pack(e + "I", v)
-
-            def tag(t, typ, cnt, val):
-                return struct.pack(e + "HHI", t, typ, cnt) + val
-
-            tags = [
-                tag(256, 3, 1, short_val(4)),
-                tag(257, 3, 1, short_val(4)),
-                tag(258, 3, 1, short_val(8)),
-                tag(259, 3, 1, short_val(comp)),
-                tag(262, 3, 1, short_val(photo)),
-                tag(273, 4, n_strips,
-                    long_val(offs[0] if n_strips == 1 else so_off)),
-                tag(277, 3, 1, short_val(1)),
-                tag(278, 3, 1, short_val(rps)),
-                tag(279, 4, n_strips,
-                    long_val(len(strips[0]) if n_strips == 1 else sc_off)),
-            ]
-            if variant in (5, 6):
-                tags.append(tag(317, 3, 1, short_val(2)))  # Predictor 2
-            out = (b"II" if e == "<" else b"MM") + struct.pack(e + "HI", 42, ifd_off)
-            out += struct.pack(e + "H", ntags) + b"".join(tags)
-            out += struct.pack(e + "I", 0)  # no next IFD
-            if n_strips > 1:
-                out += struct.pack(e + "I" * n_strips, *offs)
-                out += struct.pack(e + "I" * n_strips, *[len(s) for s in strips])
-            out += b"".join(strips)
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": [build(int(d)) for d in pdf["doc_id"]]}
-            )
-
-    return gen
 
 
 @register(
@@ -4277,13 +2903,7 @@ def multimodal_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt-zlib isolation, float-predictor rejection) is
     pinned by tests/test_multimodal_codecs.py.
     """
-    docs = _docs(spark, sf_dir).select("doc_id")
-    gen = _md5_tiff_generator()
-    tiffs = docs.mapInPandas(gen, schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        tiffs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/tiff",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.tiff, "image", "image/tiff")
     return multimodal.decode_image_features(media, fake=False)
 
 
@@ -4426,38 +3046,6 @@ def text_bpe_train_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _stft_wav_generator():
-    """64-sample 8-bit-PCM WAV per doc — four md5 digests (of doc_id,
-    doc_id:1, doc_id:2, doc_id:3) concatenated, so the oracle can
-    restate every sample from SQL MD5 calls.  Same wave-module write
-    path as the 16-sample spectrum fixture."""
-
-    def gen(batches):
-        import hashlib
-        import io
-        import wave
-
-        import pandas as pd
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                pcm = b"".join(
-                    hashlib.md5((str(did) + suf).encode()).digest()
-                    for suf in ("", ":1", ":2", ":3")
-                )
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as wf:
-                    wf.setnchannels(1)
-                    wf.setsampwidth(1)
-                    wf.setframerate(8000)
-                    wf.writeframes(pcm)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
-
-
 def _audio_stft_sql(
     n_samples: int = 64,
     n_fft: int = 16,
@@ -4534,12 +3122,7 @@ def multimodal_audio_stft(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: full reconstruction — md5 samples, the identical
     frame-shifted twiddle doubles as literals, the identical
     quantize-sum-square chain (see _audio_stft_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=64)
     return multimodal.audio_stft(samples, n_fft=16, hop=8, bins=(1, 2, 3))
 
@@ -4636,12 +3219,7 @@ def multimodal_audio_melbands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: full reconstruction — md5 samples, the identical
     frame-shifted twiddle AND filterbank doubles as literals, the
     identical quantize-sum chains (see _audio_melbands_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=64)
     stft = multimodal.audio_stft(samples, n_fft=16, hop=8, bins=tuple(range(1, 8)))
     return multimodal.audio_melbands(
@@ -4764,12 +3342,7 @@ def multimodal_audio_mfcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: full reconstruction — md5 samples, the identical twiddle,
     filterbank AND DCT doubles as literals, the identical quantize
     chains including the log grid (see _audio_mfcc_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=64)
     stft = multimodal.audio_stft(samples, n_fft=16, hop=8, bins=tuple(range(1, 8)))
     mel = multimodal.audio_melbands(
@@ -4888,12 +3461,7 @@ def multimodal_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles, identical integer-quantized window/aggregation shapes
     including the rolloff integer compare and the log grid (see
     _audio_spectral_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=64)
     stft = multimodal.audio_stft(samples, n_fft=16, hop=8, bins=tuple(range(1, 8)))
     return multimodal.audio_spectral_shape(
@@ -4984,12 +3552,7 @@ def multimodal_audio_flux(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: full reconstruction — md5 samples, identical twiddle
     doubles, the identical LAG/rectify/quantize chain (see
     _audio_flux_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=64)
     stft = multimodal.audio_stft(samples, n_fft=16, hop=8, bins=tuple(range(1, 8)))
     return multimodal.audio_spectral_flux(stft)
@@ -5060,12 +3623,7 @@ def multimodal_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: full reconstruction — md5 samples, a literal
     (pair position, frame) table, the identical sign predicate and
     constant division (see _audio_zcr_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     samples = multimodal.decode_audio_samples(media, max_samples=64)
     return multimodal.audio_zcr(samples, n_fft=16, hop=8)
 
@@ -5220,12 +3778,7 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the shared STFT/flux/flatness/ZCR reconstructions
     verbatim from their own oracles, then the identical CASE,
     histogram and tie-break (see _audio_segments_sql)."""
-    docs = _docs(spark, sf_dir).select("doc_id")
-    wavs = docs.mapInPandas(_stft_wav_generator(), schema="doc_id long, payload binary")
-    media = multimodal.as_media(
-        wavs, id_col="doc_id", payload=F.col("payload"),
-        kind="audio", mime="audio/wav",
-    )
+    media = _fixture_media(spark, sf_dir, media_fixtures.wav_stft, "audio", "audio/wav")
     # the classifier fans out over BOTH relations (samples → ZCR;
     # STFT → flux AND flatness): materialize each once so the decode
     # seam runs once, not once per branch — without this the plan
@@ -6118,54 +4671,6 @@ def graph_truss_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _md5_phash_png_generator():
-    """mapInPandas generator: doc_id → 8×8 grayscale PNG whose 64
-    raster-order pixels are the concatenated md5(f"{src}:{k}") digests
-    (k = 0..3), with a PLANTED near-dup family: docs with
-    ``doc_id % 5 == 4`` reuse the pixels of ``doc_id - 4`` with pixel
-    0 XOR 1 — a one-intensity-level perturbation whose pHash lands at
-    tiny Hamming distance from its source, giving the banded retrieval
-    entry real recall content.  Nested def so cloudpickle ships it by
-    value."""
-
-    def gen(batches):
-        import hashlib
-        import struct
-        import zlib
-
-        import pandas as pd
-
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-            )
-
-        for pdf in batches:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                src = did - 4 if did % 5 == 4 else did
-                px = bytearray(
-                    b"".join(
-                        hashlib.md5(f"{src}:{k}".encode()).digest() for k in range(4)
-                    )
-                )
-                if did % 5 == 4:
-                    px[0] ^= 1
-                scan = b"".join(
-                    b"\x00" + bytes(px[y * 8 : (y + 1) * 8]) for y in range(8)
-                )
-                ihdr = struct.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0)
-                payloads.append(
-                    b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(scan)) + chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    return gen
-
-
 def _phash_sql_ctes() -> str:
     """Shared DuckDB CTE chain ending in ``phash_tbl(media_id, width,
     height, phash, dc, median_ac)`` — the ORACLE replay of the whole
@@ -6221,14 +4726,7 @@ phash_tbl AS MATERIALIZED (
 
 
 def _phash_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir).select("doc_id")
-    pngs = docs.mapInPandas(
-        _md5_phash_png_generator(), schema="doc_id long, payload binary"
-    )
-    return multimodal.as_media(
-        pngs, id_col="doc_id", payload=F.col("payload"),
-        kind="image", mime="image/png",
-    )
+    return _fixture_media(spark, sf_dir, media_fixtures.png_phash, "image", "image/png")
 
 
 @register(

@@ -1547,14 +1547,10 @@ def streaming_phash_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         multimodal,
         phash as phash_ops,
     )
-    from financial_data_stream_processing_engine_spark.plans.llm_queries import (
-        _md5_phash_png_generator,
-    )
+    from financial_data_stream_processing_engine_spark.plans import media_fixtures
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pngs = docs.mapInPandas(
-        _md5_phash_png_generator(), schema="doc_id long, payload binary"
-    )
+    pngs = media_fixtures.payload_frame(docs, media_fixtures.png_phash)
     # generate the PNGs ONCE to a staging dir before the slice split:
     # the slice filter cannot push below the opaque mapInPandas, so
     # filtering the generator frame directly would run the PNG encode

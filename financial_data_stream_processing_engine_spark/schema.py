@@ -1,4 +1,4 @@
-"""Schemas: the unified tick schema and the driver test tables.
+"""Schema: the unified tick schema.
 
 The reference's one real schema is the unified tick dict every source
 adapter normalizes into (financial_engine.py:186-194, :234-235,
@@ -12,9 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-#: Unified tick schema (SURVEY.md §1.2).  ``moving_average`` is nullable:
-#: NULL models the reference's "field absent until the window is full"
-#: (financial_engine.py:308-310).
+#: Unified tick schema (SURVEY.md §1.2).
 TICK_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType(), False),
@@ -24,22 +22,4 @@ TICK_SCHEMA = T.StructType(
         T.StructField("ts", T.TimestampType(), False),
         T.StructField("source", T.StringType(), False),
     ]
-)
-
-TICK_WITH_MA_SCHEMA = T.StructType(
-    list(TICK_SCHEMA.fields) + [T.StructField("moving_average", T.DoubleType(), True)]
-)
-
-#: Names of the driver-generated test tables (TESTDATA.md).
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
 )

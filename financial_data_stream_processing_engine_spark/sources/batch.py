@@ -18,8 +18,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 #: Raw field names per source, from the reference.
 #: AlphaVantage GLOBAL_QUOTE payload keys (financial_engine.py:186-190).
 AV_SYMBOL, AV_PRICE, AV_VOLUME = "01. symbol", "05. price", "06. volume"
-#: Mock WebSocket message keys (financial_engine.py:220-223).
-WS_FIELDS = ("instrument", "value", "vol", "ts")
 
 #: The reference's embedded mock CSV (financial_engine.py:246).
 MOCK_CSV_ROWS = [

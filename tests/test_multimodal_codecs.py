@@ -458,14 +458,11 @@ def test_jpeg_420_subsampled_decodes(spark):
     constant RGB quadrants the md5 bytes dictate."""
     import hashlib
 
-    import pandas as pd
+    from financial_data_stream_processing_engine_spark.plans.media_fixtures import jpeg_420
 
-    from financial_data_stream_processing_engine_spark.plans.llm_queries import _md5_jpeg_420_generator
-
-    gen = _md5_jpeg_420_generator()
-    fx = next(gen([pd.DataFrame({"doc_id": [306, 466, 7]})]))
-    out = _decode_images(spark, list(fx["payload"]))
-    for i, did in enumerate(fx["doc_id"]):
+    ids = [306, 466, 7]
+    out = _decode_images(spark, [jpeg_420(did) for did in ids])
+    for i, did in enumerate(ids):
         r = out[i]
         assert (r["width"], r["height"], r["n_channels"]) == (16, 16, 3)
         d = hashlib.md5(str(did).encode()).digest()
@@ -952,16 +949,12 @@ def test_jpeg_baseline_restart_spark_path(spark):
     """Baseline DRI=1 fixture through the real mapInPandas decode: the
     per-MCU absolute DC + predictor reset must reproduce the constants
     (mirrors the multimodal_jpeg_restart_roundtrip recipe)."""
-    from financial_data_stream_processing_engine_spark.plans.llm_queries import (
-        _md5_jpeg_restart_generator,
+    from financial_data_stream_processing_engine_spark.plans.media_fixtures import (
+        jpeg_restart,
     )
     import hashlib
-    import pandas as pd
 
-    gen = _md5_jpeg_restart_generator()
-    pdf = pd.DataFrame({"doc_id": [3, 41, 999]})
-    payloads = list(gen(iter([pdf])))[0]["payload"]
-    out = _decode_images(spark, list(payloads))
+    out = _decode_images(spark, [jpeg_restart(did) for did in [3, 41, 999]])
     for i, did in enumerate([3, 41, 999]):
         d = hashlib.md5(str(did).encode()).digest()
         r = out[i]
@@ -2458,19 +2451,12 @@ def test_tiff_fixture_variant_deflate_matches_md5(spark):
     single-oracle contract of multimodal_tiff_roundtrip."""
     import hashlib
 
-    import pandas as pd
+    from financial_data_stream_processing_engine_spark.plans.media_fixtures import tiff
 
-    from financial_data_stream_processing_engine_spark.plans.llm_queries import (
-        _md5_tiff_generator,
-    )
-
-    gen = _md5_tiff_generator()
     decode = multimodal._tiff_pixel_decoder()
     # doc_ids 0..13 cover every variant twice
-    pdf = pd.DataFrame({"doc_id": list(range(14))})
-    (out,) = list(gen([pdf]))
-    for did, payload in zip(out["doc_id"], out["payload"]):
-        dec = decode(payload)
+    for did in range(14):
+        dec = decode(tiff(did))
         assert dec is not None, did
         px, nch = dec
         assert nch == 1 and px.shape == (4, 4, 1), did

@@ -58,6 +58,53 @@ q.processAllAvailable()
 q.stop()
 print("MA", sorted(r.moving_average for r in spark.table("ma").collect()
                    if r.moving_average is not None))
+
+# media fixture builders pickle by reference too
+import hashlib
+
+from pyspark.sql import functions as F
+
+from financial_data_stream_processing_engine_spark.operators import multimodal
+from financial_data_stream_processing_engine_spark.plans import media_fixtures
+
+docs = spark.range(4).withColumnRenamed("id", "doc_id")
+media = multimodal.as_media(
+    media_fixtures.payload_frame(docs, media_fixtures.png_4x4), id_col="doc_id",
+    payload=F.col("payload"), kind="image", mime="image/png",
+)
+got = {{r.media_id: r.mean_luma
+        for r in multimodal.decode_image_features(media, fake=False).collect()}}
+want = {{i: sum(hashlib.md5(str(i).encode()).digest()) / 16.0 / 255.0 for i in range(4)}}
+print("LUMA", got == want)
+
+# an engine-owned AlphaVantage spool
+import os
+import time
+
+import pyarrow.parquet as pq
+
+from financial_data_stream_processing_engine_spark.engine import LiveEngine
+from financial_data_stream_processing_engine_spark.sources.alpha_vantage import (
+    AlphaVantageSource,
+)
+
+quote = {{"01. symbol": "IBM", "05. price": "1.0", "06. volume": "1"}}
+engine = LiveEngine(
+    spark,
+    av_source=AlphaVantageSource("test", fetch=lambda url, t: {{"Global Quote": quote}}),
+    ws_rows_per_second=0,
+    csv_rows_per_second=0,
+    keep_recent=0,
+)
+engine.start()
+spool = engine._spool_dir
+deadline = time.monotonic() + 60
+while not [f for f in os.listdir(spool) if not f.startswith(".")]:
+    assert time.monotonic() < deadline, "the poller wrote no spool file"
+    time.sleep(0.1)
+engine.stop()
+print("ARRIVAL", pq.read_table(spool).schema.field("arrival").type)
+print("SPOOL", spool)
 spark.stop()
 """
 
@@ -65,9 +112,12 @@ spark.stop()
 def test_stateful_query_runs_from_foreign_cwd(tmp_path):
     """A driver that imports the package through ``sys.path`` (no
     ``PYTHONPATH``) from a working directory outside the repository
-    must still run a stateful query: its update function is pickled by
-    reference to the package, so the Python workers have to be able to
-    import it."""
+    must still run a stateful query and decode a media fixture: the
+    update function and the fixture builders are pickled by reference
+    to the package, so the Python workers have to be able to import
+    it.  The same driver starts and stops a ``LiveEngine`` without a
+    ``spool_dir``: the spool it creates holds the poll instant as a
+    UTC timestamp and is gone once the driver exits."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     script = textwrap.dedent(_FOREIGN_CWD_MA.format(repo=str(REPO)))
     proc = subprocess.run(
@@ -80,3 +130,7 @@ def test_stateful_query_runs_from_foreign_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "MA [1.0, 2.0, 3.0, 4.0]" in proc.stdout
+    assert "LUMA True" in proc.stdout
+    assert "ARRIVAL timestamp[us, tz=UTC]" in proc.stdout
+    (spool,) = [ln[len("SPOOL ") :] for ln in proc.stdout.splitlines() if ln.startswith("SPOOL ")]
+    assert not os.path.exists(spool)

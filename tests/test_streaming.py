@@ -482,18 +482,14 @@ def test_streaming_phash_gate_equals_batch_gate(spark):
     import __spark_entry__ as entrymod
     from financial_data_stream_processing_engine_spark.io_utils import load_table
     from financial_data_stream_processing_engine_spark.operators import phash
-    from financial_data_stream_processing_engine_spark.plans.llm_queries import (
-        _md5_phash_png_generator,
-    )
+    from financial_data_stream_processing_engine_spark.plans import media_fixtures
     from financial_data_stream_processing_engine_spark.operators import multimodal
 
     sf_dir = "/root/testdata/sf0.001"
     streamed = entrymod.queries()["streaming_phash_gate"](spark, sf_dir)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pngs = docs.mapInPandas(
-        _md5_phash_png_generator(), schema="doc_id long, payload binary"
-    )
+    pngs = media_fixtures.payload_frame(docs, media_fixtures.png_phash)
     media = multimodal.as_media(
         pngs, id_col="doc_id", payload=F.col("payload"),
         kind="image", mime="image/png",

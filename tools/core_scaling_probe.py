@@ -39,6 +39,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import bench_session, local_master, time_reps  # noqa: E402
+
 #: data-parallel batch entries with a real data term (one per family:
 #: scan-agg, window top-k, salted skew agg, PPJoin dedup, unigram
 #: Viterbi segmentation, the grouped-fold Python seam)
@@ -177,23 +179,11 @@ def generate(spark, out_dir: str, scale: int) -> None:
 
 
 def child_run(data_dir: str, reps: int, entries: list[str]) -> None:
-    from financial_data_stream_processing_engine_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("core_scaling_probe", master=f"local[{cpus}]")
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    spark.range(1000).selectExpr("sum(id)").collect()
-    out = {}
-    for name in entries:
-        best = float("inf")
-        for i in range(reps):
-            spark.sparkContext.setJobDescription(f"core_scaling:{name}:rep{i}")
-            t0 = time.time()
-            qs[name](spark, data_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        out[name] = round(best, 3)
+    spark, qs = bench_session("core_scaling_probe", local_master())
+    out = {
+        name: round(min(time_reps(qs[name], spark, data_dir, reps, f"core_scaling:{name}")[0]), 3)
+        for name in entries
+    }
     print("CHILD_RESULT " + json.dumps(out), flush=True)
 
 

@@ -26,11 +26,12 @@ import json
 import os
 import re
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import bench_session, local_master, time_reps  # noqa: E402
 
 
 def formatted_plan(df) -> str:
@@ -48,28 +49,12 @@ def main() -> int:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    from financial_data_stream_processing_engine_spark.session import get_spark
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("opt_probe", master=f"local[{cpus}]")
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    spark.range(1000).selectExpr("sum(id)").collect()  # JVM warmup
+    spark, qs = bench_session("opt_probe", local_master())
 
     for name in args.queries:
-        fn = qs[name]
-        reps: list[float] = []
-        plan_txt = None
-        for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"opt_probe:{name}:rep{i}")
-            t0 = time.time()
-            df = fn(spark, args.sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            reps.append(round(time.time() - t0, 3))
-            if plan_txt is None:
-                plan_txt = formatted_plan(df)
-        spark.sparkContext.setJobDescription(None)
+        times, df = time_reps(qs[name], spark, args.sf_dir, args.reps, f"opt_probe:{name}")
+        reps = [round(t, 3) for t in times]
+        plan_txt = formatted_plan(df)
         stats = {
             "query": name,
             "reps_sec": reps,

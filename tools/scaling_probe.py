@@ -47,11 +47,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import bench_session, time_reps  # noqa: E402
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -159,29 +160,18 @@ def main() -> int:
         entries = dict(DEFAULT_ENTRIES)
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
 
-    from financial_data_stream_processing_engine_spark.session import get_spark
-
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    unknown = [n for n in entries if n not in qs]
+    unknown = [n for n in entries if n not in entrymod.queries()]
     if unknown:
         print(f"unknown entries: {unknown}")
         return 2
 
-    spark = get_spark("scaling_probe")
+    spark, qs = bench_session("scaling_probe", None)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()  # JVM warmup
 
     def measure_one(name: str, sf_dir: str) -> float:
-        best = float("inf")
-        for _ in range(max(1, reps)):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.time() - t0)
-        return round(best, 3)
+        return round(min(time_reps(qs[name], spark, sf_dir, max(1, reps))[0]), 3)
 
     def excess_of(ts: list[float], fam: str) -> list[float]:
         t1, t2, t3 = ts
