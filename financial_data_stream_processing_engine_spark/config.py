@@ -34,12 +34,11 @@ class EngineConfig:
     #: seconds between the live engine's AlphaVantage polls
     av_poll_interval_s: float = 15.0
     # Scale knobs (not in the reference — 100 TB discipline, SURVEY.md §7):
-    #: state TTL for streaming keyed state; the reference leaks state for
-    #: unbounded key sets (financial_engine.py:298), we bound it.
-    #: ``None`` disables the timeout (synchronous tests: with a
-    #: processing-time timeout the engine schedules continuous empty
-    #: micro-batches and processAllAvailable never settles).
-    state_ttl_ms: int | None = 24 * 3600 * 1000
+    #: state TTL for streaming keyed state: a symbol idle for longer
+    #: restarts its window on its next tick (the reference keeps every
+    #: window forever, financial_engine.py:298).  Enforced lazily from
+    #: the state's last-update time, so it schedules no idle batches.
+    state_ttl_ms: int = 24 * 3600 * 1000
     #: shuffle partitions of batch queries for local runs (AQE coalesces
     #: them); on a real cluster leave to AQE.  The live engine's state
     #: partitions do not follow this: they come from the task slots

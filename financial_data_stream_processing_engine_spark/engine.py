@@ -228,7 +228,8 @@ class LiveEngine:
           applied to this query only: the caller's
           ``spark.sql.shuffle.partitions``, which governs batch
           shuffles, reads the same after ``start()``;
-        * the MA state schema (one price buffer per symbol);
+        * the MA state schema (one price buffer and its ``touched_ms``
+          per symbol);
         * the name ``live_engine``, the MA window
           ``config.moving_average_window`` and the state TTL
           ``config.state_ttl_ms``.
@@ -238,7 +239,9 @@ class LiveEngine:
         same sources on the same spool, and it keeps the recorded state
         partition count whatever the slots are now (32 for checkpoints
         written while the count followed
-        ``EngineConfig.shuffle_partitions``).  The last three are not
+        ``EngineConfig.shuffle_partitions``).  Spark refuses a
+        checkpoint whose state schema lacks ``touched_ms`` (written
+        before the TTL moved into the state).  The last three are not
         frozen: each start sets them afresh.
         """
         if self.query is not None:
@@ -268,11 +271,6 @@ class LiveEngine:
         finally:
             conf.set("spark.sql.shuffle.partitions", caller_partitions)
         return self
-
-    def process_all_available(self) -> None:
-        """Synchronously drain everything currently available (tests)."""
-        assert self.query is not None, "engine not started"
-        self.query.processAllAvailable()
 
     def run_for(self, seconds: float) -> None:
         """Demo helper: run the engine for a wall-clock duration

@@ -110,7 +110,7 @@ def streaming_ma_rowcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitwise, proving streaming/batch parity to the driver.
     """
     stream = _event_tick_stream(spark, sf_dir)
-    out = stateful.streaming_moving_average(stream, n=5, ttl_ms=None)
+    out = stateful.streaming_moving_average(stream, n=5)
     result = _run(out, spark)
     return result.select(
         F.col("id").cast("bigint").alias("event_id"),
@@ -335,7 +335,7 @@ def streaming_ewma_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-fold oracle as the batch window_ewma_per_user, proving
     streaming/batch/oracle three-way parity bitwise."""
     stream = _event_tick_stream(spark, sf_dir)
-    out = stateful.streaming_ewma(stream, alpha=0.2, ttl_ms=None)
+    out = stateful.streaming_ewma(stream, alpha=0.2)
     result = _run(out, spark)
     return result.select(
         F.col("id").cast("bigint").alias("event_id"),
@@ -427,11 +427,7 @@ def streaming_fin_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     footprint in the engine (three doubles per symbol), the shape a
     live indicator service runs."""
     stream = _event_tick_stream(spark, sf_dir).where(F.col("price").isNotNull())
-    # ttl_ms=None: ProcessingTimeTimeout schedules continuous empty
-    # micro-batches purely to check timeouts, so processAllAvailable()
-    # never settles in the synchronous harness (same choice as
-    # streaming_ma_rowcount / streaming_ewma)
-    out = stateful.streaming_macd(stream, ttl_ms=None)
+    out = stateful.streaming_macd(stream)
     result = _run(out, spark)
     return result.select(
         F.col("id").cast("bigint").alias("event_id"),
@@ -525,7 +521,7 @@ def streaming_zscore_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sums in Python Decimal, so streaming == batch
     (fin_zscore_anomalies shape) == DuckDB."""
     stream = _event_tick_stream(spark, sf_dir).where(F.col("price").isNotNull())
-    out = stateful.streaming_zscore_alerts(stream, n=20, z_threshold=3.0, ttl_ms=None)
+    out = stateful.streaming_zscore_alerts(stream, n=20, z_threshold=3.0)
     result = _run(out, spark)
     return result.select(
         F.col("id").cast("bigint").alias("event_id"),
@@ -955,7 +951,7 @@ def streaming_pattern_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     qvals = [float(r.value) for r in qrows]
-    out = stateful.streaming_pattern_distance(stream, qvals, length=8, ttl_ms=None)
+    out = stateful.streaming_pattern_distance(stream, qvals, length=8)
     result = _run(out, spark)
     # top-k via orderBy+limit (TakeOrderedAndProject: per-partition
     # heap, no global single-partition window over the sink) — the

@@ -17,8 +17,15 @@ decisions live in one place each:
 * key participation — ``operators.core._key_participates``: NULL and
   ``''`` symbols take no state and come out with NULL outputs (or are
   dropped by the operators that emit only scored rows);
-* state lifetime — a TTL (ProcessingTimeTimeout); the reference leaks
-  state forever for unbounded key sets (:298).
+* state lifetime — a TTL kept in the state: the shell stamps each
+  key's state with its batch time (``touched_ms``) and hands ``step``
+  the initial state when the key returns after more than ``ttl_ms``
+  (Spark's timeout rule, ``touched + ttl < now``), so a key idle past
+  the TTL restarts its window.  Nothing sweeps a key that never
+  returns: its state stays, bounded by distinct keys × (n + 1) values
+  (the reference keeps every deque forever, :298).  In return the
+  shell runs ``NoTimeout``, so Spark schedules no no-data batches for
+  it.  A checkpoint written before ``touched_ms`` cannot be resumed.
 
 ``streaming_sessionize_timeout`` keeps its own body: its event-time
 timeout emits rows.
@@ -69,25 +76,21 @@ def _keyed_state(
     output_schema: str,
     state_schema: str,
     init: tuple,
-    ttl_ms: int | None,
+    ttl_ms: int,
     null_cols: tuple[str, ...] | None,
 ) -> DataFrame:
     """The shell of every TTL-keyed streaming operator: one
     ``applyInPandasWithState`` over ``symbol``, in ONE scan of the
     source.
 
-    Per group and micro-batch it expires timed-out state, reads the
-    state (``init`` when absent), sorts the rows by the arrival-order
-    rule, calls ``step(state, pdf) -> (state, out | None)``, emits
-    ``out`` and writes the state back with a fresh TTL.  A group whose
-    key fails ``_key_participates`` (NULL or ``''``) never touches
-    state: its rows come out with the ``null_cols`` outputs NULL, or
-    are dropped when ``null_cols`` is None.
-
-    NoTimeout when TTL is disabled: with ProcessingTimeTimeout the
-    engine schedules continuous empty micro-batches purely to check
-    timeouts, which also keeps processAllAvailable() from settling in
-    synchronous tests.
+    Per group and micro-batch it reads the state (``init`` when absent
+    or idle past ``ttl_ms``), sorts the rows by the arrival-order rule,
+    calls ``step(state, pdf) -> (state, out | None)``, emits ``out``
+    and writes the state back with this batch's time appended
+    (``touched_ms``, which ``step`` never sees).  A group whose key
+    fails ``_key_participates`` (NULL or ``''``) never touches state:
+    its rows come out with the ``null_cols`` outputs NULL, or are
+    dropped when ``null_cols`` is None.
     """
     nulls = dict.fromkeys(null_cols or (), float("nan"))
 
@@ -96,9 +99,6 @@ def _keyed_state(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
         pdf = _sorted_batch(pdfs)
         if pdf is None:
             return
@@ -106,12 +106,12 @@ def _keyed_state(
             if null_cols is not None:
                 yield pdf.drop(columns="__part").assign(**nulls)
             return
-        s, out = step(state.get if state.exists else init, pdf.drop(columns="__part"))
+        now = state.getCurrentProcessingTimeMs()
+        live = state.exists and now - state.get[-1] <= ttl_ms
+        s, out = step(state.get[:-1] if live else init, pdf.drop(columns="__part"))
         if out is not None and len(out):
             yield out
-        state.update(s)
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+        state.update((*s, now))
 
     return (
         ticks.withColumn("__part", _key_participates(ticks, "symbol"))
@@ -119,13 +119,9 @@ def _keyed_state(
         .applyInPandasWithState(
             update,
             outputStructType=output_schema,
-            stateStructType=state_schema,
+            stateStructType=f"{state_schema}, touched_ms long",
             outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if ttl_ms is not None
-                else GroupStateTimeout.NoTimeout
-            ),
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -137,7 +133,7 @@ def _floats(values: list, index: pd.Index) -> pd.Series:
 def streaming_moving_average(
     ticks: DataFrame,
     n: int = 5,
-    ttl_ms: int | None = 24 * 3600 * 1000,
+    ttl_ms: int = 24 * 3600 * 1000,
 ) -> DataFrame:
     """Per-symbol row-count moving average over a tick stream.
 
@@ -148,10 +144,10 @@ def streaming_moving_average(
     NULL and ``''`` symbols get a NULL moving average and take no
     window slot, in the same scan as the keyed rows.
 
-    State: one double[<=n] ring buffer per key — O(n) bytes; expired
-    after ``ttl_ms`` without traffic.  Scale: state store shards by the
-    group key across executors; a hot symbol is one partition but state
-    is tiny and the per-batch work is O(batch rows).
+    State: one double[<=n] ring buffer per key — O(n) bytes; restarted
+    when the key returns after ``ttl_ms`` without traffic.  Scale: state
+    store shards by the group key across executors; a hot symbol is one
+    partition but state is tiny and the per-batch work is O(batch rows).
     """
 
     def step(state, pdf):
@@ -183,7 +179,7 @@ EWMA_STATE_SCHEMA = "s double"
 def streaming_ewma(
     ticks: DataFrame,
     alpha: float = 0.2,
-    ttl_ms: int | None = 24 * 3600 * 1000,
+    ttl_ms: int = 24 * 3600 * 1000,
 ) -> DataFrame:
     """Per-symbol EWMA over a tick stream — the streaming twin of
     operators.core.ewma: s_i = α·v_i + (1-α)·s_{i-1}, state = ONE
@@ -223,7 +219,7 @@ def streaming_macd(
     fast: int = 12,
     slow: int = 26,
     signal: int = 9,
-    ttl_ms: int | None = 24 * 3600 * 1000,
+    ttl_ms: int = 24 * 3600 * 1000,
 ) -> DataFrame:
     """Per-symbol MACD over a tick stream — the streaming twin of
     operators.finance.macd: three coupled EMA recurrences whose entire
@@ -279,7 +275,7 @@ def streaming_zscore_alerts(
     ticks: DataFrame,
     n: int = 20,
     z_threshold: float = 3.0,
-    ttl_ms: int | None = 24 * 3600 * 1000,
+    ttl_ms: int = 24 * 3600 * 1000,
 ) -> DataFrame:
     """Per-symbol causal z-score anomaly alerts over a tick stream —
     the streaming twin of operators.finance.zscore_anomalies: a ring
@@ -460,7 +456,7 @@ def streaming_pattern_distance(
     ticks: DataFrame,
     qvals: list[float],
     length: int = 8,
-    ttl_ms: int | None = 24 * 3600 * 1000,
+    ttl_ms: int = 24 * 3600 * 1000,
 ) -> DataFrame:
     """Per-symbol z-normalized euclidean distance of every length-
     ``length`` sliding price window to the query pattern ``qvals`` —

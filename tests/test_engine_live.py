@@ -45,7 +45,6 @@ def _canned_fetch(url: str, timeout_s: float) -> dict:
 def test_live_engine_end_to_end(spark, tmp_path):
     cfg = dataclasses.replace(
         DEFAULT_CONFIG,
-        state_ttl_ms=None,
         # WS symbols disjoint from the canned AV symbols (IBM/MSFT):
         # MA state is shared across sources per symbol (U1), so a WS
         # row on IBM would legitimately inherit AV's high average and
@@ -116,7 +115,7 @@ def _restart_across_checkpoint(spark, tmp_path, monkeypatch=None, phase1_partiti
     delivered BEFORE the restart.  With ``phase1_partitions``, phase 1
     runs with the state partition rule patched to return it.  Returns
     each phase's state partition count."""
-    cfg = dataclasses.replace(DEFAULT_CONFIG, state_ttl_ms=None, av_poll_interval_s=0.02)
+    cfg = dataclasses.replace(DEFAULT_CONFIG, av_poll_interval_s=0.02)
     counter = itertools.count()
 
     def fetch(url: str, timeout_s: float) -> dict:
@@ -197,7 +196,6 @@ def test_fresh_start_sizes_state_to_slots_for_its_query_only(spark, tmp_path):
     spark.conf.set(key, "32")
     engine = LiveEngine(
         spark,
-        config=dataclasses.replace(DEFAULT_CONFIG, state_ttl_ms=None),
         ws_rows_per_second=20,
         csv_rows_per_second=0,
     )
@@ -262,7 +260,6 @@ def test_fanout_alert_cap_keeps_payload_typed(spark):
     calls: list[tuple[list, int]] = []
     engine = LiveEngine(
         spark,
-        config=dataclasses.replace(DEFAULT_CONFIG, state_ttl_ms=None),
         on_alert=lambda rows, n_suppressed: calls.append((rows, n_suppressed)),
         keep_recent=0,
         max_alerts_per_epoch=3,
@@ -281,7 +278,7 @@ def test_fanout_alert_cap_keeps_payload_typed(spark):
 
 
 def test_live_engine_log_level_gates_logging(spark):
-    cfg = dataclasses.replace(DEFAULT_CONFIG, state_ttl_ms=None, log_level="ERROR")
+    cfg = dataclasses.replace(DEFAULT_CONFIG, log_level="ERROR")
     logs: list[str] = []
     engine = LiveEngine(
         spark, config=cfg, logger=logs.append, ws_rows_per_second=20,

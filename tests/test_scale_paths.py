@@ -61,7 +61,7 @@ def test_streaming_checkpoint_restart_no_duplicates(spark, tmp_path):
         # file sink + checkpoint = the real exactly-once recovery path
         # (the memory sink refuses checkpoint recovery by design)
         stream = spark.readStream.schema(schema).parquet(src)
-        ma = stateful.streaming_moving_average(stream, n=3, ttl_ms=None)
+        ma = stateful.streaming_moving_average(stream, n=3)
         q = (
             ma.writeStream.format("parquet").outputMode("append")
             .option("path", out).option("checkpointLocation", chk).start()

@@ -50,9 +50,7 @@ rows = [
     for i in range(6)
 ]
 spark.createDataFrame(rows, schema).write.parquet("ticks")
-ma = streaming_moving_average(
-    spark.readStream.schema(schema).parquet("ticks"), n=3, ttl_ms=None
-)
+ma = streaming_moving_average(spark.readStream.schema(schema).parquet("ticks"), n=3)
 q = ma.writeStream.format("memory").queryName("ma").start()
 q.processAllAvailable()
 q.stop()

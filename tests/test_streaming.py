@@ -82,7 +82,7 @@ def _assert_edge_keys(spark, tick_dir, got, batch_op, cols):
 
 
 def test_stateful_row_count_ma_matches_batch(spark, tick_dir):
-    out = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5, ttl_ms=None)
+    out = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5)
     q = _run_to_memory(out, "ma_stream")
     # NULL/'' symbols ride the same scan as the keyed rows: the source
     # is read once, so Spark counts each input row once
@@ -158,7 +158,7 @@ def _drive_fanout(spark, tick_dir, log_level, on_alert, logger):
         logger=logger,
         keep_recent=0,
     )
-    ma = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5, ttl_ms=None)
+    ma = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5)
     q = ma.writeStream.foreachBatch(engine._fanout).start()
     q.processAllAvailable()
     q.stop()
@@ -226,29 +226,11 @@ def test_csv_replay_cycles_reference_rows(spark):
     assert {r.price for r in rows} == {205.50, 880.10, 550.25}
 
 
-def test_stateful_ma_with_ttl_processes_data(spark, tick_dir):
-    """The ProcessingTimeTimeout (TTL) path must process data without
-    crashing; it keeps scheduling timeout-check batches, so drive it by
-    wall-clock instead of processAllAvailable."""
-    out = stateful.streaming_moving_average(
-        _stream(spark, tick_dir), n=5, ttl_ms=60_000
-    )
-    q = sinks.memory_sink(out, "ma_ttl_stream")
-    deadline = time.time() + 60
-    while time.time() < deadline and spark.table("ma_ttl_stream").count() < 240:
-        time.sleep(1)
-    n = spark.table("ma_ttl_stream").count()
-    q.stop()
-    assert n == 240
-
-
 def test_stateful_ma_ttl_resets_window_after_idle(spark, tmp_path):
     """A key idle for longer than the TTL loses its window: when it
     returns, its new rows get a NULL MA until ``n`` new prices arrive.
-    Expiry happens in the no-data batches that ProcessingTimeTimeout
-    schedules: a key that has data in a batch sees ``hasTimedOut``
-    false even when its TTL has passed, so without those batches the
-    returning key would continue from its stale prices."""
+    Expiry is lazy, from the batch time kept in the key's state, so the
+    idle query runs no batches; the returning key holds one state row."""
     ttl_ms, n = 1500, 3
     path = str(tmp_path / "ticks")
     base = dt.datetime(2024, 3, 1)
@@ -260,37 +242,38 @@ def test_stateful_ma_ttl_resets_window_after_idle(spark, tmp_path):
         ]
         spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
-    def wait_rows(count):
+    def wait_progress(count):
+        # until the batches that read ``count`` rows have reported progress
         deadline = time.time() + 60
-        while time.time() < deadline and spark.table("ma_ttl_idle").count() < count:
+        while time.time() < deadline and (
+            sum(p["numInputRows"] for p in q.recentProgress) < count
+        ):
             time.sleep(0.2)
-
-    def state_rows(q):
-        ops = (q.lastProgress or {}).get("stateOperators") or [{}]
-        return ops[0].get("numRowsTotal")
 
     append([10.0, 20.0, 30.0], 0)
     out = stateful.streaming_moving_average(_stream(spark, path), n=n, ttl_ms=ttl_ms)
     q = sinks.memory_sink(out, "ma_ttl_idle")
     try:
-        wait_rows(n)
-        # idle until a no-data batch has expired the key's state
-        deadline = time.time() + 60
-        while time.time() < deadline and state_rows(q) != 0:
-            time.sleep(0.2)
+        wait_progress(n)
+        batches_before_idle = len(q.recentProgress)
+        time.sleep(ttl_ms / 1000 + 1.0)
+        idle_batches = len(q.recentProgress) - batches_before_idle
         append([40.0, 50.0], n)
-        wait_rows(n + 2)
+        wait_progress(n + 2)
+        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
     finally:
         q.stop()
     got = {r.id: r.moving_average for r in spark.table("ma_ttl_idle").collect()}
     # before the idle gap the window filled; after it the window restarts
     assert got == {"t0000": None, "t0001": None, "t0002": 20.0, "t0003": None, "t0004": None}
+    assert idle_batches == 0
+    assert state_rows == 1
 
 
 def test_streaming_macd_matches_batch_fold(spark, tick_dir):
     from financial_data_stream_processing_engine_spark.operators import finance
 
-    out = stateful.streaming_macd(_stream(spark, tick_dir), ttl_ms=None)
+    out = stateful.streaming_macd(_stream(spark, tick_dir))
     _run_to_memory(out, "macd_stream")
     cols = ("macd", "macd_signal", "macd_histogram")
     got = {
@@ -310,7 +293,7 @@ def test_streaming_macd_matches_batch_fold(spark, tick_dir):
 def test_streaming_ewma_matches_batch_fold(spark, tick_dir):
     from financial_data_stream_processing_engine_spark.operators.core import ewma
 
-    out = stateful.streaming_ewma(_stream(spark, tick_dir), alpha=0.2, ttl_ms=None)
+    out = stateful.streaming_ewma(_stream(spark, tick_dir), alpha=0.2)
     _run_to_memory(out, "ewma_stream")
     got = {r.id: (r.ewma,) for r in spark.table("ewma_stream").collect()}
     # bitwise: the same a·v + b·s update in the same order
@@ -337,7 +320,7 @@ def test_streaming_zscore_alerts_matches_batch(spark, tmp_path):
     path = str(tmp_path / "zticks")
     df.coalesce(1).write.parquet(path)
 
-    out = stateful.streaming_zscore_alerts(_stream(spark, path), n=20, ttl_ms=None)
+    out = stateful.streaming_zscore_alerts(_stream(spark, path), n=20)
     _run_to_memory(out, "zscore_stream")
     got = {
         int(r.id): (r.baseline_mean, r.baseline_sd, r.zscore)
