@@ -36,7 +36,13 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
+
+from financial_data_stream_processing_engine_spark.operators.multimodal import (
+    _map_payloads,
+    decode_image,
+)
 
 #: fixed-point scale of the quantized DCT-II basis (2^14, the JPEG
 #: integer-DCT convention)
@@ -79,10 +85,11 @@ def phash64(df: DataFrame) -> DataFrame:
     """media frame (media_id, payload, ...) → one row per decodable
     image: ``(media_id, width, height, phash, dc, median_ac)``.
 
-    One Arrow ``mapInPandas`` pass: the REAL stdlib decoders
-    (:mod:`.multimodal` — PNG/JPEG/GIF/BMP/TIFF dispatch on magic)
-    produce the pixel grid; multi-channel images use channel 0;
-    non-8x8 grids are downsampled by exact strided selection
+    One Arrow ``mapInPandas`` pass (``multimodal._map_payloads``): the
+    REAL stdlib decoders (``multimodal.decode_image`` — PNG/JPEG/GIF/
+    BMP/TIFF dispatch on magic) produce the pixel grid; multi-channel
+    images use channel 0; non-8x8 grids are downsampled by exact
+    strided selection
     ``px[(i*h)//8, (j*w)//8]`` (integer index math — deterministic,
     no resampling floats); then the exact integer DCT/median/pack
     described in the module docstring.  Undecodable payloads yield
@@ -92,74 +99,34 @@ def phash64(df: DataFrame) -> DataFrame:
     are returned alongside the hash so the driver's value hash
     certifies the DCT itself, not just the final bit pack.
     """
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _bmp_pixel_decoder,
-        _gif_pixel_decoder,
-        _jpeg_pixel_decoder,
-        _png_pixel_decoder,
-        _tiff_pixel_decoder,
+    Wm = np.array(DCT8_W, dtype=np.int64)
+
+    def hash_one(b):
+        dec = decode_image(b) if b is not None else None
+        if dec is None:
+            return None
+        px, _nch = dec
+        if px.ndim == 3:
+            px = px[:, :, 0]
+        h, w = px.shape
+        if h == 0 or w == 0:
+            return None
+        grid = px[(np.arange(8) * h) // 8][:, (np.arange(8) * w) // 8].astype(
+            np.int64
+        )
+        coef = Wm @ grid @ Wm.T  # exact int64 (|C| < 2^43)
+        flat = coef.ravel()
+        ac = flat[1:]  # indices 1..63 = (u, v) != (0, 0), idx = u*8+v-1
+        median = int(np.sort(ac, kind="stable")[31])  # 32nd smallest of 63
+        bits = ac > median
+        phash = int(np.sum((bits.astype(np.uint64)) << np.arange(63, dtype=np.uint64)))
+        return (int(w), int(h), phash, int(flat[0]), median)
+
+    return _map_payloads(
+        df, PHASH_SCHEMA, hash_one, ("media_id",),
+        {"width": "Int32", "height": "Int32", "phash": "Int64", "dc": "Int64",
+         "median_ac": "Int64"},
     )
-
-    decode_png_pixels = _png_pixel_decoder()
-    decode_jpeg_pixels = _jpeg_pixel_decoder()
-    decode_gif_pixels = _gif_pixel_decoder()
-    decode_bmp_pixels = _bmp_pixel_decoder()
-    decode_tiff_pixels = _tiff_pixel_decoder()
-    W = DCT8_W
-
-    def op(batches):
-        import numpy as np
-        import pandas as pd
-
-        Wm = np.array(W, dtype=np.int64)
-
-        def decode(b: bytes):
-            if len(b) >= 2 and b[0] == 0xFF and b[1] == 0xD8:
-                return decode_jpeg_pixels(b)
-            if len(b) >= 4 and b[:4] == b"GIF8":
-                return decode_gif_pixels(b)
-            if len(b) >= 2 and b[:2] == b"BM":
-                return decode_bmp_pixels(b)
-            if len(b) >= 4 and b[:4] in (b"II*\x00", b"MM\x00*"):
-                return decode_tiff_pixels(b)
-            return decode_png_pixels(b)
-
-        def hash_one(b):
-            dec = decode(bytes(b)) if b is not None else None
-            if dec is None:
-                return (None,) * 5
-            px, _nch = dec
-            if px.ndim == 3:
-                px = px[:, :, 0]
-            h, w = px.shape
-            if h == 0 or w == 0:
-                return (None,) * 5
-            grid = px[(np.arange(8) * h) // 8][:, (np.arange(8) * w) // 8].astype(
-                np.int64
-            )
-            coef = Wm @ grid @ Wm.T  # exact int64 (|C| < 2^43)
-            flat = coef.ravel()
-            ac = flat[1:]  # indices 1..63 = (u, v) != (0, 0), idx = u*8+v-1
-            median = int(np.sort(ac, kind="stable")[31])  # 32nd smallest of 63
-            bits = ac > median
-            phash = int(np.sum((bits.astype(np.uint64)) << np.arange(63, dtype=np.uint64)))
-            return (int(w), int(h), phash, int(flat[0]), median)
-
-        for pdf in batches:
-            out = [hash_one(b) for b in pdf["payload"]]
-            cols = list(zip(*out)) if out else [[]] * 5
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pd.array(cols[0], dtype="Int32"),
-                    "height": pd.array(cols[1], dtype="Int32"),
-                    "phash": pd.array(cols[2], dtype="Int64"),
-                    "dc": pd.array(cols[3], dtype="Int64"),
-                    "median_ac": pd.array(cols[4], dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(op, schema=PHASH_SCHEMA)
 
 
 def _check_phash_radius(radius: int) -> None:

@@ -1176,7 +1176,7 @@ def multimodal_bmp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL BMP codec round trip: each doc's 4×4 24-bit BMP stores
     md5-derived RGB as bottom-up BGR rows — decode must parse the
     BITMAPINFOHEADER, flip the row order, and swap BGR→RGB
-    (operators/multimodal.py::_bmp_pixel_decoder).  A decoder that
+    (operators/multimodal.py::decode_bmp).  A decoder that
     forgets the vertical flip produces a luma multiset that is
     IDENTICAL here (means are position-blind), so the flip itself is
     pinned by the pytest's asymmetric fixtures; what this entry's
@@ -1201,7 +1201,7 @@ def multimodal_gif_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERLACED, palette-indexed by md5 nibbles, and prefixed with an
     extension block — decode must skip the extension, inflate the
     variable-width LSB-first LZW stream, de-interlace, and map the
-    fixed palette (operators/multimodal.py::_gif_pixel_decoder).
+    fixed palette (operators/multimodal.py::decode_gif).
 
     Oracle strategy: per-palette BT.601 lumas are Python-precomputed
     with numpy's exact op order and embedded as double literals; the
@@ -1238,7 +1238,7 @@ def multimodal_png_4bit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     pass (several passes are one sample wide, leaving padding bits in
     every scanline byte), discard pass padding, run the byte-level
     filters at fbpp=1, and scatter on the Adam7 grid
-    (operators/multimodal.py::_png_pixel_decoder).
+    (operators/multimodal.py::decode_png).
 
     Oracle strategy: 4-bit samples scale by the exact integer 17, so
     mean luma = 17·Σnibbles / 32 / 255 with one shared final rounding
@@ -1267,7 +1267,7 @@ def multimodal_png_16bit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     once as high and once as low), filtered Paeth/Sub/Up/Average with
     the 2-byte pixel lane offset — decode must run the byte-level
     filters at bpp=2 and reassemble the 16-bit samples
-    (operators/multimodal.py::_png_pixel_decoder).
+    (operators/multimodal.py::decode_png).
 
     Oracle strategy: samples scale to the 8-bit range by the EXACT
     dyadic /256, so mean luma = 257·Σdigest / 16 / 256 / 255 with one
@@ -1332,7 +1332,7 @@ def multimodal_jpeg_progressive_roundtrip(spark: SparkSession, sf_dir: str) -> D
     corrections consumed inside the run, newly-significant ±1
     insertion, per-scan Huffman snapshots across a mid-stream DHT
     redefinition — then dequantizes/IDCTs once at the end
-    (operators/multimodal.py::_jpeg_pixel_decoder, progressive path).
+    (operators/multimodal.py::decode_jpeg, progressive path).
 
     Oracle strategy: the AC perturbations (±2 at zigzag 2, ±1 at
     zigzag 10) and the DC LSB each move any pixel < 0.5, so rint()
@@ -1367,7 +1367,7 @@ def multimodal_jpeg_restart_roundtrip(spark: SparkSession, sf_dir: str) -> DataF
     error-resilience layout real crawl JPEGs use.  Decoding requires
     the segment split, per-segment byte alignment, and predictor
     resets to all be right
-    (operators/multimodal.py::_jpeg_pixel_decoder).
+    (operators/multimodal.py::decode_jpeg).
 
     Oracle strategy: identical to the plain baseline roundtrip (DC-only
     constant blocks are transform-exact), so the bitwise md5 gate now
@@ -1728,7 +1728,7 @@ def multimodal_jpeg_420_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     chroma upsampling, JFIF BT.601 conversion — then BT.601 mean
     luma.  The oracle restates the whole thing from the md5 bytes,
     INCLUDING numpy's pairwise mean reduced to a closed form
-    (operators/multimodal.py::_jpeg_pixel_decoder)."""
+    (operators/multimodal.py::decode_jpeg)."""
     media = _fixture_media(spark, sf_dir, media_fixtures.jpeg_420, "image", "image/jpeg")
     return multimodal.decode_image_features(media, fake=False)
 
@@ -2892,7 +2892,7 @@ def multimodal_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     common real-world variant, routed through the same stdlib
     inflate the PNG path trusts) under the same predictor, and
     WhiteIsZero photometric with pre-inverted samples
-    (operators/multimodal.py::_tiff_pixel_decoder
+    (operators/multimodal.py::decode_tiff
     — IFD tag walk, inline-vs-offset values, strip reassembly,
     PackBits runs, predictor reversal, photometric normalization).
     All seven variants decode to the SAME md5 pixel bytes, so the

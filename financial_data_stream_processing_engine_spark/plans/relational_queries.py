@@ -3203,7 +3203,7 @@ SELECT event_id, user_id, value FROM events
 )
 def python_datasource_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource WRITER round-trip
-    (sources/tick_datasource.py::build_jsonl_sink_datasource): events
+    (sources/tick_datasource.py::JsonlDirDataSource): events
     written through ``format("jsonl_dir")`` — executor-parallel JSONL
     shards, rename-on-commit atomicity — then read back and proven
     lossless against the original table.  Doubles survive exactly

@@ -1,10 +1,15 @@
-"""Pinned payload bytes of every media fixture builder.
+"""Pinned payload bytes of every media fixture builder, and pinned
+decoded output of every codec over them.
 
-Each digest is the sha256 over the per-payload sha256 digests of
-``build(doc_id)`` for doc_id 0..199, in order.  The values were
+Each payload digest is the sha256 over the per-payload sha256 digests
+of ``build(doc_id)`` for doc_id 0..199, in order.  The values were
 recorded from the nested ``mapInPandas`` generators the builders
 replaced, so a match certifies that every multimodal catalog entry
-still decodes byte-identical fixtures.  No Spark session needed.
+still decodes byte-identical fixtures.  Each decoded digest covers the
+codec's output (pixels, shape and channel count; for WAV the rate,
+channel count and samples) for the same payloads and three truncations
+of each, so the ``None`` paths are pinned too.  No Spark session
+needed.
 """
 
 from __future__ import annotations
@@ -13,6 +18,7 @@ import hashlib
 
 import pytest
 
+from financial_data_stream_processing_engine_spark.operators import multimodal
 from financial_data_stream_processing_engine_spark.plans import media_fixtures
 
 DIGESTS = {
@@ -52,3 +58,85 @@ def test_payload_batches_keep_doc_ids_and_order():
     out = list(media_fixtures._payload_batches(media_fixtures.wav, iter(batches)))
     assert [list(f["doc_id"]) for f in out] == [[3, 1], [7]]
     assert list(out[0]["payload"]) == [media_fixtures.wav(3), media_fixtures.wav(1)]
+
+
+# ---------------------------------------------------------------------------
+# decoded output of every fixture, whole and truncated
+# ---------------------------------------------------------------------------
+
+#: builder → the codec that decodes its payloads (the MJPEG AVI's
+#: ``00dc`` frame chunks go through the JPEG codec)
+CODEC_OF = {
+    **{b: "png" for b in ("png_4x4", "png_adam7", "png_4bit", "png_16bit", "png_phash")},
+    **{b: "jpeg" for b in ("jpeg", "jpeg_progressive", "jpeg_restart", "jpeg_color", "jpeg_420")},
+    "gif": "gif",
+    "bmp": "bmp",
+    "tiff": "tiff",
+    **{b: "wav" for b in ("wav", "wav_stft", "wav_ulaw")},
+    "mjpeg_avi": "jpeg",
+}
+
+#: sha256 over the decoded output of every payload and three of its
+#: truncations, for doc_id 0..199; recorded from each builder's codec
+#: (the decoder factories the module-level codecs replaced).  Image
+#: payloads decode through ``decode_image`` here, so a match also pins
+#: the magic-byte dispatch to that codec.
+DECODED_DIGESTS = {
+    "bmp": "7929383c22670fd667208219655b65f91e083016e4db2ac21b443509f6a44310",
+    "gif": "9831372afb15bec5c223c27a118c3d33e8a46f1593cda18fe48e1956ae8d224d",
+    "jpeg": "de9dacede9c2f7164f2ffd34770d5e054f1efbd9bc3e70338b4f0b459c2ef27e",
+    "jpeg_420": "0b00714786c8872dbd19623c91175b8cbfc155046c7a017ea7d541a3532fd0e2",
+    "jpeg_color": "9602d6a4f4818851141774f878789b1042c72ca98fd066ebe2fc51561e431399",
+    "jpeg_progressive": "de9dacede9c2f7164f2ffd34770d5e054f1efbd9bc3e70338b4f0b459c2ef27e",
+    "jpeg_restart": "de9dacede9c2f7164f2ffd34770d5e054f1efbd9bc3e70338b4f0b459c2ef27e",
+    "mjpeg_avi": "ddc84fe73c39cf4eb411a31581d8a3e7631ceb183f06061b7b597d0fcef10e20",
+    "png_16bit": "a808cf2d7129ad87e9a1f6d05e7df38f8061bf97b1a48ebd79d8e621a4f7aa24",
+    "png_4bit": "96144e8e8f7aa7056c3ba255f46b89fa0086342b27859873a355384bdb8d26b9",
+    "png_4x4": "0f0a25d06661c01bebeff46d6ea688f0ac675f440069fc284f8c620bb5bae7c7",
+    "png_adam7": "92dce4cfcc51442ae052368e9d1670db167388db261754042bf7a0f9800350f1",
+    "png_phash": "a0bba327e322f498c43944505229d09d7bf8c7a95a35d181a53457f27bb0c15e",
+    "tiff": "2dc0cf69769a5586cdb20673b189b8cabc8be057817122ede5974ee9bd1a4902",
+    "wav": "c946a50011268e899368c6ea73d3d813d032d6cdf2895f3bdc7db78ae1571435",
+    "wav_stft": "3e07c3986c0a564519fb2876c11d5ff646aa208d9e96889b384a8e788900cbea",
+    "wav_ulaw": "512feab56534ad8b5a65468e05c947bed8865f3e0b71ac7e0e9d278e76962b85",
+}
+
+
+def _decoder(codec):
+    return multimodal.decode_wav if codec == "wav" else multimodal.decode_image
+
+
+def _avi_frames(payload):
+    """The ``00dc`` chunk bodies of a fixture AVI, cut short where the
+    payload is."""
+    at = payload.find(b"00dc")
+    while at >= 0:
+        n = int.from_bytes(payload[at + 4 : at + 8], "little")
+        yield payload[at + 8 : at + 8 + n]
+        at = payload.find(b"00dc", at + 8 + n)
+
+
+def _decoded_record(dec) -> bytes:
+    if dec is None:
+        return b"None"
+    if len(dec) == 3:  # WAV: (rate, nch, samples)
+        rate, nch, samples = dec
+        return repr((rate, nch, samples.dtype.str, samples.shape)).encode() + samples.tobytes()
+    px, nch = dec
+    return repr((px.dtype.str, px.shape, nch)).encode() + px.tobytes()
+
+
+@pytest.mark.parametrize("builder", sorted(CODEC_OF))
+def test_decoded_fixtures_are_pinned(builder):
+    build = getattr(media_fixtures, builder)
+    decode = _decoder(CODEC_OF[builder])
+    h = hashlib.sha256()
+    for doc_id in range(200):
+        payload = build(doc_id)
+        n = len(payload)
+        for cut in (payload, payload[: n // 4], payload[: n // 2], payload[: n - 1]):
+            parts = list(_avi_frames(cut)) if builder == "mjpeg_avi" else [cut]
+            for part in parts:
+                h.update(hashlib.sha256(_decoded_record(decode(part))).digest())
+            h.update(b"|")
+    assert h.hexdigest() == DECODED_DIGESTS[builder]

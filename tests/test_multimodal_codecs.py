@@ -610,7 +610,7 @@ def make_png_adam7(
 def test_png_adam7_pixel_positions(spark):
     """Scatter correctness pixel-for-pixel — a mean-based roundtrip
     cannot see a transposed or mis-strided pass; this can."""
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     # asymmetric gradient: every pixel value unique → any mis-scatter
     # lands a wrong value somewhere
     gray = (np.arange(64, dtype=np.uint8).reshape(8, 8, 1) * 3 + 7) % 256
@@ -653,7 +653,7 @@ def test_png_adam7_truncated_pass_yields_null(spark):
     good = make_png_adam7(gray, 0)
     # re-parse the chunks, truncate the filtered stream mid-pass, and
     # rebuild: the decoder must reject (None), not mis-scatter
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     pos, chunks = 8, {}
     while pos + 8 <= len(good):
         ln, typ = struct.unpack(">I4s", good[pos : pos + 8])
@@ -816,7 +816,7 @@ def test_jpeg_progressive_refinement_and_correction_bits(spark):
     first band scan, its LSB via refine_nz (correction bit 1) — plus an
     odd DC whose LSB arrives only in the DC refinement scan, and
     negative newly-significant insertion."""
-    decode = multimodal._jpeg_pixel_decoder()
+    decode = multimodal.decode_jpeg
     dcs = [117, -200, 83, -45]          # odd and even, both signs
     ac2 = [3, -3]                        # correction bit = 1 both
     ac10 = [-1, 1]
@@ -839,7 +839,7 @@ def test_jpeg_progressive_without_refinement_scans(spark):
     """Prefix decodability: dropping the three refinement scans must
     still decode (coarse approximation), with each DC at its Al=1
     precision and the ±1 coefficients absent."""
-    decode = multimodal._jpeg_pixel_decoder()
+    decode = multimodal.decode_jpeg
     dcs = [117, -200, 83, -45]
     full = make_progressive_jpeg(dcs, [3, -3], [-1, 1])
     # cut at the mid-stream DHT (first 3 scans survive) + EOI
@@ -860,7 +860,7 @@ def test_jpeg_progressive_without_refinement_scans(spark):
 
 
 def test_jpeg_progressive_truncated_scan_yields_null(spark):
-    decode = multimodal._jpeg_pixel_decoder()
+    decode = multimodal.decode_jpeg
     full = make_progressive_jpeg([116, -200, 82, -44], [2, -2], [-1, 1])
     # truncate the first scan's entropy data mid-bits: EOF → None
     first_sos = full.find(b"\xff\xda")
@@ -922,7 +922,7 @@ def _build_prog_rst(dcs, sri=2, eob_span=1, with_rst=True, with_dri=True):
 
 
 def test_jpeg_progressive_restart_markers(spark):
-    decode = multimodal._jpeg_pixel_decoder()
+    decode = multimodal.decode_jpeg
     dcs = [117, -200, 83, -45]
     px, nch = decode(_build_prog_rst(dcs, sri=2))
     assert nch == 1 and px.shape == (16, 16, 1)
@@ -935,7 +935,7 @@ def test_jpeg_progressive_restart_markers(spark):
 
 
 def test_jpeg_restart_malformed_variants_yield_null(spark):
-    decode = multimodal._jpeg_pixel_decoder()
+    decode = multimodal.decode_jpeg
     dcs = [117, -200, 83, -45]
     # DRI declared but RST markers absent: segment exhaustion → None
     assert decode(_build_prog_rst(dcs, sri=2, with_rst=False)) is None
@@ -1001,7 +1001,7 @@ def make_png16(samples: np.ndarray, ctype: int, interlace: int = 0) -> bytes:
 
 
 def test_png_16bit_pixel_values(spark):
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     g = rng.integers(0, 65536, (6, 5, 1), dtype=np.uint16)
     px, nch = decode(make_png16(g, 0))
     assert nch == 1 and px.shape == (6, 5, 1)
@@ -1014,7 +1014,7 @@ def test_png_16bit_pixel_values(spark):
 
 
 def test_png_16bit_adam7_positions(spark):
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     a = rng.integers(0, 65536, (9, 10, 4), dtype=np.uint16)
     px, nch = decode(make_png16(a, 6, interlace=1))
     assert nch == 4 and px.shape == (9, 10, 4)
@@ -1022,7 +1022,7 @@ def test_png_16bit_adam7_positions(spark):
 
 
 def test_png_16bit_malformed_variants(spark):
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     g = rng.integers(0, 65536, (4, 4, 1), dtype=np.uint16)
     good = make_png16(g, 0)
     # depth-16 palette is illegal per the spec → None
@@ -1095,7 +1095,7 @@ def make_png_subbyte(
 
 
 def test_png_subbyte_gray_depths(spark):
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     for depth in (1, 2, 4):
         g = rng.integers(0, 1 << depth, (7, 11), dtype=np.uint8)
         exp = g.astype(np.float64) * (255.0 / ((1 << depth) - 1))
@@ -1106,7 +1106,7 @@ def test_png_subbyte_gray_depths(spark):
 
 
 def test_png_subbyte_palette(spark):
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     idx4 = rng.integers(0, 16, (6, 9), dtype=np.uint8)
     px, nch = decode(make_png_subbyte(idx4, 4, 3, palette=pal))
@@ -1120,7 +1120,7 @@ def test_png_subbyte_palette(spark):
 
 
 def test_png_subbyte_color_types_reject(spark):
-    decode = multimodal._png_pixel_decoder()
+    decode = multimodal.decode_png
     g = rng.integers(0, 4, (4, 4), dtype=np.uint8)
     # sub-byte RGB / gray+alpha / RGBA are illegal per PNG 11.2.2
     for ctype in (2, 4, 6):
@@ -1215,7 +1215,7 @@ def make_gif(
 
 
 def test_gif_lzw_palettes_and_interlace(spark):
-    decode = multimodal._gif_pixel_decoder()
+    decode = multimodal.decode_gif
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     for hh, ww, interlace, ext, ver in [
         (4, 4, False, False, b"89a"), (7, 9, False, True, b"87a"),
@@ -1231,7 +1231,7 @@ def test_gif_lzw_palettes_and_interlace(spark):
 
 
 def test_gif_compression_width_growth_and_256_colors(spark):
-    decode = multimodal._gif_pixel_decoder()
+    decode = multimodal.decode_gif
     # low-entropy image → real compression, table growth over several
     # width bumps, KwKwK cases
     big = rng.integers(0, 4, (64, 80), dtype=np.uint8)
@@ -1245,7 +1245,7 @@ def test_gif_compression_width_growth_and_256_colors(spark):
 
 
 def test_gif_local_palette_overrides_global(spark):
-    decode = multimodal._gif_pixel_decoder()
+    decode = multimodal.decode_gif
     gpal = np.zeros((4, 3), np.uint8)
     lpal = rng.integers(0, 256, (8, 3), dtype=np.uint8)
     idx = rng.integers(0, 8, (5, 5), dtype=np.uint8)
@@ -1254,7 +1254,7 @@ def test_gif_local_palette_overrides_global(spark):
 
 
 def test_gif_malformed_variants_yield_null(spark):
-    decode = multimodal._gif_pixel_decoder()
+    decode = multimodal.decode_gif
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     idx = rng.integers(0, 16, (6, 6), dtype=np.uint8)
     good = make_gif(idx, pal)
@@ -1323,7 +1323,7 @@ def make_bmp(
 
 
 def test_bmp_pixel_values_and_row_order(spark):
-    decode = multimodal._bmp_pixel_decoder()
+    decode = multimodal.decode_bmp
     # asymmetric gradient: a missing bottom-up flip scrambles values
     rgb = (np.arange(5 * 7 * 3, dtype=np.uint8).reshape(5, 7, 3) * 3 + 1) % 256
     for top_down in (False, True):
@@ -1340,7 +1340,7 @@ def test_bmp_pixel_values_and_row_order(spark):
 
 
 def test_bmp_palette_and_malformed(spark):
-    decode = multimodal._bmp_pixel_decoder()
+    decode = multimodal.decode_bmp
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     idx = rng.integers(0, 16, (6, 5), dtype=np.uint8)
     px, nch = decode(make_bmp(idx, 8, palette=pal))
@@ -1532,7 +1532,7 @@ def test_avi_error_isolation_and_caps(spark):
 
 
 def test_gif_partial_canvas_first_frame_rejected(spark):
-    decode = multimodal._gif_pixel_decoder()
+    decode = multimodal.decode_gif
     pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
     idx = rng.integers(0, 16, (6, 6), dtype=np.uint8)
     good = make_gif(idx, pal)
@@ -2109,7 +2109,7 @@ def _make_tiff(px, endian="<", packbits=False, photo=None, rows_per_strip=None):
 
 
 def test_tiff_variants_roundtrip(spark):
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     rng_t = np.random.default_rng(5)
     gray = rng_t.integers(0, 256, (4, 4), dtype=np.uint8)
     rgb = rng_t.integers(0, 256, (5, 3, 3), dtype=np.uint8)
@@ -2133,7 +2133,7 @@ def test_tiff_variants_roundtrip(spark):
 
 
 def test_tiff_rejection_paths(spark):
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     gray = np.arange(16, dtype=np.uint8).reshape(4, 4)
     good = _make_tiff(gray)
     assert decode(good) is not None
@@ -2172,7 +2172,7 @@ def test_tiff_planar_config_rejected(spark):
     """PlanarConfiguration 2 stores per-channel PLANES; decoding it as
     chunky silently produces scrambled pixels — must take the NULL
     path instead."""
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     rgb = np.arange(45, dtype=np.uint8).reshape(5, 3, 3)
     good = _make_tiff(rgb)
     assert decode(good) is not None
@@ -2267,7 +2267,7 @@ def _make_tiff_lzw(px_bytes: bytes, w: int, h: int, predictor: int | None = None
 def test_tiff_lzw_roundtrip_widths_and_resets(spark):
     """LZW decode across code-width growth (9→12 bits) and mid-stream
     ClearCode table resets — 16 B to 64 KB strips round trip exactly."""
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     rng_l = np.random.default_rng(17)
     import random as _random
 
@@ -2297,7 +2297,7 @@ def test_tiff_lzw_predictor2_roundtrip(spark):
     mod-256 deltas must cumsum back to the original samples exactly —
     including rows whose running sums wrap past 255 — on several
     row/column shapes."""
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     rng = np.random.default_rng(5)
     for w, h in ((16, 1), (4, 4), (7, 5)):
         data = bytes(rng.integers(0, 256, w * h, dtype=np.uint8))
@@ -2315,7 +2315,7 @@ def test_tiff_predictor2_two_strip_rows_reset(spark):
     """Differencing restarts at every ROW, so strip boundaries are
     transparent: a two-strip LZW+predictor-2 image must decode to the
     same pixels as its single-strip twin."""
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     rng = np.random.default_rng(7)
     w, h = 4, 4
     data = bytes(rng.integers(0, 256, w * h, dtype=np.uint8))
@@ -2365,7 +2365,7 @@ def test_tiff_predictor_scope(spark):
     """Predictor 1 (none) is fine, float predictor 3 stays rejected,
     and predictor 2 paired with anything but LZW/Deflate is rejected
     rather than silently mis-decoded."""
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     data = bytes(range(16))
     assert decode(_make_tiff_lzw(data, 16, 1)) is not None
     assert decode(_make_tiff_lzw(data, 16, 1, predictor=1)) is not None
@@ -2420,7 +2420,7 @@ def test_tiff_deflate_roundtrip(spark):
     Predictor 2; a corrupt zlib stream isolates to None."""
     import zlib
 
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     rng = np.random.default_rng(11)
     for w, h in ((16, 1), (4, 4), (7, 5), (16, 64)):
         data = bytes(rng.integers(0, 256, w * h, dtype=np.uint8))
@@ -2453,7 +2453,7 @@ def test_tiff_fixture_variant_deflate_matches_md5(spark):
 
     from financial_data_stream_processing_engine_spark.plans.media_fixtures import tiff
 
-    decode = multimodal._tiff_pixel_decoder()
+    decode = multimodal.decode_tiff
     # doc_ids 0..13 cover every variant twice
     for did in range(14):
         dec = decode(tiff(did))

@@ -59,6 +59,7 @@ print("MA", sorted(r.moving_average for r in spark.table("ma").collect()
 
 # media fixture builders pickle by reference too
 import hashlib
+import os
 
 from pyspark.sql import functions as F
 
@@ -75,8 +76,18 @@ got = {{r.media_id: r.mean_luma
 want = {{i: sum(hashlib.md5(str(i).encode()).digest()) / 16.0 / 255.0 for i in range(4)}}
 print("LUMA", got == want)
 
+# the Python DataSource reader and writer pickle by reference too
+from financial_data_stream_processing_engine_spark.sources import tick_datasource
+
+tick_datasource.register(spark)
+tick_datasource.register_sink(spark)
+ticks = spark.read.format("ticks").option("rows", "10").option("partitions", "2").load()
+print("TICKS", sorted((r.id, r.symbol, r.volume) for r in ticks.collect()))
+ticks.select("id", "price").write.format("jsonl_dir").option("path", "jsonl").mode("append").save()
+print("JSONL", sorted(r.id for r in spark.read.schema("id bigint, price double").json("jsonl").collect()),
+      os.path.exists(os.path.join("jsonl", "_SUCCESS")))
+
 # an engine-owned AlphaVantage spool
-import os
 import time
 
 import pyarrow.parquet as pq
@@ -110,12 +121,14 @@ spark.stop()
 def test_stateful_query_runs_from_foreign_cwd(tmp_path):
     """A driver that imports the package through ``sys.path`` (no
     ``PYTHONPATH``) from a working directory outside the repository
-    must still run a stateful query and decode a media fixture: the
-    update function and the fixture builders are pickled by reference
-    to the package, so the Python workers have to be able to import
-    it.  The same driver starts and stops a ``LiveEngine`` without a
-    ``spool_dir``: the spool it creates holds the poll instant as a
-    UTC timestamp and is gone once the driver exits."""
+    must still run a stateful query, decode a media fixture, and read
+    and write through the package's Python DataSources: the update
+    function, the fixture builders, the codecs and the DataSource
+    classes are pickled by reference to the package, so the Python
+    workers have to be able to import it.  The same driver starts and
+    stops a ``LiveEngine`` without a ``spool_dir``: the spool it
+    creates holds the poll instant as a UTC timestamp and is gone once
+    the driver exits."""
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     script = textwrap.dedent(_FOREIGN_CWD_MA.format(repo=str(REPO)))
     proc = subprocess.run(
@@ -129,6 +142,10 @@ def test_stateful_query_runs_from_foreign_cwd(tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert "MA [1.0, 2.0, 3.0, 4.0]" in proc.stdout
     assert "LUMA True" in proc.stdout
+    symbols = ("AAPL", "MSFT", "GOOG", "AMZN", "NVDA")
+    want_ticks = [(i, symbols[i % 5], (i * 104729) % 10000) for i in range(10)]
+    assert f"TICKS {want_ticks}" in proc.stdout
+    assert f"JSONL {list(range(10))} True" in proc.stdout
     assert "ARRIVAL timestamp[us, tz=UTC]" in proc.stdout
     (spool,) = [ln[len("SPOOL ") :] for ln in proc.stdout.splitlines() if ln.startswith("SPOOL ")]
     assert not os.path.exists(spool)
