@@ -24,7 +24,8 @@ Spark-first translation:
   logging and alert observer (K1-K3).  Observer isolation is structural
   (DataFrames are immutable), replacing the reference's per-observer
   ``deepcopy``.
-* ``stop()`` stops the StreamingQuery and joins the poller thread.
+* ``stop()`` stops the StreamingQuery and joins the poller thread; it
+  raises the query's failure when the query died.
 
 No network is touched unless an :class:`AlphaVantageSource` is passed
 in; tests inject one with a canned ``fetch`` callable.
@@ -241,8 +242,9 @@ class LiveEngine:
         written while the count followed
         ``EngineConfig.shuffle_partitions``).  Spark refuses a
         checkpoint whose state schema lacks ``touched_ms`` (written
-        before the TTL moved into the state).  The last three are not
-        frozen: each start sets them afresh.
+        before the TTL moved into the state): the query dies in its
+        first batch, and :meth:`stop` raises that failure.  The last
+        three are not frozen: each start sets them afresh.
         """
         if self.query is not None:
             return self  # already running (reference :380)
@@ -293,10 +295,16 @@ class LiveEngine:
         self.stop()
 
     def stop(self) -> None:
+        """Stop the poller and the query, then raise the query's
+        failure if it died (a refused checkpoint, a failing observer):
+        a dead query is never stopped silently."""
         self._stop_poller()
         if self.query is not None:
-            self.query.stop()
-            self.query = None
+            query, self.query = self.query, None
+            query.stop()
+            error = query.exception()
+            if error is not None:
+                raise error
 
     def _stop_poller(self) -> None:
         if self._poller is not None:

@@ -80,7 +80,6 @@ def moving_average(
     value: str = "price",
     order_by: tuple[str, ...] = ("ts", "id"),
     out_col: str = "moving_average",
-    assume_participating: bool = False,
 ) -> DataFrame:
     """Per-key row-count sliding mean over the last ``n`` rows.
 
@@ -95,8 +94,8 @@ def moving_average(
        average nor occupy a slot in the n-row window of later rows.
     3. The window is row-count over arrival order, per key — not time
        based.  Batch "arrival order" is ``order_by`` (deterministic
-       total order; ``(key, *order_by)`` must be row-unique — pass the
-       ingestion-ts plus a tiebreaker).
+       total order; ``(key, *order_by)`` must be row-unique among the
+       participating rows — pass the ingestion-ts plus a tiebreaker).
 
     Implementation note: the mean is computed as an explicit lag-chain
     sum ``(v + lag(v,1) + … + lag(v,n-1)) / n`` rather than
@@ -105,52 +104,28 @@ def moving_average(
     makes results bit-reproducible against external oracles; it also
     avoids per-row frame re-aggregation.
 
-    To honor gotcha 2 exactly, the lag chain runs over the *filtered*
-    frame (participating rows only) and joins back on the row identity
-    ``(key, *order_by)`` — a NULL-value row can therefore never occupy
-    a lag slot.  That costs one extra shuffle; callers that have
-    already run :func:`clean` (every compat pipeline does) can pass
-    ``assume_participating=True`` for the single-shuffle direct chain,
-    which is identical when every row participates.
+    Gotcha 2 is honored by partitioning the window by ``(key,
+    participates)``: a non-participating row sits in a partition of its
+    own, so it can never occupy a lag slot of a participating row, and
+    its output is masked to NULL.
 
-    Scale: one window shuffle on ``key`` (+ one join-back shuffle in
-    the general path), no Python, state bounded by the frame.
+    Scale: one window shuffle on ``(key, participates)``, no Python,
+    state bounded by the frame.
     """
-    w = (
-        Window.partitionBy(key)
-        .orderBy(*[F.col(c) for c in order_by])
-    )
     val = F.col(value)
     participates = _key_participates(df, key) & val.isNotNull()
-
-    if assume_participating:
-        masked = F.when(participates, val)
-        total: Column = masked
-        for i in range(1, n):
-            total = total + F.lag(masked, i).over(w)
-        ma = (total / F.lit(float(n))).cast("double")
-        # total is NULL unless ALL n frame slots are non-NULL — the
-        # reference's "only when the deque is full" gate (:308); valid
-        # because the caller guarantees no NULL-value row interleaves.
-        return df.withColumn(out_col, F.when(participates, ma))
-
-    part = df.filter(participates)
+    w = Window.partitionBy(F.col(key), participates).orderBy(*[F.col(c) for c in order_by])
     total = val
     for i in range(1, n):
         total = total + F.lag(val, i).over(w)
-    # the scored side renames its identity columns (a self-derived join
-    # would otherwise resolve both sides to the same attribute), and
-    # the join-back is null-safe so a participating row with a NULL
-    # order_by column still finds its score.
-    #
-    # Row-uniqueness of (key, *order_by) is REQUIRED (a duplicate
-    # identity would fan out the join-back and silently duplicate input
-    # rows), so it is enforced engine-side: within the same window pass
-    # a tie with the previous row's order_by tuple raises — no extra
-    # shuffle, no extra action.
-    ident_struct = F.struct(*[F.col(c) for c in order_by])
-    dup = F.lag(ident_struct, 1).over(w).eqNullSafe(ident_struct)
-    ma_expr = F.when(
+    # Row-uniqueness of (key, *order_by) among participating rows is
+    # REQUIRED (a tie would make the window order, and so the averages,
+    # nondeterministic), so it is enforced engine-side: within the same
+    # window pass a tie with the previous row's order_by tuple raises —
+    # no extra shuffle, no extra action.
+    ident = F.struct(*[F.col(c) for c in order_by])
+    dup = participates & F.lag(ident, 1).over(w).eqNullSafe(ident)
+    ma = F.when(
         dup,
         F.raise_error(
             F.lit(
@@ -159,23 +134,7 @@ def moving_average(
             )
         ).cast("double"),
     ).otherwise((total / F.lit(float(n))).cast("double"))
-    idents = [key, *order_by]
-    scored = part.select(
-        *[F.col(c).alias(f"__ma_{i}") for i, c in enumerate(idents)],
-        ma_expr.alias(out_col),
-    )
-    cond = F.lit(True)
-    for i, c in enumerate(idents):
-        cond = cond & df[c].eqNullSafe(F.col(f"__ma_{i}"))
-    joined = df.join(scored, cond, "left").drop(
-        *[f"__ma_{i}" for i in range(len(idents))]
-    )
-    # re-mask after the join-back: a NON-participating row (NULL value)
-    # that happens to share (key, *order_by) with a participating row
-    # would otherwise inherit that row's score — the uniqueness guard
-    # above only sees the participating frame, so it cannot catch the
-    # mixed twin; gotcha 2 says the NULL-value row must stay NULL
-    return joined.withColumn(out_col, F.when(participates, F.col(out_col)))
+    return df.withColumn(out_col, F.when(participates, ma))
 
 
 def with_alert_flag(

@@ -59,8 +59,7 @@ def ma_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events has no volume column, so only the filter half of clean() applies.
     cleaned = ticks.filter(F.col("value").isNotNull() & (F.col("value") > 0))
     ma = moving_average(
-        cleaned, n=MA_N, key="user_id", value="value", order_by=("ts", "event_id"),
-        assume_participating=True,  # clean() above: single-shuffle fast path
+        cleaned, n=MA_N, key="user_id", value="value", order_by=("ts", "event_id")
     )
     return with_alert_flag(ma, threshold=ALERT_THRESHOLD)
 
@@ -236,7 +235,5 @@ def pipeline_multisource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     unified = union_sources(ws, av, csv)
     cleaned = clean(unified)
-    ma = moving_average(
-        cleaned, n=_PIPE_N, order_by=("ts", "id"), assume_participating=True
-    )
+    ma = moving_average(cleaned, n=_PIPE_N, order_by=("ts", "id"))
     return with_alert_flag(ma, threshold=_PIPE_THRESHOLD)

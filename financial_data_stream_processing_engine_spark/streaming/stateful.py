@@ -12,8 +12,9 @@ only its schemas, initial state and a per-group ``step``.  Three
 decisions live in one place each:
 
 * arrival order — :func:`_sorted_batch`, (ts, id) within each
-  micro-batch; the reference's asyncio task ordering is
-  nondeterministic anyway (SURVEY.md §3.2);
+  micro-batch, one stable argsort when ``ts`` has no NULLs or ties;
+  the reference's asyncio task ordering is nondeterministic anyway
+  (SURVEY.md §3.2);
 * key participation — ``operators.core._key_participates``: NULL and
   ``''`` symbols take no state and come out with NULL outputs (or are
   dropped by the operators that emit only scored rows);
@@ -33,11 +34,13 @@ timeout emits rows.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from financial_data_stream_processing_engine_spark.operators.core import _key_participates
@@ -56,12 +59,21 @@ def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     sort would only be deterministic within a chunk), then stable-sort
     by (ts, numeric id, id) — ties on ts break by id numerically when
     id encodes a number (matching the batch operators' event_id
-    order), falling back to the string itself.  Returns None for an
-    empty group so callers can skip."""
+    order), falling back to the string itself; NULL ts sorts last.
+    When ``ts`` has no NULLs and no ties it alone decides the order:
+    one stable argsort, and an ordered group is returned as is.
+    Returns None for an empty group so callers can skip."""
     chunks = [c for c in pdfs if len(c)]
     if not chunks:
         return None
-    pdf = pd.concat(chunks, ignore_index=True)
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    ts = pdf["ts"].to_numpy()
+    if not pd.isna(ts).any():
+        if (ts[1:] > ts[:-1]).all():
+            return pdf
+        order = np.argsort(ts, kind="stable")
+        if (ts[order[1:]] != ts[order[:-1]]).all():
+            return pdf.take(order)
     idnum = pd.to_numeric(pdf["id"], errors="coerce")
     return (
         pdf.assign(__idnum=idnum)
@@ -90,7 +102,10 @@ def _keyed_state(
     (``touched_ms``, which ``step`` never sees).  A group whose key
     fails ``_key_participates`` (NULL or ``''``) never touches state:
     its rows come out with the ``null_cols`` outputs NULL, or are
-    dropped when ``null_cols`` is None.
+    dropped when ``null_cols`` is None.  ``ts`` crosses the seam as
+    int64 epoch micros (NULL arrives as NaN), which Arrow hands to
+    pandas far cheaper than a timestamp column; the operator's output
+    gets its timestamp back after the seam.
     """
     nulls = dict.fromkeys(null_cols or (), float("nan"))
 
@@ -102,32 +117,30 @@ def _keyed_state(
         pdf = _sorted_batch(pdfs)
         if pdf is None:
             return
-        if not pdf["__part"].iloc[0]:  # one key, so one verdict, per group
+        if not pdf.pop("__part").iloc[0]:  # one key, so one verdict, per group
             if null_cols is not None:
-                yield pdf.drop(columns="__part").assign(**nulls)
+                yield pdf.assign(**nulls)
             return
         now = state.getCurrentProcessingTimeMs()
         live = state.exists and now - state.get[-1] <= ttl_ms
-        s, out = step(state.get[:-1] if live else init, pdf.drop(columns="__part"))
+        s, out = step(state.get[:-1] if live else init, pdf)
         if out is not None and len(out):
             yield out
         state.update((*s, now))
 
     return (
         ticks.withColumn("__part", _key_participates(ticks, "symbol"))
+        .withColumn("ts", F.unix_micros("ts"))
         .groupBy("symbol")
         .applyInPandasWithState(
             update,
-            outputStructType=output_schema,
+            outputStructType=output_schema.replace("ts timestamp", "ts long"),
             stateStructType=f"{state_schema}, touched_ms long",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+        .withColumn("ts", F.timestamp_micros("ts"))
     )
-
-
-def _floats(values: list, index: pd.Index) -> pd.Series:
-    return pd.Series(values, index=index, dtype="float64")
 
 
 def streaming_moving_average(
@@ -151,18 +164,20 @@ def streaming_moving_average(
     """
 
     def step(state, pdf):
-        prices = list(state[0])
-        mas = []
-        for price in pdf["price"]:
-            ma = None
-            if price is not None and not pd.isna(price):
-                prices.append(float(price))
-                if len(prices) > n:
-                    del prices[: len(prices) - n]
-                if len(prices) == n:
-                    ma = sum(prices) / n  # oldest→newest, like sum(deque)
-            mas.append(ma)
-        return (prices,), pdf.assign(moving_average=_floats(mas, pdf.index))
+        price = pdf["price"].to_numpy()
+        rows = np.flatnonzero(~np.isnan(price))  # the rows that take a slot
+        buf = np.concatenate((np.asarray(state[0], dtype="float64"), price[rows]))
+        # the full windows that end on a new price: buf[j : j + n], j >= first
+        first = max(len(buf) - len(rows) - n + 1, 0)
+        m = len(buf) - n + 1 - first
+        mas = np.full(len(price), np.nan)
+        if m > 0:
+            acc = np.zeros(m)
+            for i in range(n):  # 0 + oldest + … + newest, exactly sum(deque)
+                acc = acc + buf[first + i : first + i + m]
+            mas[rows[len(rows) - m :]] = acc / n
+        pdf["moving_average"] = mas  # the shell's own frame: no copy
+        return (buf[-n:].tolist(),), pdf
 
     return _keyed_state(
         ticks, step, OUTPUT_SCHEMA, STATE_SCHEMA, ([],), ttl_ms, ("moving_average",)
@@ -194,13 +209,13 @@ def streaming_ewma(
     def step(state, pdf):
         (s,) = state
         out = []
-        for price in pdf["price"]:
-            if price is None or pd.isna(price):
+        for price in pdf["price"].tolist():
+            if math.isnan(price):
                 out.append(None)
                 continue
-            s = float(price) if s is None else a * float(price) + b * s
+            s = price if s is None else a * price + b * s
             out.append(s)
-        return (s,), pdf.assign(ewma=_floats(out, pdf.index))
+        return (s,), pdf.assign(ewma=np.array(out, "float64"))
 
     return _keyed_state(
         ticks, step, EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA, (None,), ttl_ms, ("ewma",)
@@ -237,25 +252,19 @@ def streaming_macd(
 
     def step(state, pdf):
         ef, es, sig = state
-        m_out, s_out, h_out = [], [], []
-        for price in pdf["price"]:
-            if price is None or pd.isna(price):
-                m_out.append(None)
-                s_out.append(None)
-                h_out.append(None)
+        out = []
+        for v in pdf["price"].tolist():
+            if math.isnan(v):
+                out.append((None, None, None))
                 continue
-            v = float(price)
             ef = v if ef is None else af * v + bf * ef
             es = v if es is None else as_ * v + bs * es
             m = ef - es
             sig = m if sig is None else ag * m + bg * sig
-            m_out.append(m)
-            s_out.append(sig)
-            h_out.append(m - sig)
+            out.append((m, sig, m - sig))
+        m_out, s_out, h_out = np.array(out, "float64").T
         return (ef, es, sig), pdf.assign(
-            macd=_floats(m_out, pdf.index),
-            macd_signal=_floats(s_out, pdf.index),
-            macd_histogram=_floats(h_out, pdf.index),
+            macd=m_out, macd_signal=s_out, macd_histogram=h_out
         )
 
     return _keyed_state(
@@ -292,7 +301,6 @@ def streaming_zscore_alerts(
     is the reference's threshold alert (financial_engine.py:101-106)
     as a self-calibrating streaming detector.
     """
-    import math
     from decimal import ROUND_HALF_UP, Decimal
 
     quant = Decimal("0.0000001")
@@ -300,10 +308,10 @@ def streaming_zscore_alerts(
     def step(state, pdf):
         prices = list(state[0])
         mus, sds, zs, keep = [], [], [], []
-        for price in pdf["price"]:
+        for price in pdf["price"].tolist():
             flag = False
             mu = sd = z = None
-            p = None if price is None or pd.isna(price) else float(price)
+            p = None if math.isnan(price) else price
             if p is not None:
                 # batch parity: the ROWS −n..−1 frame counts every
                 # row as a slot and requires count(price) == n, so
@@ -342,11 +350,11 @@ def streaming_zscore_alerts(
             zs.append(z)
             keep.append(flag)
         out = pdf.assign(
-            baseline_mean=_floats(mus, pdf.index),
-            baseline_sd=_floats(sds, pdf.index),
-            zscore=_floats(zs, pdf.index),
+            baseline_mean=np.array(mus, "float64"),
+            baseline_sd=np.array(sds, "float64"),
+            zscore=np.array(zs, "float64"),
         )
-        return (prices,), out[pd.Series(keep, index=pdf.index)]
+        return (prices,), out[np.array(keep)]
 
     return _keyed_state(
         ticks, step, ZSCORE_OUTPUT_SCHEMA, ZSCORE_STATE_SCHEMA, ([],), ttl_ms, None
@@ -387,18 +395,13 @@ def streaming_sessionize_timeout(
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         def frame(rows: list[tuple[int, int, int]]) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "symbol": [key[0]] * len(rows),
-                    "session_start": [
-                        pd.to_datetime(s, unit="us") for s, _, _ in rows
-                    ],
-                    "session_end": [
-                        pd.to_datetime(e, unit="us") for _, e, _ in rows
-                    ],
-                    "n_events": [n for _, _, n in rows],
-                }
-            )
+            starts, ends, counts = zip(*rows)
+            return pd.DataFrame({
+                "symbol": [key[0]] * len(rows),
+                "session_start": pd.to_datetime(starts, unit="us"),
+                "session_end": pd.to_datetime(ends, unit="us"),
+                "n_events": counts,
+            })
 
         if state.hasTimedOut:
             start_us, end_us, n = state.get
@@ -475,8 +478,6 @@ def streaming_pattern_distance(
     floats ARE IEEE doubles, so streamed distances equal the batch
     (and DuckDB-oracle) distances bit-for-bit.
     """
-    import math
-
     acc = qvals[0]
     for v in qvals[1:]:
         acc = acc + v
@@ -490,17 +491,15 @@ def streaming_pattern_distance(
     zq = [(q - qm) / qs for q in qvals]
 
     def step(state, pdf):
-        import math as _math
-
         prices = list(state[0])
         out_rows = []
-        for row in pdf.itertuples(index=False):
-            price = row.price
+        cols = (pdf[c].tolist() for c in ("id", "symbol", "ts", "price"))
+        for rid, sym, ts, price in zip(*cols):
             # batch parity: the lag-chain counts every ROW as a
             # window slot, and any window containing a NULL price
             # yields NULL stats (dropped) — so NULL prices consume
             # a slot here too and poison the windows they sit in
-            p = None if price is None or pd.isna(price) else float(price)
+            p = None if math.isnan(price) else price
             prices.append(p)
             if len(prices) > length:
                 del prices[: len(prices) - length]
@@ -513,7 +512,7 @@ def streaming_pattern_distance(
             v_acc = (prices[0] - m) * (prices[0] - m)
             for v in prices[1:]:
                 v_acc = v_acc + (v - m) * (v - m)
-            s = _math.sqrt(v_acc / float(length))
+            s = math.sqrt(v_acc / float(length))
             if not s > 0:
                 continue
             d0 = (prices[0] - m) / s - zq[0]
@@ -521,7 +520,7 @@ def streaming_pattern_distance(
             for i in range(1, length):
                 di = (prices[i] - m) / s - zq[i]
                 d_acc = d_acc + di * di
-            out_rows.append((row.id, row.symbol, row.ts, d_acc))
+            out_rows.append((rid, sym, ts, d_acc))
         return (prices,), pd.DataFrame(out_rows, columns=["id", "symbol", "ts", "dist"])
 
     return _keyed_state(

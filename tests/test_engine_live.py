@@ -295,6 +295,34 @@ def test_live_engine_log_level_gates_logging(spark):
     assert logs == []  # LoggingModule is level-gated (reference :93)
 
 
+def test_stop_raises_the_failure_of_a_dead_query(spark):
+    """A query that dies in its first batch (here its logger raises, as
+    a refused checkpoint would fail it) is not stopped silently:
+    ``stop()`` stops it and raises its failure to the caller."""
+    from pyspark.errors import StreamingQueryException
+
+    def logger(line: str) -> None:
+        raise RuntimeError("logger refused the epoch")
+
+    engine = LiveEngine(
+        spark,
+        config=dataclasses.replace(DEFAULT_CONFIG, log_level="INFO"),
+        logger=logger,
+        ws_rows_per_second=20,
+        csv_rows_per_second=0,
+    )
+    engine.start()
+    query = engine.query
+    deadline = time.time() + 60
+    while time.time() < deadline and query.isActive:
+        time.sleep(0.25)
+    assert not query.isActive, "the query outlived its failing first batch"
+    with pytest.raises(StreamingQueryException, match="logger refused the epoch"):
+        engine.stop()
+    assert engine.query is None
+    engine.stop()  # a stopped engine stops quietly
+
+
 def test_fanout_busy_epoch_evaluates_rows_once(spark):
     """A BUSY epoch — logging + alerts + recent tap all firing — still
     evaluates each micro-batch row exactly once: the epoch frame is

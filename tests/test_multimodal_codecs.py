@@ -1,10 +1,15 @@
-"""Real-codec tests: stdlib PNG and WAV decoders behind the multimodal
-seam, driven through the actual Spark mapInPandas path.
+"""Real-codec tests for ``operators/multimodal.py``: its module-level
+image decoders (PNG with every filter, bit depth and Adam7; baseline,
+progressive and subsampled JPEG with restart markers; GIF; BMP; TIFF
+with LZW, Deflate and predictor 2), its WAV decoders (PCM, mu-law, IMA
+ADPCM), AVI/MJPEG frames and the audio features (power spectrum,
+STFT, mel bands, MFCC, spectral shape and flux, zero-crossing rate).
 
-The encoders here are test fixtures (we built them, so we know the
-ground truth); the decode under test is
-operators.multimodal.decode_image_features/decode_audio_features with
-fake=False.
+Each codec is called directly and, for the Spark seam, through
+``decode_image_features`` / ``decode_audio_features`` (``fake=False``)
+and the other ``mapInPandas`` entry points.  The encoders here are
+test fixtures (we built them, so we know the ground truth), and
+malformed or truncated payloads must decode to NULL.
 """
 
 from __future__ import annotations

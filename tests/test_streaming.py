@@ -105,6 +105,77 @@ def test_stateful_row_count_ma_matches_batch(spark, tick_dir):
     assert edge_ids and all(got[i] is None for i in edge_ids)
 
 
+def test_giant_key_group_matches_batch_bitwise(spark, tmp_path):
+    """One key with 10⁵ rows, shuffled in its file, reaches the shell as
+    one group of several Arrow chunks in one micro-batch, and streams
+    to the batch operator's averages bit for bit.  Prices sit on a
+    quarter grid, so every window sum is exact in any order: the
+    shell's oldest→newest sum and the batch newest→oldest lag chain
+    agree on every bit, which pins the windows and the arrival order."""
+    import numpy as np
+    import pandas as pd
+
+    n_rows = 100_000
+    rng = np.random.default_rng(7)
+    pdf = pd.DataFrame({
+        "id": [f"g{i:06d}" for i in range(n_rows)],
+        "symbol": "GIANT",
+        "price": 90.0 + rng.integers(0, 160, n_rows) / 4,
+        "volume": 1,
+        "ts": pd.Timestamp("2024-03-01") + pd.to_timedelta(np.arange(n_rows), unit="ms"),
+        "source": "X",
+    }).iloc[rng.permutation(n_rows)]
+    path = str(tmp_path / "giant")
+    spark.createDataFrame(pdf, TICK_SCHEMA).coalesce(1).write.parquet(path)
+
+    q = _run_to_memory(stateful.streaming_moving_average(_stream(spark, path)), "ma_giant")
+    assert [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]] == [n_rows]
+    got = spark.table("ma_giant").select("id", F.col("moving_average").alias("got"))
+    batch = moving_average(spark.read.parquet(path), n=5, order_by=("ts", "id"))
+    want = batch.select("id", F.col("moving_average").alias("want"))
+    rows, unequal, nulls = got.join(want, "id", "full").agg(
+        F.count(F.lit(1)),
+        F.count_if(~F.col("got").eqNullSafe(F.col("want"))),
+        F.count_if(F.col("got").isNull()),
+    ).first()
+    assert (rows, unequal, nulls) == (n_rows, 0, 4)
+
+
+def test_null_ts_round_trips_through_the_shell(spark, tmp_path):
+    """``ts`` crosses the shell's seam as epoch micros: a NULL ``ts``
+    comes out NULL and every other one to the microsecond.  The rows
+    take their window slots in arrival order (ts, NULL last, ties by
+    numeric id; a NULL price takes none), and each average is the
+    oldest→newest sum of a Python deque, bit for bit."""
+    from collections import deque
+
+    base = dt.datetime(2024, 3, 1, 9, 30, 0, 17)
+    spec = [  # id, seconds after base (None: NULL ts), price (None: NULL)
+        ("7", 3, 101.13), ("12", None, 99.71), ("3", 1, 100.37),
+        ("10", 3, 102.89), ("2", None, 100.01), ("5", 2, None),
+        ("1", 0, 98.43), ("11", 4, 103.3), ("4", 1.5, 101.77), ("9", 3, 97.61),
+    ]
+
+    def ts(s):
+        return None if s is None else base + dt.timedelta(seconds=s)
+
+    rows = [(i, "AAA", p, 1, ts(s), "X") for i, s, p in spec]
+    path = str(tmp_path / "null_ts")
+    spark.createDataFrame(rows, TICK_SCHEMA).coalesce(1).write.parquet(path)
+    out = stateful.streaming_moving_average(_stream(spark, path), n=3)
+    assert dict(out.dtypes)["ts"] == "timestamp"
+    _run_to_memory(out, "ma_null_ts")
+    got = {r.id: (r.ts, r.moving_average) for r in spark.table("ma_null_ts").collect()}
+
+    window, want = deque(maxlen=3), {}
+    for i, s, p in sorted(spec, key=lambda r: (r[1] is None, r[1] or 0, int(r[0]))):
+        if p is not None:
+            window.append(p)
+        full = p is not None and len(window) == 3
+        want[i] = (ts(s), sum(window) / 3 if full else None)
+    assert got == want
+
+
 def test_tumbling_window_matches_batch(spark, tick_dir):
     stream_out = windows.tumbling_stats(
         _stream(spark, tick_dir), key="symbol", value="price", window="10 minutes"
