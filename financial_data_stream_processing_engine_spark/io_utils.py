@@ -28,7 +28,14 @@ def scratch_dir(prefix: str) -> str:
     forever.  Deferring removal to ``atexit`` keeps the read-after-
     return contract while bounding the garbage to one process's worth;
     ``ignore_errors`` because cleanup is best-effort by design (a
-    vanished tree at exit is success, not a failure)."""
+    vanished tree at exit is success, not a failure).
+
+    Limit: ``atexit`` handlers do not run when the process dies on a
+    signal (SIGKILL, or a SIGTERM nothing handles), so such a process
+    leaves its scratch directories — the live engine's ``av_spool_*``
+    included — in the temp dir.  Nothing sweeps them on a later start:
+    a shared temp dir can hold directories of processes in another PID
+    namespace, so "its owner is dead" cannot be proven from here."""
     d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d

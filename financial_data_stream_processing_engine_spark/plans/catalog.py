@@ -1,12 +1,18 @@
-"""Operator/query catalog — the registry behind ``__spark_entry__.py``.
+"""Operator/query catalog — the loader behind ``__spark_entry__.py``.
 
 Each entry pairs a PySpark implementation with (where expressible) the
-ANSI-SQL oracle DuckDB runs on the same parquet tables.  Registration
-is declarative::
+ANSI-SQL oracle DuckDB runs on the same parquet tables.  The registry
+itself (``QUERIES``, ``register``) lives in ``plans/__init__.py``;
+registration is declarative::
+
+    from financial_data_stream_processing_engine_spark.plans import register
 
     @register("q_name", sql="SELECT ...")
     def q_name(spark, sf_dir):
         ...return DataFrame
+
+This module imports the plan modules (``load_all``) and applies the
+presentation order; no plan module imports it.
 
 Parity rules (SURVEY.md §7 hard part #2):
 
@@ -33,45 +39,20 @@ instead.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from pathlib import Path
-from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from financial_data_stream_processing_engine_spark.plans import QUERIES
 
-
-@dataclass(frozen=True)
-class CatalogQuery:
-    name: str
-    fn: Callable[[SparkSession, str], DataFrame]
-    sql: str | None  # DuckDB oracle; None => driver does rows-only check
-    doc: str = ""
-
-
-QUERIES: dict[str, CatalogQuery] = {}
-
-
-def register(name: str, sql: str | None = None):
-    """Decorator: add a (spark_fn, oracle_sql) pair to the catalog."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = CatalogQuery(name=name, fn=fn, sql=sql, doc=fn.__doc__ or "")
-        return fn
-
-    return deco
+__all__ = ["QUERIES", "load_all"]
 
 
 #: Catalog presentation order — the driver's 50-row check-window
 #: rotation.  The list itself is DATA, kept in ``check_window.txt``
 #: next to this file (one entry name per line, ``#`` comments) and
 #: loaded here at import, deliberately OUTSIDE the freshness hash:
-#: ``tools/freshness.py`` hashes the transitive *import* closure of
-#: each entry's plan module, and this module is in every closure —
-#: when the rotation list lived inline (rounds ≤13), every
-#: per-round window rotation invalidated all ~237 ledger rows at
-#: once even though presentation order has zero effect on any
-#: entry's VALUES.  Only code that can change a result belongs in
-#: the hash; the rotation policy is documented in the data file.
+#: presentation order has zero effect on any entry's VALUES, so a
+#: window rotation must not restale a ledger row.  (No plan module
+#: imports this module, so it is in no entry's closure either.)
 _WINDOW_FILE = Path(__file__).with_name("check_window.txt")
 
 

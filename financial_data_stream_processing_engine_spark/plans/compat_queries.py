@@ -17,7 +17,7 @@ from financial_data_stream_processing_engine_spark.operators.core import (
     moving_average,
     with_alert_flag,
 )
-from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.plans import register
 
 MA_N = 5
 ALERT_THRESHOLD = 108.0

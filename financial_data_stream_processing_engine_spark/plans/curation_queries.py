@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from financial_data_stream_processing_engine_spark.io_utils import load_table
 from financial_data_stream_processing_engine_spark.operators import curation, text
 from financial_data_stream_processing_engine_spark.operators.curation import pack_sequences_sql
-from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.plans import register
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:

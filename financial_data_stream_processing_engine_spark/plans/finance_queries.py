@@ -22,7 +22,7 @@ from financial_data_stream_processing_engine_spark.functions.numeric import (
 )
 from financial_data_stream_processing_engine_spark.io_utils import load_table
 from financial_data_stream_processing_engine_spark.operators import finance
-from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.plans import register
 
 #: the tick-view projection of events, spelled once for the oracles
 _TICKS_SQL = """

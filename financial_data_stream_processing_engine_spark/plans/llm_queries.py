@@ -19,7 +19,7 @@ from financial_data_stream_processing_engine_spark.functions.numeric import davg
 from financial_data_stream_processing_engine_spark.io_utils import load_table, scratch_dir
 from financial_data_stream_processing_engine_spark.operators import dedup, multimodal, similarity, text
 from financial_data_stream_processing_engine_spark.plans import media_fixtures
-from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.plans import register
 from financial_data_stream_processing_engine_spark.streaming.sources import _sliced_feed
 
 # ---------------------------------------------------------------------------

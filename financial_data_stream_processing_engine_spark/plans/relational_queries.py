@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from financial_data_stream_processing_engine_spark.functions.numeric import davg, davg_sql, dsum, dsum_sql
 from financial_data_stream_processing_engine_spark.io_utils import load_table, scratch_dir
 from financial_data_stream_processing_engine_spark.operators.asof import asof_join
-from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.plans import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -3000,9 +3000,9 @@ def layout_morton_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ivm_orders_status_agg",
-    sql="""
+#: Shared verbatim with ``streaming_ivm_orders_agg``, whose streamed view
+#: it certifies too.
+_IVM_ORDERS_STATUS_SQL = """
 WITH changes AS (
   SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
          o_totalprice * 1.1 AS o_totalprice
@@ -3022,8 +3022,10 @@ SELECT o_orderstatus,
        COUNT(*) AS n_orders
 FROM new_v
 GROUP BY o_orderstatus
-""",
-)
+"""
+
+
+@register("ivm_orders_status_agg", sql=_IVM_ORDERS_STATUS_SQL)
 def ivm_orders_status_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance: a per-status SUM/COUNT aggregate
     maintained by applying the CDC diff (cdc_orders_diff's change set)

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from financial_data_stream_processing_engine_spark.functions.numeric import dsum, dsum_sql
 from financial_data_stream_processing_engine_spark.io_utils import load_table
-from financial_data_stream_processing_engine_spark.plans.catalog import register
+from financial_data_stream_processing_engine_spark.plans import register
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -14,8 +14,18 @@ No Spark session needed — this is pure hashing.
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as e
-from tools.freshness import entry_hash, load_ledger
+from financial_data_stream_processing_engine_spark.plans import QUERIES, register
+from tools.freshness import PKG, REPO, _direct_imports, closure_files, entry_hash, load_ledger
+
+PLANS = REPO / PKG / "plans"
+STREAMING = f"{PKG}.plans.streaming_queries"
+
+
+def _plan_modules() -> set[str]:
+    return {fn.__module__ for fn in e.queries().values()}
 
 
 def test_every_entry_verified_at_current_code():
@@ -41,3 +51,47 @@ def test_ledger_has_no_orphans():
     qs = e.queries()
     orphans = [n for n in load_ledger() if n not in qs]
     assert not orphans, f"ledger rows for unknown entries: {orphans}"
+
+
+def test_register_refuses_a_registered_name():
+    # a second entry under a taken name would silently shadow the first
+    first = QUERIES["ma_alerts"]
+    with pytest.raises(ValueError, match="ma_alerts"):
+        register("ma_alerts", sql="SELECT 1")(lambda spark, sf_dir: None)
+    assert QUERIES["ma_alerts"] is first
+
+
+# Precision: a closure holds what its module really imports, not the
+# whole catalog.
+
+
+def test_batch_closures_exclude_the_streaming_module():
+    batch = _plan_modules() - {STREAMING}
+    assert len(batch) == 6
+    for mod in batch:
+        assert PLANS / "streaming_queries.py" not in closure_files(mod), mod
+
+
+def test_no_closure_holds_the_catalog_loader():
+    for mod in _plan_modules():
+        assert PLANS / "catalog.py" not in closure_files(mod), mod
+
+
+def test_registry_imports_no_plan_module():
+    assert not {m for m in _direct_imports(PLANS / "__init__.py") if m.startswith(f"{PKG}.plans")}
+
+
+# Soundness: every real import stays in the closure.
+
+
+def test_streaming_closure_holds_its_batch_twins():
+    files = set(closure_files(STREAMING))
+    for name in ("relational_queries", "llm_queries", "curation_queries", "finance_queries", "media_fixtures"):
+        assert PLANS / f"{name}.py" in files, name
+    assert REPO / PKG / "streaming" / "stateful.py" in files
+
+
+def test_direct_imports_follow_function_body_imports(tmp_path):
+    src = tmp_path / "mod.py"
+    src.write_text(f"def f():\n    from {PKG}.operators import sketch\n    return sketch\n")
+    assert f"{PKG}.operators.sketch" in _direct_imports(src)

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from financial_data_stream_processing_engine_spark.io_utils import load_table
 from financial_data_stream_processing_engine_spark.operators import similarity
-from financial_data_stream_processing_engine_spark.streaming import sinks, stateful
+from financial_data_stream_processing_engine_spark.streaming import stateful
 
 
 def test_ivf_cells_prune_partitions_on_disk(spark, sf_dir, tmp_path):

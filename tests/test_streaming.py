@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from financial_data_stream_processing_engine_spark.operators.core import alerts, moving_average
-from financial_data_stream_processing_engine_spark.streaming import sinks, sources, stateful, windows
+from financial_data_stream_processing_engine_spark.streaming import sources, stateful, windows
 
 TICK_SCHEMA = "id string, symbol string, price double, volume long, ts timestamp, source string"
 
@@ -50,7 +50,7 @@ def _stream(spark, tick_dir):
 
 
 def _run_to_memory(df, name, mode="append"):
-    q = sinks.memory_sink(df, name, output_mode=mode)
+    q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
     q.processAllAvailable()
     q.stop()
     return q
@@ -272,7 +272,7 @@ def test_logging_sink_respects_log_level(spark, tick_dir):
 def test_rate_source_produces_normalized_ticks(spark):
     ticks = sources.rate_ticks(spark, rows_per_second=50)
     assert ticks.isStreaming
-    q = sinks.memory_sink(ticks, "rate_ticks_mem")
+    q = ticks.writeStream.format("memory").queryName("rate_ticks_mem").start()
     deadline = time.time() + 15
     while time.time() < deadline and spark.table("rate_ticks_mem").count() < 5:
         time.sleep(0.5)
@@ -285,7 +285,7 @@ def test_rate_source_produces_normalized_ticks(spark):
 
 def test_csv_replay_cycles_reference_rows(spark):
     ticks = sources.csv_replay_ticks(spark, rows_per_second=20)
-    q = sinks.memory_sink(ticks, "csv_ticks_mem")
+    q = ticks.writeStream.format("memory").queryName("csv_ticks_mem").start()
     deadline = time.time() + 15
     while time.time() < deadline and spark.table("csv_ticks_mem").count() < 6:
         time.sleep(0.5)
@@ -323,7 +323,7 @@ def test_stateful_ma_ttl_resets_window_after_idle(spark, tmp_path):
 
     append([10.0, 20.0, 30.0], 0)
     out = stateful.streaming_moving_average(_stream(spark, path), n=n, ttl_ms=ttl_ms)
-    q = sinks.memory_sink(out, "ma_ttl_idle")
+    q = out.writeStream.format("memory").queryName("ma_ttl_idle").start()
     try:
         wait_progress(n)
         batches_before_idle = len(q.recentProgress)

@@ -8,16 +8,30 @@ that registers it, plus every package-internal module that file
 (transitively) imports, plus the oracle SQL string.  Any edit to any
 file the entry's behavior can depend on changes the hash.
 
-Coarse by design: editing a shared operator module invalidates every
-entry whose plan module imports it.  The remedy is cheap — re-run
-``tools/verify_local.py`` (which refreshes the ledger for every entry
-that matches its oracle) — and false *freshness* is impossible, which
-is the failure mode that matters.
+The closure is the real import graph: every package import counts,
+including imports inside function bodies, because a plan function that
+imports a module at call time depends on it just as much.  The rule is
+sound (false *freshness* is impossible, which is the failure mode that
+matters) and it is precise because the registry (``plans/__init__.py``)
+imports no plan module and no plan module imports ``plans/catalog.py``
+(which imports them all for ``load_all``).  So an edit restales the
+entries whose plan module really reaches the edited file: an edit to
+``streaming_queries.py`` restales the streaming entries only, an edit to
+a batch plan module restales its own entries and those of the plan
+modules that import it, and ``catalog.py`` restales none.  The remedy
+is cheap — re-run ``tools/verify_local.py`` (which refreshes the ledger
+for every entry that matches its oracle).
+
+A parent package's ``__init__.py``, which Python runs on the way to a
+submodule, counts only where a file imports the package by name.
+
+A module's closure is computed once per process.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import hashlib
 import json
 from pathlib import Path
@@ -54,8 +68,9 @@ def _direct_imports(path: Path) -> set[str]:
     return mods
 
 
-def closure_files(modname: str) -> list[Path]:
-    """All package files the module transitively imports (itself first)."""
+@functools.cache
+def closure_files(modname: str) -> tuple[Path, ...]:
+    """All package files the module transitively imports, sorted."""
     seen: set[str] = set()
     todo = [modname]
     files: set[Path] = set()
@@ -69,7 +84,7 @@ def closure_files(modname: str) -> list[Path]:
             continue
         files.add(f)
         todo.extend(_direct_imports(f))
-    return sorted(files)
+    return tuple(sorted(files))
 
 
 def entry_hash(fn, sql: str | None) -> str:
