@@ -39,6 +39,7 @@ instead.
 
 from __future__ import annotations
 
+import importlib
 from pathlib import Path
 
 from financial_data_stream_processing_engine_spark.plans import QUERIES
@@ -68,19 +69,28 @@ def _load_priority() -> list[str]:
 _PRIORITY: list[str] = _load_priority()
 
 
+#: The modules that register catalog queries.  The entries
+#: ``_PRIORITY`` does not name follow it in this module order, each
+#: module's entries in source order, whichever module a process
+#: imported first.
+_PLAN_MODULES = (
+    "compat_queries",
+    "relational_queries",
+    "llm_queries",
+    "streaming_queries",
+    "curation_queries",
+    "finance_queries",
+    "tpch_derived",
+)
+
+
 def load_all() -> None:
     """Import every module that registers catalog queries, then apply
-    the priority presentation order (see ``_PRIORITY``)."""
-    # Imported for their @register side effects.
-    from financial_data_stream_processing_engine_spark.plans import (  # noqa: F401
-        compat_queries,
-        relational_queries,
-        llm_queries,
-        streaming_queries,
-        curation_queries,
-        finance_queries,
-        tpch_derived,
-    )
+    the presentation order: ``_PRIORITY``, then the rest by module."""
+    rank = {
+        importlib.import_module(f"{__package__}.{m}").__name__: i
+        for i, m in enumerate(_PLAN_MODULES)
+    }
 
     # a typo in the hand-maintained rotation list would otherwise
     # silently demote an entry out of the driver's 50-slot check
@@ -89,6 +99,10 @@ def load_all() -> None:
     if unknown:
         raise AssertionError(f"_PRIORITY names not in QUERIES: {unknown}")
     ordered = {n: QUERIES[n] for n in _PRIORITY}
-    ordered.update((n, q) for n, q in QUERIES.items() if n not in ordered)
+    tail = sorted(
+        (q for n, q in QUERIES.items() if n not in ordered),
+        key=lambda q: rank[q.fn.__module__],
+    )
+    ordered.update((q.name, q) for q in tail)
     QUERIES.clear()
     QUERIES.update(ordered)

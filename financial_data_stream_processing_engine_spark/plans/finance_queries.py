@@ -34,6 +34,16 @@ _TICKS_SQL = """
   FROM events
 """
 
+#: CTEs ``ticks → bars``: daily high/low/close candles per symbol
+_DAILY_BAR_CTES = f"""ticks AS ({_TICKS_SQL}),
+bars AS (
+  SELECT symbol,
+         time_bucket(INTERVAL '1 day', ts) AS bar_start,
+         MAX(price) AS high,
+         MIN(price) AS low,
+         arg_max(price, ts) AS "close"
+  FROM ticks GROUP BY 1, 2)"""
+
 
 def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finance.ticks_from_events(load_table(spark, sf_dir, "events"))
@@ -350,14 +360,7 @@ def fin_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_atr",
     sql=f"""
-WITH ticks AS ({_TICKS_SQL}),
-bars AS (
-  SELECT symbol,
-         time_bucket(INTERVAL '1 day', ts) AS bar_start,
-         MAX(price) AS high,
-         MIN(price) AS low,
-         arg_max(price, ts) AS "close"
-  FROM ticks GROUP BY 1, 2),
+WITH {_DAILY_BAR_CTES},
 tr AS (
   SELECT symbol, bar_start,
          CASE WHEN LAG("close") OVER w IS NULL THEN high - low
@@ -384,14 +387,7 @@ def fin_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_stochastic",
     sql=f"""
-WITH ticks AS ({_TICKS_SQL}),
-bars AS (
-  SELECT symbol,
-         time_bucket(INTERVAL '1 day', ts) AS bar_start,
-         MAX(price) AS high,
-         MIN(price) AS low,
-         arg_max(price, ts) AS "close"
-  FROM ticks GROUP BY 1, 2),
+WITH {_DAILY_BAR_CTES},
 k AS (
   SELECT symbol, bar_start,
          100.0 * (CASE WHEN MAX(high) OVER wf - MIN(low) OVER wf = 0 THEN NULL
@@ -545,14 +541,7 @@ def fin_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "fin_donchian",
     sql=f"""
-WITH ticks AS ({_TICKS_SQL}),
-bars AS (
-  SELECT symbol,
-         time_bucket(INTERVAL '1 day', ts) AS bar_start,
-         MAX(price) AS high,
-         MIN(price) AS low,
-         arg_max(price, ts) AS "close"
-  FROM ticks GROUP BY 1, 2)
+WITH {_DAILY_BAR_CTES}
 SELECT symbol, bar_start, "close",
        MAX(high) OVER wf AS upper_channel,
        MIN(low) OVER wf AS lower_channel,

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from financial_data_stream_processing_engine_spark.functions.numeric import davg_sql, qcast_sql, qint_sql
+from financial_data_stream_processing_engine_spark.functions.numeric import davg_sql, dlit_sql, qcast_sql, qint_sql
 from financial_data_stream_processing_engine_spark.io_utils import load_table, scratch_dir
 from financial_data_stream_processing_engine_spark.operators import dedup, multimodal, similarity, text
 from financial_data_stream_processing_engine_spark.plans import media_fixtures
@@ -536,6 +536,44 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(embs, query, k=10, id_col="vec_id", vec_col="embedding")
 
 
+def _label_cent_ctes(dim: str = "dim", cm: str = "cm", cent: str = "cent") -> str:
+    """CTEs ``dim → cm → cent``: the label-mean centroids of
+    operators/similarity.py::train_centroids (decimal-exact element
+    means, REAL cast) as ``cent(centroid_id, centroid)``."""
+    return f"""{dim} AS (
+  SELECT label, UNNEST(embedding) AS v,
+         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
+  FROM embeddings),
+{cm} AS (
+  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
+  FROM {dim} GROUP BY label, pos),
+{cent} AS (
+  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
+  FROM {cm} GROUP BY centroid_id)"""
+
+
+def _argmax_cell_ctes(
+    cent: str = "cent", assign: str = "assign", best: str = "best"
+) -> str:
+    """CTEs ``assign → best``: every embedding's argmax-(cos, id DESC)
+    centroid of CTE ``cent`` (operators/similarity.py::assign_cells) as
+    ``best(vec_id, embedding, cell)``."""
+    return f"""{assign} AS (
+  SELECT e.vec_id, e.embedding, c.centroid_id,
+         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
+  FROM embeddings e CROSS JOIN {cent} c),
+{best} AS (
+  SELECT vec_id, embedding, centroid_id AS cell FROM (
+    SELECT vec_id, embedding, centroid_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
+    FROM {assign}) WHERE rk = 1)"""
+
+
+#: label-mean cells: ``dim → cm → cent → assign → best``
+_LABEL_CELL_CTES = f"{_label_cent_ctes()},\n{_argmax_cell_ctes()}"
+
+
 #: Full engine-independent IVF reconstruction: DuckDB retrains the
 #: label-mean centroids (decimal-exact means, REAL cast), reassigns
 #: every vector to its argmax-(cos, id) cell, probes the 5 cells
@@ -546,26 +584,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: is bit-identical across engines and partitionings.
 _IVF_SQL = f"""
 WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
+{_LABEL_CELL_CTES},
 probe AS (
   SELECT centroid_id AS cell
   FROM cent CROSS JOIN q
@@ -602,26 +621,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MULTIQUERY_IVF_SQL = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 10),
-dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
+{_LABEL_CELL_CTES},
 probe AS (
   SELECT query_id, qvec, cell FROM (
     SELECT q.query_id, q.qvec, c.centroid_id AS cell,
@@ -777,17 +777,8 @@ def _kmeans_cent_sql(k: int, iters: int) -> str:
   FROM embeddings ORDER BY vec_id LIMIT {k})"""
     ]
     for i in range(1, iters + 1):
-        parts.append(f"""asg{i} AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent{i - 1} c),
-bst{i} AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM asg{i}) WHERE rk = 1),
-dim{i} AS (
+        parts.append(_argmax_cell_ctes(f"cent{i - 1}", f"asg{i}", f"bst{i}"))
+        parts.append(f"""dim{i} AS (
   SELECT cell, UNNEST(embedding) AS v,
          GENERATE_SUBSCRIPTS(embedding, 1) AS pos
   FROM bst{i}),
@@ -810,16 +801,7 @@ cent{i} AS (
 _KMEANS_IVF_SQL = f"""
 WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
 {_kmeans_cent_sql(k=8, iters=2)},
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent2 c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
+{_argmax_cell_ctes("cent2")},
 probe AS (
   SELECT centroid_id AS cell
   FROM cent2 CROSS JOIN q
@@ -864,16 +846,7 @@ def similarity_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: rule — the label-free form the published procedure actually runs.
 _SEMANTIC_KMEANS_SQL = f"""
 WITH {_kmeans_cent_sql(k=8, iters=2)},
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent2 c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
+{_argmax_cell_ctes("cent2")},
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          {_COS.format(a='a.embedding', b='b.embedding')} AS cos
@@ -1741,26 +1714,7 @@ def multimodal_jpeg_420_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
 #: same cent/assign/best pipeline as _IVF_SQL), enumerate within-cell
 #: pairs, and apply the smaller-id drop rule — fully engine-independent.
 _SEMANTIC_SQL = f"""
-WITH dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
+WITH {_LABEL_CELL_CTES},
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          {_COS.format(a='a.embedding', b='b.embedding')} AS cos
@@ -1870,6 +1824,30 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: CTEs ``dim → … → pairs``: the cell-confined cosine≥0.3 similarity
+#: edges (id_a < id_b) of :func:`_similarity_pairs`
+_SIM_EDGE_CTES = f"""{_LABEL_CELL_CTES},
+pairs AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM best a JOIN best b ON a.cell = b.cell AND a.vec_id < b.vec_id
+  WHERE {_COS.format(a='a.embedding', b='b.embedding')} >= 0.3)"""
+
+#: CTEs ``deg → ok → orient`` over ``pairs``: each edge oriented from
+#: its lower (degree·2³² + id) end, the key compared as exact BIGINTs
+_ORIENT_CTES = """deg AS (
+  SELECT node, COUNT(*) AS deg FROM (
+    SELECT id_a AS node FROM pairs UNION ALL SELECT id_b FROM pairs)
+  GROUP BY node),
+ok AS (SELECT node, deg * 4294967296 + node AS ok FROM deg),
+orient AS (
+  SELECT CASE WHEN ka.ok < kb.ok THEN p.id_a ELSE p.id_b END AS src,
+         CASE WHEN ka.ok < kb.ok THEN p.id_b ELSE p.id_a END AS dst,
+         GREATEST(ka.ok, kb.ok) AS ok_dst
+  FROM pairs p
+  JOIN ok ka ON ka.node = p.id_a
+  JOIN ok kb ON kb.node = p.id_b)"""
+
+
 def _pagerank_sql(k: int = 4) -> str:
     """Unrolled k-iteration PageRank oracle over the cosine≥0.3
     similarity graph (qint-gridded neighbor sums, same as the
@@ -1881,30 +1859,7 @@ def _pagerank_sql(k: int = 4) -> str:
         + f" * {10.0 ** -PR_QSCALE!r}"
     )
     lines = [
-        f"""WITH dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql("CAST(v AS DOUBLE)")} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM best a JOIN best b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_COS.format(a='a.embedding', b='b.embedding')} >= 0.3),
+        f"""WITH {_SIM_EDGE_CTES},
 sym AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION ALL
@@ -1938,8 +1893,8 @@ def _similarity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     that makes SemDeDup linear bounds edge enumeration here — all-pairs
     generation was measured 3.5× the whole pagerank entry's runtime at
     sf0.1), exact-cosine filter.  ONE definition keeps the five Spark
-    entries and their shared oracle prefix (_triangle_sql's ``pairs``
-    CTE) in sync — a threshold or tie-break change lands everywhere or
+    entries and their shared oracle CTEs (``_SIM_EDGE_CTES``) in
+    sync — a threshold or tie-break change lands everywhere or
     nowhere."""
     embs = _embs(spark, sf_dir)
     centroids = similarity.train_centroids(embs, by="label", vec_col="embedding")
@@ -1992,47 +1947,14 @@ def graph_pagerank_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_sql() -> str:
-    """Oracle: the pagerank entry's cell-confined cosine≥0.3 edge
-    CTEs, then the identical degree-oriented wedge-closure count —
+    """Oracle: the cell-confined cosine≥0.3 edge CTEs
+    (``_SIM_EDGE_CTES``), then the identical degree-oriented
+    wedge-closure count (``_ORIENT_CTES`` and the closed wedges) —
     the (degree·2³² + id) order key compares the same BIGINTs in both
     engines, so the count is exact, not approximate."""
     return f"""
-WITH dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql("CAST(v AS DOUBLE)")} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM best a JOIN best b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE {_COS.format(a='a.embedding', b='b.embedding')} >= 0.3),
-deg AS (
-  SELECT node, COUNT(*) AS deg FROM (
-    SELECT id_a AS node FROM pairs UNION ALL SELECT id_b FROM pairs)
-  GROUP BY node),
-ok AS (SELECT node, deg * 4294967296 + node AS ok FROM deg),
-orient AS (
-  SELECT CASE WHEN ka.ok < kb.ok THEN p.id_a ELSE p.id_b END AS src,
-         CASE WHEN ka.ok < kb.ok THEN p.id_b ELSE p.id_a END AS dst,
-         GREATEST(ka.ok, kb.ok) AS ok_dst
-  FROM pairs p
-  JOIN ok ka ON ka.node = p.id_a
-  JOIN ok kb ON kb.node = p.id_b),
+WITH {_SIM_EDGE_CTES},
+{_ORIENT_CTES},
 wed AS (
   SELECT o1.dst AS v, o2.dst AS w
   FROM orient o1 JOIN orient o2
@@ -2065,12 +1987,13 @@ def graph_triangle_count_similarity(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def _lcc_sql() -> str:
-    """Oracle: the triangle entry's CTEs, with the closed wedges
-    exploded into their three corners and grouped per node; the only
-    float op is the final exact-integer division."""
-    prefix = _triangle_sql()
-    prefix = prefix[: prefix.index("wed AS (")]
-    return f"""{prefix}wed AS (
+    """Oracle: the triangle entry's edge and orientation CTEs, with the
+    closed wedges exploded into their three corners and grouped per
+    node; the only float op is the final exact-integer division."""
+    return f"""
+WITH {_SIM_EDGE_CTES},
+{_ORIENT_CTES},
+wed AS (
   SELECT o1.src AS u, o1.dst AS v, o2.dst AS w
   FROM orient o1 JOIN orient o2
     ON o1.src = o2.src AND o1.ok_dst < o2.ok_dst),
@@ -2136,26 +2059,8 @@ _RESID = (
 #: sum, top-10 with exact-dot audit — all recomputed in DuckDB.
 _IVFPQ_SQL = f"""
 WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
-dimc AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cmc AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM dimc GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cmc GROUP BY centroid_id),
-assignc AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-bestc AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assignc) WHERE rk = 1),
+{_label_cent_ctes("dimc", "cmc")},
+{_argmax_cell_ctes("cent", "assignc", "bestc")},
 res AS (
   SELECT b.vec_id, b.cell,
          {_RESID.format(a='b.embedding', b='c.centroid')} AS r
@@ -2262,26 +2167,7 @@ exact AS (
   SELECT vec_id FROM embeddings CROSS JOIN q
   ORDER BY {_COS.format(a='embedding', b='qvec')} DESC, vec_id
   LIMIT 10),
-dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
-assign AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-         {_COS.format(a='e.embedding', b='c.centroid')} AS sim
-  FROM embeddings e CROSS JOIN cent c),
-best AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM (
-    SELECT vec_id, embedding, centroid_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY vec_id ORDER BY sim DESC, centroid_id DESC) AS rk
-    FROM assign) WHERE rk = 1),
+{_LABEL_CELL_CTES},
 probe AS (
   SELECT centroid_id AS cell
   FROM cent CROSS JOIN q
@@ -2425,16 +2311,7 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: rebuild cell-for-cell AND that exactly the delta-determined cells
 #: were touched.
 _INDEX_MAINTAIN_SQL = f"""
-WITH dim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-cm AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM dim GROUP BY label, pos),
-cent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM cm GROUP BY centroid_id),
+WITH {_label_cent_ctes()},
 old_v AS (SELECT vec_id, embedding FROM embeddings),
 upd AS (
   SELECT vec_id, list_reverse(embedding) AS embedding
@@ -2794,15 +2671,6 @@ def _audio_spectrum_sql(n_fft: int = 16, bins: tuple[int, ...] = (1, 2, 3)) -> s
     product → 1e-9-grid quantize → exact sum → power arithmetic.  Any
     divergence anywhere in the RIFF walk, PCM normalization, twiddle
     table or aggregation order is a value-hash mismatch."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-    )
-
     samp = ", ".join(
         f"struct_pack(pos := {i}, x := CAST({_hex_byte('m', i)} - 128 AS DOUBLE)"
         " / 128.0e0)"
@@ -2811,7 +2679,7 @@ def _audio_spectrum_sql(n_fft: int = 16, bins: tuple[int, ...] = (1, 2, 3)) -> s
     tw = ", ".join(
         f"struct_pack(pos := {pos}, k := {k}, cosv := {dlit_sql(c)},"
         f" sinv := {dlit_sql(s)})"
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
+        for (pos, k, c, s) in multimodal._dft_twiddles(n_fft, bins)
     )
     return f"""
 WITH b AS (SELECT doc_id, MD5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
@@ -2908,8 +2776,8 @@ def multimodal_tiff_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kcore_sql(k: int = 2, rounds: int = 12) -> str:
-    """Oracle: the triangle entry's cell-confined edge CTEs, then the
-    k-core peel UNROLLED ``rounds`` times — each round MATERIALIZED
+    """Oracle: the cell-confined edge CTEs (``_SIM_EDGE_CTES``), then
+    the k-core peel UNROLLED ``rounds`` times — each round MATERIALIZED
     (rounds reference their predecessor more than once; DuckDB's
     default CTE inlining would replan an exponentially growing tree).
     Peeling is monotone, so once the fixpoint is reached every further
@@ -2917,8 +2785,6 @@ def _kcore_sql(k: int = 2, rounds: int = 12) -> str:
     k-core — the comparison against Spark's iterate-to-convergence
     peel therefore certifies BOTH that the fixpoint is correct and
     that it is reached within ``rounds``."""
-    prefix = _triangle_sql()
-    prefix = prefix[: prefix.index("deg AS (")]
     parts = [
         """a0 AS MATERIALIZED (
   SELECT id_a AS node FROM pairs UNION SELECT id_b FROM pairs)"""
@@ -2938,7 +2804,7 @@ a{i} AS MATERIALIZED (SELECT node FROM d{i} WHERE deg >= {k})"""
         )
         prev = f"a{i}"
     return (
-        prefix
+        f"\nWITH {_SIM_EDGE_CTES},\n"
         + ",".join(parts)
         + f"""
 SELECT a.node, CAST(d.deg AS BIGINT) AS core_deg
@@ -3046,6 +2912,93 @@ def text_bpe_train_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pcm_ctes(n_samples: int) -> str:
+    """CTEs ``b → samp``: each doc's ``n_samples`` PCM samples rebuilt
+    from md5 digests (digest ``i`` of ``doc_id`` or ``'doc_id:i'``
+    holds samples 16i..16i+15), one ``s = (pos, x)`` row per sample."""
+    m_cols = ", ".join(
+        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
+        if i == 0
+        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
+        for i in range(n_samples // 16)
+    )
+    samp = ", ".join(
+        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
+        " - 128 AS DOUBLE) / 128.0e0)"
+        for i in range(n_samples)
+    )
+    return f"""b AS (SELECT doc_id, {m_cols} FROM documents),
+samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b)"""
+
+
+def _stft_ctes(
+    n_samples: int, n_fft: int, hop: int, bins: tuple[int, ...]
+) -> str:
+    """CTEs ``tw → agg`` over ``samp``: one (absolute_pos, frame, k,
+    cos, sin) twiddle row per frame-basis element (the Python doubles
+    of the Spark twiddle table, frame-shifted by f·hop), then the
+    1e-9-grid quantized re/im sums per (doc, frame, bin)."""
+    n_frames = (n_samples - n_fft) // hop + 1
+    tw = ", ".join(
+        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
+        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
+        for f in range(n_frames)
+        for (pos, k, c, s) in multimodal._dft_twiddles(n_fft, bins)
+    )
+    return f"""tw AS (SELECT UNNEST([{tw}]) AS w),
+agg AS (
+  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
+         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
+         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
+  FROM samp, tw WHERE s.pos = w.pos
+  GROUP BY doc_id, w.f, w.k)"""
+
+
+#: CTE ``pw``: the power of each ``agg`` (doc, frame, bin) sum
+_POWER_CTE = """pw AS (
+  SELECT media_id, frame_idx, k,
+         re_sum * re_sum + im_sum * im_sum AS power
+  FROM agg)"""
+
+#: CTE ``fx``: frame-to-frame power change per (doc, bin); NULL at frame 0
+_FLUX_DIFF_CTE = """fx AS (
+  SELECT media_id, frame_idx,
+         power - LAG(power, 1) OVER (
+           PARTITION BY media_id, k ORDER BY frame_idx) AS d
+  FROM pw)"""
+
+
+def _mel_weight_cte(
+    n_fft: int, sr: int, bins: tuple[int, ...], n_bands: int
+) -> str:
+    """CTE ``wtb``: the triangular mel filterbank doubles of
+    operators/multimodal.py::mel_band_weights as literals."""
+    wt = ", ".join(
+        f"struct_pack(k := {k}, band := {band}, w := {dlit_sql(w)})"
+        for (k, band, w) in multimodal.mel_band_weights(n_fft, sr, bins, n_bands)
+    )
+    return f"wtb AS (SELECT UNNEST([{wt}]) AS m)"
+
+
+def _zcr_pair_ctes(n_samples: int, n_fft: int, hop: int) -> str:
+    """CTEs ``ptbl → px`` over ``samp``: the (pair position, frame)
+    table of the STFT lattice (position p pairs samples p−1 and p) and
+    one sign-change flag per pair and frame containing it."""
+    n_frames = (n_samples - n_fft) // hop + 1
+    ptbl = ", ".join(
+        f"struct_pack(pos := {p}, f := {f})"
+        for f in range(n_frames)
+        for p in range(f * hop + 1, f * hop + n_fft)
+    )
+    return f"""ptbl AS (SELECT UNNEST([{ptbl}]) AS w),
+px AS (
+  SELECT a.doc_id AS media_id, w.f AS frame_idx,
+         CASE WHEN (a.s.x < 0) <> (p.s.x < 0) THEN 1 ELSE 0 END AS c
+  FROM samp a
+  JOIN samp p ON p.doc_id = a.doc_id AND p.s.pos = a.s.pos - 1
+  JOIN ptbl w ON w.pos = a.s.pos)"""
+
+
 def _audio_stft_sql(
     n_samples: int = 64,
     n_fft: int = 16,
@@ -3060,43 +3013,9 @@ def _audio_stft_sql(
     per (doc, frame, bin).  Any divergence in the frame lattice, the
     within-frame position arithmetic or the aggregation is a
     value-hash mismatch."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-    )
-
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    tw = ", ".join(
-        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
-        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
-        for f in range(n_frames)
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
-    )
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-tw AS (SELECT UNNEST([{tw}]) AS w),
-agg AS (
-  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
-  FROM samp, tw WHERE s.pos = w.pos
-  GROUP BY doc_id, w.f, w.k)
+WITH {_pcm_ctes(n_samples)},
+{_stft_ctes(n_samples, n_fft, hop, bins)}
 SELECT media_id, CAST(frame_idx AS INT) AS frame_idx, CAST(k AS INT) AS k,
        re_sum, im_sum, re_sum * re_sum + im_sum * im_sum AS power
 FROM agg
@@ -3144,53 +3063,11 @@ def _audio_melbands_sql(
     dlit_sql round-trips each bit-exactly) per (doc, frame, band).
     Any divergence in the filterbank geometry, the weight constants
     or the final quantized sum is a value-hash mismatch."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-        mel_band_weights,
-    )
-
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    tw = ", ".join(
-        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
-        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
-        for f in range(n_frames)
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
-    )
-    wt = ", ".join(
-        f"struct_pack(k := {k}, band := {band}, w := {dlit_sql(w)})"
-        for (k, band, w) in mel_band_weights(n_fft, sr, bins, n_bands)
-    )
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-tw AS (SELECT UNNEST([{tw}]) AS w),
-agg AS (
-  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
-  FROM samp, tw WHERE s.pos = w.pos
-  GROUP BY doc_id, w.f, w.k),
-pw AS (
-  SELECT media_id, frame_idx, k,
-         re_sum * re_sum + im_sum * im_sum AS power
-  FROM agg),
-wtb AS (SELECT UNNEST([{wt}]) AS m)
+WITH {_pcm_ctes(n_samples)},
+{_stft_ctes(n_samples, n_fft, hop, bins)},
+{_POWER_CTE},
+{_mel_weight_cte(n_fft, sr, bins, n_bands)}
 SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
        CAST(m.band AS INT) AS band,
        {qcast_sql("SUM(" + qint_sql("pw.power * m.w") + ")")} * 1e-09 AS energy,
@@ -3251,58 +3128,15 @@ def _audio_mfcc_sql(
     bit-exactly) per (doc, frame, coeff).  Any divergence in the
     filterbank, the log grid, the basis constants or the final
     quantized sum is a value-hash mismatch."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-        dct2_basis,
-        mel_band_weights,
-    )
-
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    tw = ", ".join(
-        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
-        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
-        for f in range(n_frames)
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
-    )
-    wt = ", ".join(
-        f"struct_pack(k := {k}, band := {band}, w := {dlit_sql(w)})"
-        for (k, band, w) in mel_band_weights(n_fft, sr, bins, n_bands)
-    )
     dct = ", ".join(
         f"struct_pack(band := {band}, c := {c}, w := {dlit_sql(w)})"
-        for (band, c, w) in dct2_basis(n_bands, n_coeffs)
+        for (band, c, w) in multimodal.dct2_basis(n_bands, n_coeffs)
     )
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-tw AS (SELECT UNNEST([{tw}]) AS w),
-agg AS (
-  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
-  FROM samp, tw WHERE s.pos = w.pos
-  GROUP BY doc_id, w.f, w.k),
-pw AS (
-  SELECT media_id, frame_idx, k,
-         re_sum * re_sum + im_sum * im_sum AS power
-  FROM agg),
-wtb AS (SELECT UNNEST([{wt}]) AS m),
+WITH {_pcm_ctes(n_samples)},
+{_stft_ctes(n_samples, n_fft, hop, bins)},
+{_POWER_CTE},
+{_mel_weight_cte(n_fft, sr, bins, n_bands)},
 mb AS (
   SELECT media_id, frame_idx, m.band AS band,
          {qcast_sql("SUM(" + qint_sql("pw.power * m.w") + ")")} * 1e-09 AS energy
@@ -3372,48 +3206,11 @@ def _audio_spectral_sql(
     grid-quantized logs of the flatness ratio.  Any divergence in the
     window frame, the quantization or the division shapes is a
     value-hash mismatch."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-    )
-
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    tw = ", ".join(
-        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
-        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
-        for f in range(n_frames)
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
-    )
     fk = f"(CAST(k AS DOUBLE) * {dlit_sql(float(sr) / n_fft)})"
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-tw AS (SELECT UNNEST([{tw}]) AS w),
-agg AS (
-  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
-  FROM samp, tw WHERE s.pos = w.pos
-  GROUP BY doc_id, w.f, w.k),
-pw AS (
-  SELECT media_id, frame_idx, k,
-         re_sum * re_sum + im_sum * im_sum AS power
-  FROM agg),
+WITH {_pcm_ctes(n_samples)},
+{_stft_ctes(n_samples, n_fft, hop, bins)},
+{_POWER_CTE},
 q AS (
   SELECT media_id, frame_idx, k,
          {qint_sql("power")} AS p_int,
@@ -3482,52 +3279,11 @@ def _audio_flux_sql(
     (media, bin) ordered by frame, the exact rectified difference and
     one quantized sum per (media, frame) — frame 0 excluded exactly as
     in Spark (LAG NULL drops the row)."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-    )
-
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    tw = ", ".join(
-        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
-        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
-        for f in range(n_frames)
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
-    )
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-tw AS (SELECT UNNEST([{tw}]) AS w),
-agg AS (
-  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
-  FROM samp, tw WHERE s.pos = w.pos
-  GROUP BY doc_id, w.f, w.k),
-pw AS (
-  SELECT media_id, frame_idx, k,
-         re_sum * re_sum + im_sum * im_sum AS power
-  FROM agg),
-fx AS (
-  SELECT media_id, frame_idx,
-         power - LAG(power, 1) OVER (
-           PARTITION BY media_id, k ORDER BY frame_idx) AS d
-  FROM pw)
+WITH {_pcm_ctes(n_samples)},
+{_stft_ctes(n_samples, n_fft, hop, bins)},
+{_POWER_CTE},
+{_FLUX_DIFF_CTE}
 SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
        {qcast_sql("SUM(" + qint_sql("GREATEST(0.0e0, d)") + ")")} * 1e-09 AS flux,
        CAST(COUNT(*) AS BIGINT) AS n_bins
@@ -3569,33 +3325,9 @@ def _audio_zcr_sql(
     every frame containing both — the STFT lattice), the identical
     sign-difference predicate, one integer aggregation and the single
     constant division."""
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    ptbl = ", ".join(
-        f"struct_pack(pos := {p}, f := {f})"
-        for f in range(n_frames)
-        for p in range(f * hop + 1, f * hop + n_fft)
-    )
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-ptbl AS (SELECT UNNEST([{ptbl}]) AS w),
-px AS (
-  SELECT a.doc_id AS media_id, w.f AS frame_idx,
-         CASE WHEN (a.s.x < 0) <> (p.s.x < 0) THEN 1 ELSE 0 END AS c
-  FROM samp a
-  JOIN samp p ON p.doc_id = a.doc_id AND p.s.pos = a.s.pos - 1
-  JOIN ptbl w ON w.pos = a.s.pos)
+WITH {_pcm_ctes(n_samples)},
+{_zcr_pair_ctes(n_samples, n_fft, hop)}
 SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
        CAST(SUM(c) AS BIGINT) AS zc_count,
        CAST(COUNT(*) AS BIGINT) AS n_pairs,
@@ -3646,52 +3378,10 @@ def _audio_segments_sql(
     gotcha) and the per-media histogram + deterministic dominant-class
     CASE.  Any drift in any feature, the thresholds, or the tie-break
     order is a value-hash mismatch."""
-    from financial_data_stream_processing_engine_spark.functions.numeric import (
-        dlit_sql,
-        qcast_sql,
-        qint_sql,
-    )
-    from financial_data_stream_processing_engine_spark.operators.multimodal import (
-        _dft_twiddles,
-    )
-
-    n_frames = (n_samples - n_fft) // hop + 1
-    m_cols = ", ".join(
-        "MD5(CAST(doc_id AS VARCHAR)) AS m0"
-        if i == 0
-        else f"MD5(CAST(doc_id AS VARCHAR) || ':{i}') AS m{i}"
-        for i in range(n_samples // 16)
-    )
-    samp = ", ".join(
-        f"struct_pack(pos := {i}, x := CAST({_hex_byte(f'm{i // 16}', i % 16)}"
-        " - 128 AS DOUBLE) / 128.0e0)"
-        for i in range(n_samples)
-    )
-    tw = ", ".join(
-        f"struct_pack(pos := {f * hop + pos}, f := {f}, k := {k},"
-        f" cosv := {dlit_sql(c)}, sinv := {dlit_sql(s)})"
-        for f in range(n_frames)
-        for (pos, k, c, s) in _dft_twiddles(n_fft, bins)
-    )
-    ptbl = ", ".join(
-        f"struct_pack(pos := {p}, f := {f})"
-        for f in range(n_frames)
-        for p in range(f * hop + 1, f * hop + n_fft)
-    )
     return f"""
-WITH b AS (SELECT doc_id, {m_cols} FROM documents),
-samp AS (SELECT doc_id, UNNEST([{samp}]) AS s FROM b),
-tw AS (SELECT UNNEST([{tw}]) AS w),
-agg AS (
-  SELECT doc_id AS media_id, w.f AS frame_idx, w.k AS k,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.cosv") + ")")} * 1e-09 AS re_sum,
-         {qcast_sql("SUM(" + qint_sql("s.x * w.sinv") + ")")} * 1e-09 AS im_sum
-  FROM samp, tw WHERE s.pos = w.pos
-  GROUP BY doc_id, w.f, w.k),
-pw AS (
-  SELECT media_id, frame_idx, k,
-         re_sum * re_sum + im_sum * im_sum AS power
-  FROM agg),
+WITH {_pcm_ctes(n_samples)},
+{_stft_ctes(n_samples, n_fft, hop, bins)},
+{_POWER_CTE},
 q AS (
   SELECT media_id, frame_idx, k,
          {qint_sql("power")} AS p_int,
@@ -3704,23 +3394,13 @@ flat AS (
                          / CAST(COUNT(*) AS DOUBLE) + 1e-09) * 1e9) AS DOUBLE)
            * 1e-09 AS flatness_log
   FROM q GROUP BY media_id, frame_idx),
-fx AS (
-  SELECT media_id, frame_idx,
-         power - LAG(power, 1) OVER (
-           PARTITION BY media_id, k ORDER BY frame_idx) AS d
-  FROM pw),
+{_FLUX_DIFF_CTE},
 flux AS (
   SELECT media_id, frame_idx,
          {qcast_sql("SUM(" + qint_sql("GREATEST(0.0e0, d)") + ")")} * 1e-09 AS flux
   FROM fx WHERE d IS NOT NULL
   GROUP BY media_id, frame_idx),
-ptbl AS (SELECT UNNEST([{ptbl}]) AS w),
-px AS (
-  SELECT a.doc_id AS media_id, w.f AS frame_idx,
-         CASE WHEN (a.s.x < 0) <> (p.s.x < 0) THEN 1 ELSE 0 END AS c
-  FROM samp a
-  JOIN samp p ON p.doc_id = a.doc_id AND p.s.pos = a.s.pos - 1
-  JOIN ptbl w ON w.pos = a.s.pos),
+{_zcr_pair_ctes(n_samples, n_fft, hop)},
 zcr AS (
   SELECT media_id, frame_idx,
          CAST(SUM(c) AS DOUBLE) / {float(n_fft - 1)!r} AS zc_rate
@@ -3816,8 +3496,8 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ktruss_unrolled_ctes(k: int = 3, rounds: int = 8) -> tuple[str, str]:
-    """Shared WITH-clause builder for the k-truss oracles: the
-    triangle entry's cell-confined edge CTEs, then the peel UNROLLED
+    """Shared CTE builder for the k-truss oracles: the cell-confined
+    edge CTEs (``_SIM_EDGE_CTES``), then the peel UNROLLED
     ``rounds`` times — per round one degree orientation + wedge
     closure (the _triangle_sql machinery over the CURRENT edge set),
     the triangles exploded into canonical edges, per-edge support
@@ -3837,10 +3517,8 @@ def _ktruss_unrolled_ctes(k: int = 3, rounds: int = 8) -> tuple[str, str]:
     fixpoint plus five identity rounds of headroom.  A denser future
     fixture that trips that test must raise ``rounds`` here in step.
 
-    Returns (with_clause, final_edge_cte_name)."""
+    Returns (cte_list, final_edge_cte_name)."""
     t = k - 2
-    prefix = _triangle_sql()
-    prefix = prefix[: prefix.index("deg AS (")]
     parts = ["e0 AS MATERIALIZED (SELECT id_a, id_b FROM pairs)"]
     prev = "e0"
     for i in range(1, rounds + 1):
@@ -3874,19 +3552,17 @@ e{i} AS MATERIALIZED (
   WHERE COALESCE(s.support, 0) >= {t})"""
         )
         prev = f"e{i}"
-    return prefix + ",".join(parts), f"e{rounds}"
+    return f"{_SIM_EDGE_CTES},\n" + ",".join(parts), f"e{rounds}"
 
 
 def _ktruss_sql(k: int = 3, rounds: int = 8) -> str:
     """Oracle: the unrolled peel (see :func:`_ktruss_unrolled_ctes`),
     final round's surviving edges with their in-truss supports."""
     ctes, last = _ktruss_unrolled_ctes(k, rounds)
-    return (
-        ctes
-        + f"""
+    return f"""
+WITH {ctes}
 SELECT id_a, id_b, CAST(support AS BIGINT) AS support FROM {last}
 """
-    )
 
 
 def _truss_communities_sql(k: int = 3, rounds: int = 8) -> str:
@@ -3896,13 +3572,21 @@ def _truss_communities_sql(k: int = 3, rounds: int = 8) -> str:
     scale; the Spark side is the linear-per-round min-label
     propagation that survives 100 TB), min reachable id per node +
     one member count per label."""
+    return f"""
+WITH RECURSIVE {_truss_closure_ctes(k, rounds)},
+cs AS (SELECT community, COUNT(*) AS n_members FROM comp GROUP BY community)
+SELECT c.node, c.community, CAST(cs.n_members AS BIGINT) AS n_members
+FROM comp c JOIN cs USING (community)
+"""
+
+
+def _truss_closure_ctes(k: int = 3, rounds: int = 8) -> str:
+    """CTEs: the unrolled peel (:func:`_ktruss_unrolled_ctes`), then
+    ``sym → reach → comp``, each surviving truss node's min reachable
+    id by transitive closure.  ``reach`` is recursive and DuckDB scopes
+    RECURSIVE per statement, so callers open with ``WITH RECURSIVE``."""
     ctes, last = _ktruss_unrolled_ctes(k, rounds)
-    # the closure CTE needs the RECURSIVE keyword on the WITH that
-    # opens the whole chain (DuckDB scopes it per-statement)
-    ctes = ctes.replace("WITH ", "WITH RECURSIVE ", 1)
-    return (
-        ctes
-        + f""",
+    return f"""{ctes},
 sym AS MATERIALIZED (
   SELECT id_a AS src, id_b AS dst FROM {last}
   UNION ALL
@@ -3911,12 +3595,7 @@ reach(node, r) AS (
   SELECT DISTINCT src, src FROM sym
   UNION
   SELECT reach.node, s.dst FROM reach JOIN sym s ON s.src = reach.r),
-comp AS (SELECT node, MIN(r) AS community FROM reach GROUP BY node),
-cs AS (SELECT community, COUNT(*) AS n_members FROM comp GROUP BY community)
-SELECT c.node, c.community, CAST(cs.n_members AS BIGINT) AS n_members
-FROM comp c JOIN cs USING (community)
-"""
-    )
+comp AS (SELECT node, MIN(r) AS community FROM reach GROUP BY node)"""
 
 
 @register("graph_ktruss_similarity", sql=_ktruss_sql(3, 8))
@@ -3968,20 +3647,8 @@ def _truss_modularity_sql(k: int = 3, rounds: int = 8) -> str:
     final ``q_c = e_c/m − (d_c/2m)²`` stated in the same fixed IEEE
     shape as the Spark expression (two divisions, one multiply, one
     subtract — bit-identical on exactly-representable counts)."""
-    ctes, last = _ktruss_unrolled_ctes(k, rounds)
-    ctes = ctes.replace("WITH ", "WITH RECURSIVE ", 1)
-    return (
-        ctes
-        + f""",
-sym AS MATERIALIZED (
-  SELECT id_a AS src, id_b AS dst FROM {last}
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM {last}),
-reach(node, r) AS (
-  SELECT DISTINCT src, src FROM sym
-  UNION
-  SELECT reach.node, s.dst FROM reach JOIN sym s ON s.src = reach.r),
-comp AS (SELECT node, MIN(r) AS community FROM reach GROUP BY node),
+    return f"""
+WITH RECURSIVE {_truss_closure_ctes(k, rounds)},
 degn AS (
   SELECT node, COUNT(*) AS deg FROM (
     SELECT id_a AS node FROM pairs UNION ALL SELECT id_b FROM pairs)
@@ -4011,7 +3678,6 @@ SELECT ns.community, CAST(ns.n_members AS BIGINT) AS n_members,
          * (CAST(ns.degree_sum AS DOUBLE) / CAST(mm.m * 2 AS DOUBLE)) AS q_contrib
 FROM ns LEFT JOIN ie USING (community) CROSS JOIN mm
 """
-    )
 
 
 def _louvain_move_round_blocks(
@@ -4110,7 +3776,7 @@ l{t}{r} AS MATERIALIZED (
 def _louvain_unrolled_ctes(
     k: int = 3, truss_rounds: int = 8, move_rounds: int = 8
 ) -> tuple[str, str]:
-    """Shared WITH-clause builder for the Louvain-refinement oracles:
+    """Shared CTE builder for the Louvain-refinement oracles:
     the unrolled peel + the communities entry's RECURSIVE closure for
     the initial partition (singletons for non-truss nodes), then the
     Louvain local-move phase UNROLLED ``move_rounds`` times — per
@@ -4133,20 +3799,10 @@ def _louvain_unrolled_ctes(
     change that deepens the COMPARE-scale refinement raises loudly
     before the driver sees a mismatch.
 
-    Returns (with_clause, final_label_cte_name)."""
-    ctes, last = _ktruss_unrolled_ctes(k, truss_rounds)
-    ctes = ctes.replace("WITH ", "WITH RECURSIVE ", 1)
+    Returns (cte_list, final_label_cte_name); the list holds the
+    RECURSIVE closure, so callers open it with ``WITH RECURSIVE``."""
     parts = [
-        f"""sym AS MATERIALIZED (
-  SELECT id_a AS src, id_b AS dst FROM {last}
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM {last}),
-reach(node, r) AS (
-  SELECT DISTINCT src, src FROM sym
-  UNION
-  SELECT reach.node, s.dst FROM reach JOIN sym s ON s.src = reach.r),
-comp AS (SELECT node, MIN(r) AS community FROM reach GROUP BY node),
-degn AS MATERIALIZED (
+        """degn AS MATERIALIZED (
   SELECT node, COUNT(*) AS k FROM (
     SELECT id_a AS node FROM pairs UNION ALL SELECT id_b FROM pairs)
   GROUP BY node),
@@ -4162,7 +3818,7 @@ l0 AS MATERIALIZED (
         deg="degn", mm="mm", sym="sym2", l0="l0", move_rounds=move_rounds, tag=""
     )
     parts.extend(blocks)
-    return ctes + ",\n" + ",\n".join(parts), last
+    return _truss_closure_ctes(k, truss_rounds) + ",\n" + ",\n".join(parts), last
 
 
 def _louvain_refine_sql(
@@ -4172,13 +3828,11 @@ def _louvain_refine_sql(
     :func:`_louvain_unrolled_ctes`), final labels joined back to the
     initial partition for the ``moved`` flag."""
     ctes, last = _louvain_unrolled_ctes(k, truss_rounds, move_rounds)
-    return (
-        ctes
-        + f"""
+    return f"""
+WITH RECURSIVE {ctes}
 SELECT l.node, l.community, l.community <> b.community AS moved
 FROM {last} l JOIN l0 b ON b.node = l.node
 """
-    )
 
 
 def _community_coarsen_sql(
@@ -4190,9 +3844,8 @@ def _community_coarsen_sql(
     (community_a, community_b) — all-integer output, nothing to
     quantize."""
     ctes, last = _louvain_unrolled_ctes(k, truss_rounds, move_rounds)
-    return (
-        ctes
-        + f"""
+    return f"""
+WITH RECURSIVE {ctes}
 SELECT LEAST(la.community, lb.community) AS community_a,
        GREATEST(la.community, lb.community) AS community_b,
        CAST(COUNT(*) AS BIGINT) AS weight
@@ -4201,7 +3854,32 @@ JOIN {last} la ON la.node = p.id_a
 JOIN {last} lb ON lb.node = p.id_b
 GROUP BY 1, 2
 """
-    )
+
+
+def _coarse_graph_ctes(l1: str) -> str:
+    """CTEs ``cg → wsym → wdeg → wmm → wl0``: the level-1 labels in CTE
+    ``l1`` coarsened to a weighted supernode graph (self-loops carry
+    intra weight, counted twice in weighted degrees), every supernode
+    its own singleton — the level-2 local-move input."""
+    return f"""cg AS MATERIALIZED (
+  SELECT LEAST(la.community, lb.community) AS a,
+         GREATEST(la.community, lb.community) AS b,
+         COUNT(*) AS w
+  FROM pairs p
+  JOIN {l1} la ON la.node = p.id_a
+  JOIN {l1} lb ON lb.node = p.id_b
+  GROUP BY 1, 2),
+wsym AS MATERIALIZED (
+  SELECT a AS node, b AS nb, w FROM cg WHERE a <> b
+  UNION ALL SELECT b, a, w FROM cg WHERE a <> b),
+wdeg AS MATERIALIZED (
+  SELECT node, SUM(w) AS k FROM (
+    SELECT a AS node, w FROM cg WHERE a <> b
+    UNION ALL SELECT b, w FROM cg WHERE a <> b
+    UNION ALL SELECT a, 2 * w FROM cg WHERE a = b) u
+  GROUP BY node),
+wmm AS (SELECT SUM(w) AS m FROM cg),
+wl0 AS MATERIALIZED (SELECT node, node AS community FROM wdeg)"""
 
 
 def _louvain_level2_sql(
@@ -4225,32 +3903,12 @@ def _louvain_level2_sql(
     chain at the unroll depth.  Final labels join back to the level-1
     node partition for the per-document view."""
     ctes, l1 = _louvain_unrolled_ctes(k, truss_rounds, move_rounds)
-    prelude = f"""cg AS MATERIALIZED (
-  SELECT LEAST(la.community, lb.community) AS a,
-         GREATEST(la.community, lb.community) AS b,
-         COUNT(*) AS w
-  FROM pairs p
-  JOIN {l1} la ON la.node = p.id_a
-  JOIN {l1} lb ON lb.node = p.id_b
-  GROUP BY 1, 2),
-wsym AS MATERIALIZED (
-  SELECT a AS node, b AS nb, w FROM cg WHERE a <> b
-  UNION ALL SELECT b, a, w FROM cg WHERE a <> b),
-wdeg AS MATERIALIZED (
-  SELECT node, SUM(w) AS k FROM (
-    SELECT a AS node, w FROM cg WHERE a <> b
-    UNION ALL SELECT b, w FROM cg WHERE a <> b
-    UNION ALL SELECT a, 2 * w FROM cg WHERE a = b) u
-  GROUP BY node),
-wmm AS (SELECT SUM(w) AS m FROM cg),
-wl0 AS MATERIALIZED (SELECT node, node AS community FROM wdeg)"""
     blocks, wlast = _louvain_move_round_blocks(
         deg="wdeg", mm="wmm", sym="wsym", l0="wl0", move_rounds=l2_rounds, tag="w"
     )
     return (
-        ctes
-        + ",\n"
-        + ",\n".join([prelude] + blocks)
+        f"\nWITH RECURSIVE {ctes},\n"
+        + ",\n".join([_coarse_graph_ctes(l1)] + blocks)
         + f"""
 SELECT n.node, n.community AS community_l1, l2.community AS community_l2
 FROM {l1} n JOIN {wlast} l2 ON l2.node = n.community
@@ -4330,32 +3988,12 @@ def _louvain_level2_modularity_sql(
     the ORIGINAL pairs relation — exact BIGINT aggregates, the fixed
     IEEE ``e_c/m − (d_c/2m)²`` shape."""
     ctes, l1 = _louvain_unrolled_ctes(k, truss_rounds, move_rounds)
-    prelude = f"""cg AS MATERIALIZED (
-  SELECT LEAST(la.community, lb.community) AS a,
-         GREATEST(la.community, lb.community) AS b,
-         COUNT(*) AS w
-  FROM pairs p
-  JOIN {l1} la ON la.node = p.id_a
-  JOIN {l1} lb ON lb.node = p.id_b
-  GROUP BY 1, 2),
-wsym AS MATERIALIZED (
-  SELECT a AS node, b AS nb, w FROM cg WHERE a <> b
-  UNION ALL SELECT b, a, w FROM cg WHERE a <> b),
-wdeg AS MATERIALIZED (
-  SELECT node, SUM(w) AS k FROM (
-    SELECT a AS node, w FROM cg WHERE a <> b
-    UNION ALL SELECT b, w FROM cg WHERE a <> b
-    UNION ALL SELECT a, 2 * w FROM cg WHERE a = b) u
-  GROUP BY node),
-wmm AS (SELECT SUM(w) AS m FROM cg),
-wl0 AS MATERIALIZED (SELECT node, node AS community FROM wdeg)"""
     blocks, wlast = _louvain_move_round_blocks(
         deg="wdeg", mm="wmm", sym="wsym", l0="wl0", move_rounds=l2_rounds, tag="w"
     )
     return (
-        ctes
-        + ",\n"
-        + ",\n".join([prelude] + blocks)
+        f"\nWITH RECURSIVE {ctes},\n"
+        + ",\n".join([_coarse_graph_ctes(l1)] + blocks)
         + f""",
 lab2 AS MATERIALIZED (
   SELECT n.node, d.k AS deg, l2.community, TRUE AS labeled
@@ -5048,16 +4686,7 @@ _unigram_sql_byte_guard()
 #: exact pipeline of operators/similarity.{train_centroids,
 #: assign_cells}, reconstructed engine-independently.
 _XMODAL_CELL_SQL = f"""
-xdim AS (
-  SELECT label, UNNEST(embedding) AS v,
-         GENERATE_SUBSCRIPTS(embedding, 1) AS pos
-  FROM embeddings),
-xcm AS (
-  SELECT label AS centroid_id, pos, {davg_sql('CAST(v AS DOUBLE)')} AS m
-  FROM xdim GROUP BY label, pos),
-xcent AS (
-  SELECT centroid_id, LIST(CAST(m AS REAL) ORDER BY pos) AS centroid
-  FROM xcm GROUP BY centroid_id),
+{_label_cent_ctes("xdim", "xcm", "xcent")},
 xassign AS (
   SELECT e.vec_id, c.centroid_id,
          {_COS.format(a='e.embedding', b='c.centroid')} AS sim

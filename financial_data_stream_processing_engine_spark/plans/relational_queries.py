@@ -2419,9 +2419,9 @@ def tpch_q15_like_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "window_ewma_per_user",
-    sql="""
+#: shared by the streaming twin ``streaming_ewma``
+#: (plans/streaming_queries.py), whose streamed fold must match it.
+_EWMA_SQL = """
 WITH ordered AS (
   SELECT user_id, event_id, ts, value,
          ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -2434,8 +2434,10 @@ SELECT o.user_id, o.event_id, o.ts, o.value,
                    (acc, x) -> CAST(0.2 AS DOUBLE) * x
                              + CAST(0.8 AS DOUBLE) * acc) AS ewma
 FROM ordered o JOIN g USING (user_id)
-""",
-)
+"""
+
+
+@register("window_ewma_per_user", sql=_EWMA_SQL)
 def window_ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA over event values (α=0.2) — the grouped-map
     ``applyInPandas`` showcase: a sequential recurrence no fixed-frame
@@ -2690,10 +2692,9 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shared by the streaming IVM twin (plans/streaming_queries.py),
-#: which must converge to the identical three-stage result.
-_FUNNEL_SQL = """
-WITH v AS (
+#: CTEs ``v → c → p``: each user's earliest view, strictly-later
+#: click and strictly-later-still purchase (:func:`_funnel_anchors`)
+_FUNNEL_STAGE_CTES = """v AS (
   SELECT user_id, MIN(ts) AS t1 FROM events
   WHERE event_type = 'view' GROUP BY 1),
 c AS (
@@ -2703,7 +2704,12 @@ c AS (
 p AS (
   SELECT e.user_id, MIN(e.ts) AS t3
   FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)
+  WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)"""
+
+#: shared by the streaming IVM twin (plans/streaming_queries.py),
+#: which must converge to the identical three-stage result.
+_FUNNEL_SQL = f"""
+WITH {_FUNNEL_STAGE_CTES}
 SELECT stage_order, stage, n_users,
        CAST(n_users AS DOUBLE)
          / (SELECT COUNT(*) FROM v) AS conv_from_first
@@ -2789,17 +2795,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FUNNEL_WINDOW_DAYS = 3
 
 _FUNNEL_WINDOWED_SQL = f"""
-WITH v AS (
-  SELECT user_id, MIN(ts) AS t1 FROM events
-  WHERE event_type = 'view' GROUP BY 1),
-c AS (
-  SELECT e.user_id, MIN(e.ts) AS t2
-  FROM events e JOIN v ON e.user_id = v.user_id
-  WHERE e.event_type = 'click' AND e.ts > v.t1 GROUP BY 1),
-p AS (
-  SELECT e.user_id, MIN(e.ts) AS t3
-  FROM events e JOIN c ON e.user_id = c.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > c.t2 GROUP BY 1)
+WITH {_FUNNEL_STAGE_CTES}
 SELECT stage_order, stage, n_users,
        CAST(n_users AS DOUBLE)
          / (SELECT COUNT(*) FROM v) AS conv_from_first
@@ -2844,16 +2840,71 @@ def funnel_conversion_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _funnel_report(windowed)
 
 
-@register(
-    "merge_upsert_orders",
-    sql="""
-WITH changes AS (
+#: CTE ``changes``: the orders change set of the MERGE/CDC/IVM
+#: entries (:func:`_orders_changes`)
+_ORDERS_CHANGES_CTE = """changes AS (
   SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
          o_totalprice * 1.1 AS o_totalprice
   FROM orders WHERE o_orderkey % 10 = 3
   UNION ALL
   SELECT o_orderkey + 1000000000, o_custkey, 'N', o_totalprice
-  FROM orders WHERE o_orderkey % 97 = 0)
+  FROM orders WHERE o_orderkey % 97 = 0)"""
+
+#: CTEs ``changes → merged → new_v``: the new orders version of
+#: :func:`_orders_diff` (changes upserted, keys %101==7 deleted)
+_ORDERS_NEW_V_CTES = f"""{_ORDERS_CHANGES_CTE},
+merged AS (
+  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
+  FROM orders
+  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changes)
+  UNION ALL
+  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM changes),
+new_v AS (SELECT * FROM merged WHERE o_orderkey % 101 <> 7)"""
+
+
+def _orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+
+
+def _orders_changes(o: DataFrame) -> DataFrame:
+    """The deterministic orders change set: keys %10==3 repriced as
+    'U' updates, keys %97==0 re-keyed (+10⁹) as 'N' inserts."""
+    updates = o.where(F.col("o_orderkey") % 10 == 3).select(
+        "o_orderkey",
+        "o_custkey",
+        F.lit("U").alias("o_orderstatus"),
+        (F.col("o_totalprice") * F.lit(1.1)).alias("o_totalprice"),
+    )
+    inserts = o.where(F.col("o_orderkey") % 97 == 0).select(
+        (F.col("o_orderkey") + F.lit(1000000000)).alias("o_orderkey"),
+        "o_custkey",
+        F.lit("N").alias("o_orderstatus"),
+        "o_totalprice",
+    )
+    return updates.unionByName(inserts)
+
+
+def _orders_diff(o: DataFrame) -> DataFrame:
+    """The change feed (operators/scale.py::table_diff) from ``o`` to
+    its new version: :func:`_orders_changes` merge-upserted, then keys
+    %101==7 deleted."""
+    from financial_data_stream_processing_engine_spark.operators.scale import merge_upsert, table_diff
+
+    new_v = merge_upsert(o, _orders_changes(o), keys=["o_orderkey"]).where(
+        F.col("o_orderkey") % 101 != 7
+    )
+    return table_diff(
+        o, new_v, keys=["o_orderkey"],
+        compare_cols=["o_custkey", "o_orderstatus", "o_totalprice"],
+    )
+
+
+@register(
+    "merge_upsert_orders",
+    sql=f"""
+WITH {_ORDERS_CHANGES_CTE}
 SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
 FROM orders
 WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changes)
@@ -2868,44 +2919,16 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced, unmatched inserted, rest untouched.  The merge-on-read
     shape Delta/Iceberg MERGE executes, without the (absent) lake
     jars."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    updates = o.where(F.col("o_orderkey") % 10 == 3).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * F.lit(1.1)).alias("o_totalprice"),
-    )
-    inserts = o.where(F.col("o_orderkey") % 97 == 0).select(
-        (F.col("o_orderkey") + F.lit(1000000000)).alias("o_orderkey"),
-        "o_custkey",
-        F.lit("N").alias("o_orderstatus"),
-        "o_totalprice",
-    )
-    changes = updates.unionByName(inserts)
     from financial_data_stream_processing_engine_spark.operators.scale import merge_upsert
 
-    return merge_upsert(o, changes, keys=["o_orderkey"])
+    o = _orders(spark, sf_dir)
+    return merge_upsert(o, _orders_changes(o), keys=["o_orderkey"])
 
 
 @register(
     "cdc_orders_diff",
-    sql="""
-WITH changes AS (
-  SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
-         o_totalprice * 1.1 AS o_totalprice
-  FROM orders WHERE o_orderkey % 10 = 3
-  UNION ALL
-  SELECT o_orderkey + 1000000000, o_custkey, 'N', o_totalprice
-  FROM orders WHERE o_orderkey % 97 = 0),
-merged AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-  FROM orders
-  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changes)
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM changes),
-new_v AS (SELECT * FROM merged WHERE o_orderkey % 101 <> 7),
+    sql=f"""
+WITH {_ORDERS_NEW_V_CTES},
 old_v AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders),
 j AS (
   SELECT COALESCE(o.o_orderkey, n.o_orderkey) AS o_orderkey,
@@ -2937,31 +2960,7 @@ def cdc_orders_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     for deleted keys, nothing for untouched keys.  One full-outer join
     on the key; this is the change feed a lake format reads from its
     log, derived from snapshots instead."""
-    from financial_data_stream_processing_engine_spark.operators.scale import merge_upsert, table_diff
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    updates = o.where(F.col("o_orderkey") % 10 == 3).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * F.lit(1.1)).alias("o_totalprice"),
-    )
-    inserts = o.where(F.col("o_orderkey") % 97 == 0).select(
-        (F.col("o_orderkey") + F.lit(1000000000)).alias("o_orderkey"),
-        "o_custkey",
-        F.lit("N").alias("o_orderstatus"),
-        "o_totalprice",
-    )
-    new_v = merge_upsert(o, updates.unionByName(inserts), keys=["o_orderkey"]).where(
-        F.col("o_orderkey") % 101 != 7
-    )
-    diff = table_diff(
-        o, new_v, keys=["o_orderkey"],
-        compare_cols=["o_custkey", "o_orderstatus", "o_totalprice"],
-    )
-    return diff.select(
+    return _orders_diff(_orders(spark, sf_dir)).select(
         "o_orderkey",
         "change_type",
         F.col("old_val.o_orderstatus").alias("old_status"),
@@ -3002,21 +3001,8 @@ def layout_morton_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Shared verbatim with ``streaming_ivm_orders_agg``, whose streamed view
 #: it certifies too.
-_IVM_ORDERS_STATUS_SQL = """
-WITH changes AS (
-  SELECT o_orderkey, o_custkey, 'U' AS o_orderstatus,
-         o_totalprice * 1.1 AS o_totalprice
-  FROM orders WHERE o_orderkey % 10 = 3
-  UNION ALL
-  SELECT o_orderkey + 1000000000, o_custkey, 'N', o_totalprice
-  FROM orders WHERE o_orderkey % 97 = 0),
-merged AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-  FROM orders
-  WHERE o_orderkey NOT IN (SELECT o_orderkey FROM changes)
-  UNION ALL
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM changes),
-new_v AS (SELECT * FROM merged WHERE o_orderkey % 101 <> 7)
+_IVM_ORDERS_STATUS_SQL = f"""
+WITH {_ORDERS_NEW_V_CTES}
 SELECT o_orderstatus,
        CAST(SUM(CAST(o_totalprice AS DECIMAL(27,7))) AS DOUBLE) AS total_price,
        COUNT(*) AS n_orders
@@ -3039,32 +3025,10 @@ def ivm_orders_status_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the addition exact, hence order- and path-independent."""
     from financial_data_stream_processing_engine_spark.operators.scale import (
         cdc_apply_to_sum_count,
-        merge_upsert,
-        table_diff,
     )
 
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    updates = o.where(F.col("o_orderkey") % 10 == 3).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("U").alias("o_orderstatus"),
-        (F.col("o_totalprice") * F.lit(1.1)).alias("o_totalprice"),
-    )
-    inserts = o.where(F.col("o_orderkey") % 97 == 0).select(
-        (F.col("o_orderkey") + F.lit(1000000000)).alias("o_orderkey"),
-        "o_custkey",
-        F.lit("N").alias("o_orderstatus"),
-        "o_totalprice",
-    )
-    new_v = merge_upsert(o, updates.unionByName(inserts), keys=["o_orderkey"]).where(
-        F.col("o_orderkey") % 101 != 7
-    )
-    diff = table_diff(
-        o, new_v, keys=["o_orderkey"],
-        compare_cols=["o_custkey", "o_orderstatus", "o_totalprice"],
-    )
+    o = _orders(spark, sf_dir)
+    diff = _orders_diff(o)
     old_agg = o.groupBy("o_orderstatus").agg(
         F.sum(F.col("o_totalprice").cast("decimal(27,7)")).alias("_dec_sum"),
         F.count(F.lit(1)).alias("n"),

@@ -406,7 +406,7 @@ def test_louvain_oracle_shared_ctes_byte_identical():
     level2 = _louvain_level2_sql(3, 8, 8, 8)
     l2mod = _louvain_level2_modularity_sql(3, 8, 8, 8)
     for sql in (refine, coarsen, level2, l2mod):
-        assert sql.startswith(ctes), "level-1 chain diverged"
+        assert sql.startswith("\nWITH RECURSIVE " + ctes), "level-1 chain diverged"
     # level-2 and its modularity certificate share the ENTIRE weighted
     # chain: their common prefix must reach past the final weighted
     # round's label CTE
@@ -427,6 +427,39 @@ def test_catalog_priority_names_must_exist():
     finally:
         catalog._PRIORITY.remove(bogus)
     catalog.load_all()  # restored list loads clean
+
+
+def test_catalog_order_is_independent_of_import_order():
+    """``list(QUERIES)`` after ``load_all`` is the same whichever plan
+    module a process imports first: the entries check_window.txt does
+    not name follow ``load_all``'s module order, not the order in
+    which the modules happened to register."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = (
+        "import importlib, json, sys\n"
+        "from financial_data_stream_processing_engine_spark.plans import catalog\n"
+        "if sys.argv[1]:\n"
+        "    importlib.import_module(f'{catalog.__package__}.{sys.argv[1]}')\n"
+        "catalog.load_all()\n"
+        "print(json.dumps(list(catalog.QUERIES)))\n"
+    )
+
+    def order(first: str) -> list[str]:
+        proc = subprocess.run(
+            [sys.executable, "-c", script, first],
+            cwd=Path(__file__).resolve().parents[1],
+            capture_output=True, text=True, check=True,
+        )
+        return json.loads(proc.stdout.splitlines()[-1])
+
+    fresh = order("")
+    assert len(fresh) == len(set(fresh)) > 0
+    for mod in catalog._PLAN_MODULES:
+        assert order(mod) == fresh, f"importing {mod} first reorders the catalog"
 
 
 def test_truss_modularity_plan_no_cartesian_on_data(spark, sf_dir, queries):
