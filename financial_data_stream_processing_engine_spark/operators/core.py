@@ -197,7 +197,8 @@ def ewma(
     carried mean at NaN positions instead of NULL), so the fold stays
     an explicit loop, run by :func:`_keyed_fold` once per Arrow batch
     of whole key groups.  Rows whose key fails :func:`_key_participates`
-    (NULL or ``''``) take no state and emit NULL.
+    (NULL or ``''``) take no state and emit NULL.  A float NaN key is
+    one key, as in Spark's and DuckDB's grouping.
     """
     from pyspark.sql.types import DoubleType, StructField
 
@@ -215,7 +216,7 @@ def ewma(
         prev_key = object()
         out = []
         for kv, v in zip(pdf[key], pdf[value]):
-            if kv != prev_key:
+            if kv != prev_key and not (kv != kv and prev_key != prev_key):  # NaN == NaN
                 state, prev_key = None, kv
             if v is None or pd.isna(v):
                 out.append(None)

@@ -522,7 +522,8 @@ def macd(
     bitwise-equal to the explicit Python loop).  NULL prices must be
     filtered upstream (the catalog entry and oracle both drop them).
     Rows whose key is NULL or ``''`` take no state and come out with
-    NULL outputs (``core._key_participates``).
+    NULL outputs (``core._key_participates``); a float NaN key is one
+    key (``dropna=False``), as in Spark's and DuckDB's grouping.
 
     Scale: one shuffle; per-batch memory is the Arrow batch plus at
     most one held group, same bound as ewma.  At 100 TB, keys
@@ -546,7 +547,11 @@ def macd(
         pdf["__p"] = pdf[price].astype("float64")
 
         def gewm(col, span):
-            r = pdf.groupby(key, sort=False)[col].ewm(span=span, adjust=False).mean()
+            r = (
+                pdf.groupby(key, sort=False, dropna=False)[col]
+                .ewm(span=span, adjust=False)
+                .mean()
+            )
             return r.reset_index(level=0, drop=True).sort_index()
 
         m = gewm("__p", fast) - gewm("__p", slow)

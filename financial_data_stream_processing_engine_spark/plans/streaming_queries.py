@@ -33,13 +33,37 @@ from financial_data_stream_processing_engine_spark.plans.relational_queries impo
     _orders,
     _orders_diff,
 )
+from financial_data_stream_processing_engine_spark.schema import TICK_SCHEMA
 from financial_data_stream_processing_engine_spark.streaming import stateful, windows
 from financial_data_stream_processing_engine_spark.streaming.sources import (
     _ordered_sliced_feed,
     _sliced_feed,
 )
 
-TICK_SCHEMA = "id string, symbol string, price double, volume long, ts timestamp, source string"
+
+def _events_as_ticks(ev: DataFrame) -> DataFrame:
+    """The driver's events as ticks: ``event_id`` is the tick id,
+    ``user_id`` the symbol and ``value`` the price."""
+    return ev.select(
+        F.col("event_id").cast("string").alias("id"),
+        F.col("user_id").cast("string").alias("symbol"),
+        F.col("value").alias("price"),
+        F.lit(0).cast("long").alias("volume"),
+        F.col("ts"),
+        F.lit("EventsReplay").alias("source"),
+    )
+
+
+def _ticks_as_events(ticks: DataFrame, *outputs: str) -> DataFrame:
+    """Streamed ticks back in the events' names — ``event_id, user_id,
+    ts, value`` — followed by the operator's ``outputs``."""
+    return ticks.select(
+        F.col("id").cast("bigint").alias("event_id"),
+        F.col("symbol").cast("bigint").alias("user_id"),
+        F.col("ts"),
+        F.col("price").alias("value"),
+        *outputs,
+    )
 
 
 #: (applicationId, sf_dir) → replay directory; the tick parquet is
@@ -58,17 +82,10 @@ def _event_tick_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _TICK_DIRS:
-        ev = load_table(spark, sf_dir, "events")
-        ticks = ev.select(
-            F.col("event_id").cast("string").alias("id"),
-            F.col("user_id").cast("string").alias("symbol"),
-            F.col("value").alias("price"),
-            F.lit(0).cast("long").alias("volume"),
-            F.col("ts"),
-            F.lit("EventsReplay").alias("source"),
-        )
         d = scratch_dir(prefix="stream_ticks_")
-        ticks.write.mode("overwrite").parquet(d)
+        _events_as_ticks(load_table(spark, sf_dir, "events")).write.mode(
+            "overwrite"
+        ).parquet(d)
         _TICK_DIRS[key] = d
     return spark.readStream.schema(TICK_SCHEMA).parquet(_TICK_DIRS[key])
 
@@ -130,14 +147,7 @@ def streaming_ma_rowcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stream = _event_tick_stream(spark, sf_dir)
     out = stateful.streaming_moving_average(stream, n=5)
-    result = _run(out, spark)
-    return result.select(
-        F.col("id").cast("bigint").alias("event_id"),
-        F.col("symbol").cast("bigint").alias("user_id"),
-        F.col("ts"),
-        F.col("price").alias("value"),
-        F.col("moving_average"),
-    )
+    return _ticks_as_events(_run(out, spark), "moving_average")
 
 
 _STREAM_TUMBLE_SQL = """
@@ -326,13 +336,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = _event_tick_stream(spark, sf_dir)
     doubled = left.unionByName(right).withWatermark("ts", "1 hour")
     deduped = doubled.dropDuplicatesWithinWatermark(["id"])
-    result = _run(deduped, spark)
-    return result.select(
-        F.col("id").cast("bigint").alias("event_id"),
-        F.col("symbol").cast("bigint").alias("user_id"),
-        "ts",
-        F.col("price").alias("value"),
-    )
+    return _ticks_as_events(_run(deduped, spark))
 
 
 @register("streaming_ewma", sql=_EWMA_SQL)
@@ -343,14 +347,7 @@ def streaming_ewma_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/batch/oracle three-way parity bitwise."""
     stream = _event_tick_stream(spark, sf_dir)
     out = stateful.streaming_ewma(stream, alpha=0.2)
-    result = _run(out, spark)
-    return result.select(
-        F.col("id").cast("bigint").alias("event_id"),
-        F.col("symbol").cast("bigint").alias("user_id"),
-        F.col("ts"),
-        F.col("price").alias("value"),
-        F.col("ewma"),
-    )
+    return _ticks_as_events(_run(out, spark), "ewma")
 
 
 _STREAM_OHLC_SQL = """
@@ -529,16 +526,7 @@ def streaming_zscore_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fin_zscore_anomalies shape) == DuckDB."""
     stream = _event_tick_stream(spark, sf_dir).where(F.col("price").isNotNull())
     out = stateful.streaming_zscore_alerts(stream, n=20, z_threshold=3.0)
-    result = _run(out, spark)
-    return result.select(
-        F.col("id").cast("bigint").alias("event_id"),
-        F.col("symbol").cast("bigint").alias("user_id"),
-        F.col("ts"),
-        F.col("price").alias("value"),
-        F.col("baseline_mean"),
-        F.col("baseline_sd"),
-        F.col("zscore"),
-    )
+    return _ticks_as_events(_run(out, spark), "baseline_mean", "baseline_sd", "zscore")
 
 
 @register("streaming_heavy_hitters", sql=_CMS_HH_SQL)
@@ -674,16 +662,8 @@ def streaming_session_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFra
     a hash match proves every session was emitted exactly once, by
     exactly one of the two paths, with exact boundaries."""
     ev = load_table(spark, sf_dir, "events")
-    ticks = ev.select(
-        F.col("event_id").cast("string").alias("id"),
-        F.col("user_id").cast("string").alias("symbol"),
-        F.col("value").alias("price"),
-        F.lit(0).cast("long").alias("volume"),
-        F.col("ts"),
-        F.lit("EventsReplay").alias("source"),
-    )
     feed = scratch_dir(prefix="session_feed_")
-    ticks.write.mode("append").parquet(feed)
+    _events_as_ticks(ev).write.mode("append").parquet(feed)
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
 
     stream = (

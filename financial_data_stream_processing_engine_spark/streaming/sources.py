@@ -3,13 +3,20 @@
 The reference's three pollers (financial_engine.py:124-275) map to:
 
 * ``rate_ticks``      — the mock-WebSocket feed (S2): Spark's rate
-                        source drives synthetic ticks at a configurable
-                        rows/sec; the same normalization projection as
-                        batch (N1) shapes them into the tick schema.
+                        source drives synthetic raw messages
+                        ``{instrument, value, vol, ts}`` at a
+                        configurable rows/sec, and batch's
+                        ``normalize_websocket`` (N1) shapes them into
+                        the tick schema.
 * ``csv_replay_ticks``— the cyclic CSV mock (S3): rate source joined to
-                        the static CSV by ``value % num_rows`` —
-                        reproduces the reference's modulo replay
-                        (financial_engine.py:259) declaratively.
+                        the static CSV rows by ``value % num_rows`` in
+                        file order — the reference's modulo replay
+                        (financial_engine.py:246, :259) — and
+                        normalized by batch's ``normalize_csv``.
+
+The tick shape has one owner per layer: ``schema.TICK_SCHEMA`` declares
+it, each source's normalizer in ``sources/batch.py`` produces it, and
+the streaming operators carry it through.
 * ``_sliced_feed``    — the catalog's file-replay feed: a table
                         shipped as three ``id % 3`` files, one
                         micro-batch each, into a ``foreachBatch`` body;
@@ -27,10 +34,15 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from financial_data_stream_processing_engine_spark.io_utils import scratch_dir
-from financial_data_stream_processing_engine_spark.sources.batch import MOCK_CSV_ROWS
+from financial_data_stream_processing_engine_spark.sources.batch import (
+    MOCK_CSV_COLUMNS,
+    MOCK_CSV_ROWS,
+    normalize_csv,
+    normalize_websocket,
+)
 
 
 def rate_ticks(
@@ -41,46 +53,46 @@ def rate_ticks(
     """Synthetic tick stream in the unified schema (mock WS feed).
 
     Deterministic per (value) tick content — price/volume derive from
-    hash(value) — so tests can assert exact results.
+    hash(value) — so tests can assert exact results.  The rate counter
+    ``value`` becomes the tick id ``WebSocketMock_<value>``; it is kept
+    as ``__n``, because the message's price field is also ``value``.
     """
     rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    sym = F.element_at(
-        F.array(*[F.lit(s) for s in symbols]),
-        (F.col("value") % len(symbols) + 1).cast("int"),
-    )
-    price = (F.pmod(F.xxhash64("value"), 10000) / 100.0 + 1.0).cast("double")
-    vol = F.pmod(F.xxhash64("value", F.lit(1)), 1000).cast("long")
-    return rate.select(
-        F.concat(F.lit("WebSocketMock_"), F.col("value").cast("string")).alias("id"),
-        sym.alias("symbol"),
-        price.alias("price"),
-        vol.alias("volume"),
+    n = F.col("value")
+    raw = rate.select(
+        n.alias("__n"),
+        F.element_at(
+            F.array(*[F.lit(s) for s in symbols]), (n % len(symbols) + 1).cast("int")
+        ).alias("instrument"),
+        (F.pmod(F.xxhash64(n), 10000) / 100.0 + 1.0).alias("value"),
+        F.pmod(F.xxhash64(n, F.lit(1)), 1000).alias("vol"),
         F.col("timestamp").alias("ts"),
-        F.lit("WebSocketMock").alias("source"),
     )
+    tick_id = F.concat(F.lit("WebSocketMock_"), F.col("__n").cast("string"))
+    return normalize_websocket(raw, id_expr=tick_id)
 
 
 def csv_replay_ticks(spark: SparkSession, rows_per_second: int = 1) -> DataFrame:
     """The reference's cyclic CSV replay as a declarative stream.
 
-    rate.value % num_rows picks the CSV row (financial_engine.py:259);
-    each emission gets a fresh arrival timestamp (:258).  The static
-    side is broadcast — no shuffle enters the stream.
+    rate.value % num_rows picks the CSV row in file order, the order
+    the reference cycles its parsed list in (financial_engine.py:246,
+    :259); each emission gets a fresh arrival timestamp (:258) and the
+    id ``CSVMock_<value>``.  The rows are numbered here, so starting
+    the stream runs no Spark job.  The static side is broadcast — no
+    shuffle enters the stream.
     """
     rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    csv = spark.createDataFrame(MOCK_CSV_ROWS, "symbol string, price string, volume string")
-    csv = csv.withColumn("__row", F.row_number().over(Window.orderBy("symbol")) - 1)
-    n = csv.count()
-    joined = rate.withColumn("__row", (F.col("value") % n).cast("int")).join(
+    csv = spark.createDataFrame(
+        [(i, *row) for i, row in enumerate(MOCK_CSV_ROWS)], ["__row", *MOCK_CSV_COLUMNS]
+    )
+    joined = rate.withColumn("__row", F.col("value") % len(MOCK_CSV_ROWS)).join(
         F.broadcast(csv), "__row"
     )
-    return joined.select(
-        F.concat(F.lit("CSVMock_"), F.col("value").cast("string")).alias("id"),
-        F.col("symbol"),
-        F.col("price").try_cast("double").alias("price"),
-        F.col("volume").try_cast("long").alias("volume"),
-        F.col("timestamp").alias("ts"),
-        F.lit("CSVMock").alias("source"),
+    return normalize_csv(
+        joined,
+        id_expr=F.concat(F.lit("CSVMock_"), F.col("value").cast("string")),
+        ts_expr=F.col("timestamp"),
     )
 
 

@@ -8,8 +8,8 @@ keyed state: ``applyInPandasWithState`` with small per-key state.
 
 Five TTL-keyed operators (moving average, EWMA, MACD, z-score alerts,
 pattern distance) share one shell, :func:`_keyed_state`; each supplies
-only its schemas, initial state and a per-group ``step``.  Three
-decisions live in one place each:
+only the columns it adds, its state schema, initial state and a
+per-group ``step``.  Four decisions live in one place each:
 
 * arrival order — :func:`_sorted_batch`, (ts, id) within each
   micro-batch, one stable argsort when ``ts`` has no NULLs or ties;
@@ -18,6 +18,9 @@ decisions live in one place each:
 * key participation — ``operators.core._key_participates``: NULL and
   ``''`` symbols take no state and come out with NULL outputs (or are
   dropped by the operators that emit only scored rows);
+* output shape — the shell derives it: the input's columns, then the
+  operator's added columns, every field nullable (the batch
+  ``operators.core._keyed_fold`` builds its schema the same way);
 * state lifetime — a TTL kept in the state: the shell stamps each
   key's state with its batch time (``touched_ms``) and hands ``step``
   the initial state when the key returns after more than ``ttl_ms``
@@ -40,16 +43,14 @@ from typing import Any
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from financial_data_stream_processing_engine_spark.operators.core import _key_participates
 
-OUTPUT_SCHEMA = (
-    "id string, symbol string, price double, volume bigint, ts timestamp, "
-    "source string, moving_average double"
-)
-STATE_SCHEMA = "prices array<double>"
+#: the state of the ring-buffer operators (moving average, z-score,
+#: pattern distance): the key's last prices, oldest first
+PRICES_STATE_SCHEMA = "prices array<double>"
 
 
 def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
@@ -85,11 +86,11 @@ def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
 def _keyed_state(
     ticks: DataFrame,
     step: Callable[[tuple, pd.DataFrame], tuple],
-    output_schema: str,
+    added: tuple[str, ...],
     state_schema: str,
     init: tuple,
     ttl_ms: int,
-    null_cols: tuple[str, ...] | None,
+    keep_unkeyed: bool = True,
 ) -> DataFrame:
     """The shell of every TTL-keyed streaming operator: one
     ``applyInPandasWithState`` over ``symbol``, in ONE scan of the
@@ -99,15 +100,24 @@ def _keyed_state(
     or idle past ``ttl_ms``), sorts the rows by the arrival-order rule,
     calls ``step(state, pdf) -> (state, out | None)``, emits ``out``
     and writes the state back with this batch's time appended
-    (``touched_ms``, which ``step`` never sees).  A group whose key
-    fails ``_key_participates`` (NULL or ``''``) never touches state:
-    its rows come out with the ``null_cols`` outputs NULL, or are
-    dropped when ``null_cols`` is None.  ``ts`` crosses the seam as
+    (``touched_ms``, which ``step`` never sees).  ``out`` is rows of
+    ``pdf`` with the ``added`` double columns appended, so the output
+    is the input's columns then ``added``, every field nullable.  A
+    group whose key fails ``_key_participates`` (NULL or ``''``) never
+    touches state: its rows come out with the ``added`` columns NULL,
+    or are dropped unless ``keep_unkeyed``.  ``ts`` crosses the seam as
     int64 epoch micros (NULL arrives as NaN), which Arrow hands to
     pandas far cheaper than a timestamp column; the operator's output
     gets its timestamp back after the seam.
     """
-    nulls = dict.fromkeys(null_cols or (), float("nan"))
+    seam_schema = T.StructType(
+        [
+            T.StructField(f.name, T.LongType() if f.name == "ts" else f.dataType)
+            for f in ticks.schema.fields
+        ]
+        + [T.StructField(c, T.DoubleType()) for c in added]
+    )
+    nulls = dict.fromkeys(added, float("nan"))
 
     def update(
         key: tuple[Any, ...],
@@ -118,7 +128,7 @@ def _keyed_state(
         if pdf is None:
             return
         if not pdf.pop("__part").iloc[0]:  # one key, so one verdict, per group
-            if null_cols is not None:
+            if keep_unkeyed:
                 yield pdf.assign(**nulls)
             return
         now = state.getCurrentProcessingTimeMs()
@@ -134,7 +144,7 @@ def _keyed_state(
         .groupBy("symbol")
         .applyInPandasWithState(
             update,
-            outputStructType=output_schema.replace("ts timestamp", "ts long"),
+            outputStructType=seam_schema,
             stateStructType=f"{state_schema}, touched_ms long",
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
@@ -180,14 +190,10 @@ def streaming_moving_average(
         return (buf[-n:].tolist(),), pdf
 
     return _keyed_state(
-        ticks, step, OUTPUT_SCHEMA, STATE_SCHEMA, ([],), ttl_ms, ("moving_average",)
+        ticks, step, ("moving_average",), PRICES_STATE_SCHEMA, ([],), ttl_ms
     )
 
 
-EWMA_OUTPUT_SCHEMA = (
-    "id string, symbol string, price double, volume bigint, ts timestamp, "
-    "source string, ewma double"
-)
 EWMA_STATE_SCHEMA = "s double"
 
 
@@ -217,15 +223,9 @@ def streaming_ewma(
             out.append(s)
         return (s,), pdf.assign(ewma=np.array(out, "float64"))
 
-    return _keyed_state(
-        ticks, step, EWMA_OUTPUT_SCHEMA, EWMA_STATE_SCHEMA, (None,), ttl_ms, ("ewma",)
-    )
+    return _keyed_state(ticks, step, ("ewma",), EWMA_STATE_SCHEMA, (None,), ttl_ms)
 
 
-MACD_OUTPUT_SCHEMA = (
-    "id string, symbol string, price double, volume bigint, ts timestamp, "
-    "source string, macd double, macd_signal double, macd_histogram double"
-)
 MACD_STATE_SCHEMA = "ef double, es double, sig double"
 
 
@@ -268,16 +268,9 @@ def streaming_macd(
         )
 
     return _keyed_state(
-        ticks, step, MACD_OUTPUT_SCHEMA, MACD_STATE_SCHEMA, (None, None, None),
-        ttl_ms, ("macd", "macd_signal", "macd_histogram"),
+        ticks, step, ("macd", "macd_signal", "macd_histogram"), MACD_STATE_SCHEMA,
+        (None, None, None), ttl_ms,
     )
-
-
-ZSCORE_OUTPUT_SCHEMA = (
-    "id string, symbol string, price double, volume bigint, ts timestamp, "
-    "source string, baseline_mean double, baseline_sd double, zscore double"
-)
-ZSCORE_STATE_SCHEMA = "prices array<double>"
 
 
 def streaming_zscore_alerts(
@@ -357,7 +350,8 @@ def streaming_zscore_alerts(
         return (prices,), out[np.array(keep)]
 
     return _keyed_state(
-        ticks, step, ZSCORE_OUTPUT_SCHEMA, ZSCORE_STATE_SCHEMA, ([],), ttl_ms, None
+        ticks, step, ("baseline_mean", "baseline_sd", "zscore"), PRICES_STATE_SCHEMA,
+        ([],), ttl_ms, keep_unkeyed=False,
     )
 
 
@@ -451,10 +445,6 @@ def streaming_sessionize_timeout(
     )
 
 
-PATTERN_OUT_SCHEMA = "id string, symbol string, ts timestamp, dist double"
-PATTERN_STATE_SCHEMA = "prices array<double>"
-
-
 def streaming_pattern_distance(
     ticks: DataFrame,
     qvals: list[float],
@@ -468,7 +458,8 @@ def streaming_pattern_distance(
     State: one double[<=length] ring buffer per key (the
     ``streaming_moving_average`` shape).  A row is emitted once the
     buffer is full and the window has nonzero variance (flat windows
-    are dropped exactly like the batch operator).
+    are dropped exactly like the batch operator), as ``id, symbol, ts,
+    dist``.
 
     Bitwise parity contract: every float op replicates the batch
     expression tree — mean and variance are LEFT-ASSOCIATED Python
@@ -492,9 +483,8 @@ def streaming_pattern_distance(
 
     def step(state, pdf):
         prices = list(state[0])
-        out_rows = []
-        cols = (pdf[c].tolist() for c in ("id", "symbol", "ts", "price"))
-        for rid, sym, ts, price in zip(*cols):
+        rows, dists = [], []
+        for row, price in enumerate(pdf["price"].tolist()):
             # batch parity: the lag-chain counts every ROW as a
             # window slot, and any window containing a NULL price
             # yields NULL stats (dropped) — so NULL prices consume
@@ -520,9 +510,10 @@ def streaming_pattern_distance(
             for i in range(1, length):
                 di = (prices[i] - m) / s - zq[i]
                 d_acc = d_acc + di * di
-            out_rows.append((rid, sym, ts, d_acc))
-        return (prices,), pd.DataFrame(out_rows, columns=["id", "symbol", "ts", "dist"])
+            rows.append(row)
+            dists.append(d_acc)
+        return (prices,), pdf.iloc[rows].assign(dist=np.array(dists, "float64"))
 
     return _keyed_state(
-        ticks, step, PATTERN_OUT_SCHEMA, PATTERN_STATE_SCHEMA, ([],), ttl_ms, None
-    )
+        ticks, step, ("dist",), PRICES_STATE_SCHEMA, ([],), ttl_ms, keep_unkeyed=False
+    ).select("id", "symbol", "ts", "dist")

@@ -590,6 +590,53 @@ def test_ewma_batched_seam_straddles_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
 
+def test_keyed_folds_keep_a_nan_key_as_one_key(spark):
+    """A float NaN key is one key, as in Spark's groupBy and DuckDB:
+    core.ewma and finance.macd carry its state from row to row, also
+    when its group straddles 2-row Arrow batches, instead of restarting
+    on every row (ewma) or emitting NULL (macd)."""
+    import pandas as pd
+
+    from financial_data_stream_processing_engine_spark.operators.core import ewma
+
+    keys = [1.0, 1.0, math.nan, math.nan, math.nan, math.nan, math.nan, 2.0]
+    prices = [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0]
+    rows = [
+        (i, k, BASE + dt.timedelta(minutes=i), p, 0)
+        for i, (k, p) in enumerate(zip(keys, prices))
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id long, symbol double, ts timestamp, price double, volume long"
+    )
+    groups = {"1": [0, 1], "nan": [2, 3, 4, 5, 6], "2": [7]}
+    want_ewma, want_macd = {}, {}
+    for ids in groups.values():
+        state = None
+        for i in ids:
+            state = prices[i] if state is None else 0.2 * prices[i] + 0.8 * state
+            want_ewma[i] = state
+        s = pd.Series([prices[i] for i in ids])
+        m = s.ewm(span=12, adjust=False).mean() - s.ewm(span=26, adjust=False).mean()
+        sig = m.ewm(span=9, adjust=False).mean()
+        want_macd.update({i: (m[j], sig[j], m[j] - sig[j]) for j, i in enumerate(ids)})
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        got_ewma = {
+            r["event_id"]: r["ewma"]
+            for r in ewma(df, order_by=("ts", "event_id")).collect()
+        }
+        got_macd = {
+            r["event_id"]: (r["macd"], r["macd_signal"], r["macd_histogram"])
+            for r in finance.macd(df).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    assert got_ewma == want_ewma
+    assert got_macd == want_macd
+
+
 # --- the batch keyed fold's carry (pure pandas, no Spark) --------------
 
 

@@ -11,9 +11,10 @@ import datetime as dt
 import time
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from financial_data_stream_processing_engine_spark.operators.core import alerts, moving_average
+from financial_data_stream_processing_engine_spark.sources.batch import MOCK_CSV_ROWS
 from financial_data_stream_processing_engine_spark.streaming import sources, stateful, windows
 
 TICK_SCHEMA = "id string, symbol string, price double, volume long, ts timestamp, source string"
@@ -292,9 +293,74 @@ def test_csv_replay_cycles_reference_rows(spark):
     q.stop()
     rows = spark.table("csv_ticks_mem").collect()
     assert len(rows) >= 6
-    # the reference's 3 embedded CSV rows, cycled (financial_engine.py:246,:259)
+    # the reference's 3 embedded CSV rows, cycled in file order
+    # (financial_engine.py:246, :259)
     assert {r.symbol for r in rows} == {"MSFT_mock", "TSLA_mock", "NVDA_mock"}
     assert {r.price for r in rows} == {205.50, 880.10, 550.25}
+    for r in rows:
+        assert r.source == "CSVMock"
+        symbol, price, volume = MOCK_CSV_ROWS[int(r.id.removeprefix("CSVMock_")) % 3]
+        assert (r.symbol, r.price, r.volume) == (symbol, float(price), int(volume))
+
+
+_TICK_DDL = (
+    "id string, symbol string, price double, volume bigint, ts timestamp, source string"
+)
+
+
+def test_live_sources_emit_the_tick_columns(spark):
+    """The live streams come out in the tick schema's names and types."""
+    want = [(f.name, f.dataType) for f in T.StructType.fromDDL(_TICK_DDL)]
+    for ticks in (sources.rate_ticks(spark), sources.csv_replay_ticks(spark)):
+        assert [(f.name, f.dataType) for f in ticks.schema] == want
+
+
+def test_keyed_state_contract_is_pinned(spark, monkeypatch):
+    """The five keyed-state operators' output schemas (every field
+    nullable) and state schemas, over normalized, cleaned ticks.  The
+    state schemas are the checkpoint contract: a checkpoint written
+    under one state schema cannot be resumed under another."""
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from financial_data_stream_processing_engine_spark.operators.core import clean
+    from financial_data_stream_processing_engine_spark.sources.batch import (
+        normalize_alpha_vantage,
+    )
+
+    states = []
+    apply = PandasGroupedOpsMixin.applyInPandasWithState
+
+    def record(self, func, **kwargs):
+        states.append(kwargs["stateStructType"])
+        return apply(self, func, **kwargs)
+
+    monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandasWithState", record)
+    raw = spark.createDataFrame(
+        [("IBM", "10.5", "100")], "`01. symbol` string, `05. price` string, `06. volume` string"
+    )
+    ticks = clean(normalize_alpha_vantage(raw))
+    outputs = {
+        "moving_average double": stateful.streaming_moving_average(ticks),
+        "ewma double": stateful.streaming_ewma(ticks),
+        "macd double, macd_signal double, macd_histogram double":
+            stateful.streaming_macd(ticks),
+        "baseline_mean double, baseline_sd double, zscore double":
+            stateful.streaming_zscore_alerts(ticks),
+    }
+    for added, df in outputs.items():
+        assert df.schema == T.StructType.fromDDL(f"{_TICK_DDL}, {added}")
+    pattern = stateful.streaming_pattern_distance(ticks, [1.0, 2.0, 3.0, 1.0], length=4)
+    assert pattern.schema == T.StructType.fromDDL(
+        "id string, symbol string, ts timestamp, dist double"
+    )
+    assert all(f.nullable for df in [*outputs.values(), pattern] for f in df.schema)
+    assert states == [
+        "prices array<double>, touched_ms long",
+        "s double, touched_ms long",
+        "ef double, es double, sig double, touched_ms long",
+        "prices array<double>, touched_ms long",
+        "prices array<double>, touched_ms long",
+    ]
 
 
 def test_stateful_ma_ttl_resets_window_after_idle(spark, tmp_path):
