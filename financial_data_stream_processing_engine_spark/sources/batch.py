@@ -13,7 +13,11 @@ ingestion time — reference :187, :191) are injectable for tests
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import LongType, TimestampType
 
 #: Raw field names per source, from the reference.
 #: AlphaVantage GLOBAL_QUOTE payload keys (financial_engine.py:186-190).
@@ -55,21 +59,35 @@ def _finish(
     # cast raises and the whole row vanishes, exactly the reference's
     # per-row isolation.  Callers must pass ts_expr UN-cast (a plain
     # cast nested inside the try_cast would still fail the job under
-    # ANSI before try_cast could intervene).
+    # ANSI before try_cast could intervene).  A raw column already of
+    # the target type cannot fail its cast, so it gets no had-X guard:
+    # Spark would not fold that guard's `isnull(v) OR isnotnull(v)`.
+    raw = df.select(volume.alias("volume"), ts_col.alias("ts")).schema
+    guarded = [
+        name
+        for name, target in (("volume", LongType()), ("ts", TimestampType()))
+        if raw[name].dataType != target
+    ]
+
+    def had(name: str, col: Column) -> list[Column]:
+        return [col.isNotNull().alias(f"_had_{name}")] if name in guarded else []
+
     out = df.select(
         id_col.alias("id"),
         symbol.cast("string").alias("symbol"),
         price.try_cast("double").alias("price"),
         volume.try_cast("long").alias("volume"),
-        volume.isNotNull().alias("_had_volume"),
+        *had("volume", volume),
         ts_col.try_cast("timestamp").alias("ts"),
-        ts_col.isNotNull().alias("_had_ts"),
+        *had("ts", ts_col),
         F.lit(source).alias("source"),
     )
-    return out.filter(
-        (~F.col("_had_volume") | F.col("volume").isNotNull())
-        & (~F.col("_had_ts") | F.col("ts").isNotNull())
-    ).drop("_had_volume", "_had_ts")
+    if not guarded:
+        return out
+    keep = [~F.col(f"_had_{name}") | F.col(name).isNotNull() for name in guarded]
+    return out.filter(functools.reduce(operator.and_, keep)).drop(
+        *(f"_had_{name}" for name in guarded)
+    )
 
 
 def normalize_alpha_vantage(

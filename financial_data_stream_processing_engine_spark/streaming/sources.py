@@ -13,10 +13,6 @@ The reference's three pollers (financial_engine.py:124-275) map to:
                         file order — the reference's modulo replay
                         (financial_engine.py:246, :259) — and
                         normalized by batch's ``normalize_csv``.
-
-The tick shape has one owner per layer: ``schema.TICK_SCHEMA`` declares
-it, each source's normalizer in ``sources/batch.py`` produces it, and
-the streaming operators carry it through.
 * ``_sliced_feed``    — the catalog's file-replay feed: a table
                         shipped as three ``id % 3`` files, one
                         micro-batch each, into a ``foreachBatch`` body;

@@ -226,6 +226,25 @@ def test_av_missing_quote_dropped(spark):
     assert out.count() == 1
 
 
+def test_normalizer_guards_only_casts_that_can_fail(spark):
+    # a present but malformed volume or ts string drops its row, a
+    # missing one does not (the reference adapter's per-row isolation)
+    ts = "2024-01-01 00:00:00"
+    raw = spark.createDataFrame(
+        [("A", "1.0", "10", ts), ("B", "1.0", "x", ts), ("C", "1.0", "10", "t"),
+         ("D", "1.0", None, None)],
+        "instrument string, value string, vol string, ts string",
+    )
+    assert sorted(r.symbol for r in normalize_websocket(raw).collect()) == ["A", "D"]
+    # raw columns already of the target type cannot fail their cast, so
+    # the projection carries no guard filter (the live rate feed's case)
+    typed = spark.createDataFrame(
+        [("A", 1.0, 10, dt.datetime(2024, 1, 1))],
+        "instrument string, value double, vol long, ts timestamp",
+    )
+    assert "Filter" not in normalize_websocket(typed)._jdf.queryExecution().analyzed().toString()
+
+
 def test_tickstream_fluent_chain_matches_functions(spark, tmp_path):
     import datetime as dt
 

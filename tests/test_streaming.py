@@ -303,14 +303,9 @@ def test_csv_replay_cycles_reference_rows(spark):
         assert (r.symbol, r.price, r.volume) == (symbol, float(price), int(volume))
 
 
-_TICK_DDL = (
-    "id string, symbol string, price double, volume bigint, ts timestamp, source string"
-)
-
-
 def test_live_sources_emit_the_tick_columns(spark):
     """The live streams come out in the tick schema's names and types."""
-    want = [(f.name, f.dataType) for f in T.StructType.fromDDL(_TICK_DDL)]
+    want = [(f.name, f.dataType) for f in T.StructType.fromDDL(TICK_SCHEMA)]
     for ticks in (sources.rate_ticks(spark), sources.csv_replay_ticks(spark)):
         assert [(f.name, f.dataType) for f in ticks.schema] == want
 
@@ -348,7 +343,7 @@ def test_keyed_state_contract_is_pinned(spark, monkeypatch):
             stateful.streaming_zscore_alerts(ticks),
     }
     for added, df in outputs.items():
-        assert df.schema == T.StructType.fromDDL(f"{_TICK_DDL}, {added}")
+        assert df.schema == T.StructType.fromDDL(f"{TICK_SCHEMA}, {added}")
     pattern = stateful.streaming_pattern_distance(ticks, [1.0, 2.0, 3.0, 1.0], length=4)
     assert pattern.schema == T.StructType.fromDDL(
         "id string, symbol string, ts timestamp, dist double"
