@@ -13,9 +13,6 @@ ingestion time — reference :187, :191) are injectable for tests
 
 from __future__ import annotations
 
-import functools
-import operator
-
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import LongType, TimestampType
 
@@ -63,31 +60,23 @@ def _finish(
     # the target type cannot fail its cast, so it gets no had-X guard:
     # Spark would not fold that guard's `isnull(v) OR isnotnull(v)`.
     raw = df.select(volume.alias("volume"), ts_col.alias("ts")).schema
-    guarded = [
-        name
-        for name, target in (("volume", LongType()), ("ts", TimestampType()))
-        if raw[name].dataType != target
-    ]
-
-    def had(name: str, col: Column) -> list[Column]:
-        return [col.isNotNull().alias(f"_had_{name}")] if name in guarded else []
-
+    had = {
+        name: col.isNotNull().alias(f"_had_{name}")
+        for name, col, to in (("volume", volume, LongType()), ("ts", ts_col, TimestampType()))
+        if raw[name].dataType != to
+    }
     out = df.select(
         id_col.alias("id"),
         symbol.cast("string").alias("symbol"),
         price.try_cast("double").alias("price"),
         volume.try_cast("long").alias("volume"),
-        *had("volume", volume),
         ts_col.try_cast("timestamp").alias("ts"),
-        *had("ts", ts_col),
         F.lit(source).alias("source"),
+        *had.values(),
     )
-    if not guarded:
-        return out
-    keep = [~F.col(f"_had_{name}") | F.col(name).isNotNull() for name in guarded]
-    return out.filter(functools.reduce(operator.and_, keep)).drop(
-        *(f"_had_{name}" for name in guarded)
-    )
+    for name in had:
+        out = out.filter(~F.col(f"_had_{name}") | F.col(name).isNotNull())
+    return out.drop(*(f"_had_{name}" for name in had))
 
 
 def normalize_alpha_vantage(
